@@ -11,8 +11,8 @@ Spark's Parquet reader already resolves the LIST/MAP physical encodings the
 reference's visitor has to unwrap by hand
 (``/root/reference/src/parquetvisitor.rs:35-79``), so the formatter is a pure
 ``StructType -> str`` function. Schema inference itself is footer-only (no
-data pages touched, no Spark job) in both the pyarrow fast path and Spark's
-own reader.
+data pages touched, no Spark job): one directory walk and one pyarrow
+footer read per fragment (``_scan_dataset``) serve every entry point.
 
 Formatting rules reproduced byte-for-byte from the reference (golden test:
 ``/root/reference/src/parquetutils.rs:399-414``):
@@ -41,8 +41,12 @@ domain.
 
 from __future__ import annotations
 
+import base64
+import hashlib
 import json
+import os
 import re
+import warnings
 from typing import Iterable
 
 from pyspark.sql import SparkSession
@@ -339,30 +343,44 @@ def _widen_partition_types(t1: T.DataType, t2: T.DataType) -> T.DataType:
     return T.StringType()
 
 
-def _hive_partition_scan(path: str):
-    """ONE stdlib ``os.walk`` over *path* collecting everything every hive
-    consumer here needs — partition keys in nesting order, the distinct
-    unescaped values per key, keys with ``__HIVE_DEFAULT_PARTITION__``
-    (NULL) directories, and keys absent from some part-file branches
-    (ragged layouts). Returns None for plain files and flat directories.
+def _hidden(name: str) -> bool:
+    """Spark's hidden-path rule (InMemoryFileIndex.shouldFilterOutPathName):
+    a path component starting with ``.``, or starting with ``_`` and holding
+    no ``=``, is not part of the dataset — ``_temporary/`` task-attempt
+    output, ``_SUCCESS`` markers, ``.crc`` sidecars. ``_key=value``
+    partition directories stay visible."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
-    Centralising the walk fixes the triple-discovery cost the r13 judge
-    flagged: ``schema_to_clickhouse`` threads this single scan through
-    infer/unify/DDL/warnings instead of re-listing the tree (expensive on
-    object stores) up to three times per call. No pyarrow involved — the
-    no-pyarrow fallback path keeps working on hive layouts."""
-    import os
 
-    if not os.path.isdir(path):
-        return None
+def _scan_dataset(
+    path: str, cache_path: str | None = None, spark: SparkSession | None = None
+) -> _DatasetScan:
+    """The ONE listing behind every DDL entry point: a single ``os.walk``
+    (sorted directories, Spark's hidden-path rule) collecting the
+    ``.parquet`` fragments and the hive layout — partition keys in nesting
+    order, the distinct unescaped values per key, keys with
+    ``__HIVE_DEFAULT_PARTITION__`` (NULL) directories, and keys absent from
+    some fragment branches (ragged layouts). Fragments are sorted by their
+    full relative path, the order pyarrow's dataset discovery uses, so every
+    product of the scan agrees on which fragment comes first. A plain file
+    is its own single fragment with no partition keys.
+
+    No footer is read here: the returned scan reads each footer on demand,
+    at most once. ``cache_path`` (an incremental scan cache, see
+    incremental_drift_scan) and ``spark`` (the footer fan-out, see
+    fragment_schemas) only matter once every footer is needed."""
     from urllib.parse import unquote
 
+    if not os.path.isdir(path):
+        base, name = os.path.split(path)
+        return _DatasetScan(path, base, [name], ([], {}, [], []), cache_path, spark)
     keys: list[str] = []
     values: dict[str, set[str]] = {}
     null_keys: set[str] = set()
     leaf_keysets: list[frozenset] = []
+    rels: list[str] = []
     for root, dirs, files in os.walk(path):
-        dirs.sort()  # deterministic key order across filesystems
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
         rel = os.path.relpath(root, path)
         segs = [] if rel == "." else rel.split(os.sep)
         kv = [s.split("=", 1) for s in segs if "=" in s]
@@ -376,32 +394,318 @@ def _hive_partition_scan(path: str):
                 # hive %-escapes special chars in values (Spark's
                 # escapePathName); ':' in timestamps arrives as %3A
                 values[k].add(unquote(v))
-        if any(f.endswith(".parquet") for f in files):
+        names = [f for f in files if f.endswith(".parquet") and not _hidden(f)]
+        if names:
             leaf_keysets.append(frozenset(k for k, _ in kv))
-    if not values:
-        return None
-    union: set[str] = set().union(*leaf_keysets) if leaf_keysets else set(keys)
-    inter: set[str] = set(keys)
-    for s in leaf_keysets:
-        inter &= s
-    ragged = sorted(k for k in keys if k in union - inter) if leaf_keysets else []
-    return keys, values, sorted(null_keys), ragged
+            rels += [f if rel == "." else os.path.join(rel, f) for f in names]
+    inter = set(keys).intersection(*leaf_keysets)
+    ragged = sorted(k for k in set().union(*leaf_keysets) if k not in inter)
+    hive = (keys, values, sorted(null_keys), ragged)
+    return _DatasetScan(path, path, sorted(rels), hive, cache_path, spark)
 
 
-def _typed_partition_fields(scan) -> list[T.StructField]:
-    """StructFields (nesting order, nullable like Spark reports partition
-    columns) for EVERY partition key in a scan, typed per value-shape."""
-    keys, values, _null_keys, _ragged = scan
-    fields = []
-    for k in keys:
-        dtype: T.DataType = T.StringType()
-        first = True
-        for v in values[k]:
-            vt = _partition_value_type(v)
-            dtype = vt if first else _widen_partition_types(dtype, vt)
-            first = False
-        fields.append(T.StructField(k, dtype, True))
-    return fields
+_SCAN_CACHE_VERSION = 2
+
+
+class _DatasetScan:
+    """One listing of a dataset (see _scan_dataset) plus its footers, each
+    read at most once. A footer is kept as a fingerprint per fragment and
+    ONE exemplar per distinct fingerprint (see _read_footer), so every
+    product — the strict physical-type check, the drift report, the unified
+    schema and the first-fragment schema — costs one conversion per
+    distinct footer schema, not one per file."""
+
+    def __init__(self, path, base, rels, hive, cache_path, spark):
+        self.path, self.base, self.rels = path, base, rels
+        self.keys, self.values, self.null_keys, self.ragged_keys = hive
+        self.cache_path, self.spark = cache_path, spark
+        self.fp_by_rel: dict[str, str] = {}
+        self.exemplars: dict[str, tuple[bytes, list[str]]] = {}
+        self.spark_schemas: dict[str, T.StructType] = {}
+        # incremental-scan telemetry, filled by read_all
+        self.rescanned: list[str] = []
+        self.reused: list[str] = []
+        self.footers_read = 0
+        self.reset_from_root: str | None = None
+
+    def file(self, rel: str) -> str:
+        # join with the CALLER's path, not an absolutized root, so cached
+        # and uncached runs report identical paths on relative inputs
+        return os.path.join(self.base, rel)
+
+    def read_all(self, distributed_threshold: int = 8192) -> None:
+        """Fingerprint every fragment. Fragments are grouped by partition
+        directory; with a cache file, a partition whose listing fingerprint
+        (md5 over names, sizes and mtime_ns) is unchanged and whose
+        exemplars are cached is served from the cache, and only the other
+        partitions' footers are read. At or above ``distributed_threshold``
+        footers to read (and given a SparkSession) the reads fan out over
+        executors. The cache file is then rewritten atomically."""
+        root = os.path.abspath(self.path)
+        cache = self._load_cache(root) if self.cache_path is not None else {}
+        cached_parts = cache.get("partitions", {})
+        cached_ex = cache.get("exemplars", {})
+        by_part: dict[str, list[str]] = {}
+        for rel in self.rels:
+            by_part.setdefault(os.path.dirname(rel) or ".", []).append(rel)
+        parts: dict[str, dict] = {}
+        to_read: list[str] = []
+        for part, rels in sorted(by_part.items()):
+            lfp = None
+            if self.cache_path is not None:
+                stats = [os.stat(self.file(rel)) for rel in rels]
+                lfp = hashlib.md5(
+                    "\n".join(
+                        f"{rel}\x00{st.st_size}\x00{st.st_mtime_ns}"
+                        for rel, st in zip(rels, stats)
+                    ).encode("utf-8")
+                ).hexdigest()
+            entry = cached_parts.get(part)
+            if (
+                entry is not None
+                and entry.get("listing_fp") == lfp
+                and all(fp in cached_ex for fp in entry["files"].values())
+            ):
+                self.reused.append(part)
+            else:
+                self.rescanned.append(part)
+                to_read += rels
+                entry = {"listing_fp": lfp, "files": {}}
+            parts[part] = entry
+
+        files = [self.file(rel) for rel in to_read]
+        if self.spark is not None and len(files) >= distributed_threshold:
+            sc = self.spark.sparkContext
+            n_slices = max(1, min(len(files) // 8, sc.defaultParallelism * 4))
+            batches = sc.parallelize(files, n_slices).mapPartitions(_read_footers).collect()
+        else:
+            batches = _read_footers(files)
+        fp_by_file: dict[str, str] = {}
+        for fps, exemplars in batches:
+            fp_by_file.update(fps)
+            self.exemplars.update(exemplars)
+        for rel, f in zip(to_read, files):
+            parts[os.path.dirname(rel) or "."]["files"][rel] = fp_by_file[f]
+        for entry in parts.values():
+            self.fp_by_rel.update(entry["files"])
+        for fp in set(self.fp_by_rel.values()) - self.exemplars.keys():
+            self.exemplars[fp] = (
+                base64.b64decode(cached_ex[fp]["ipc"]),
+                cached_ex[fp]["violations"],
+            )
+        self.footers_read = len(files)
+        if self.cache_path is not None:
+            tmp = f"{self.cache_path}.tmp"
+            with open(tmp, "w", encoding="utf-8") as fh:
+                json.dump(
+                    {
+                        "version": _SCAN_CACHE_VERSION,
+                        "root": root,
+                        "partitions": parts,
+                        "exemplars": {
+                            fp: {"ipc": base64.b64encode(ipc).decode("ascii"), "violations": bad}
+                            for fp, (ipc, bad) in self.exemplars.items()
+                        },
+                    },
+                    fh,
+                )
+            os.replace(tmp, self.cache_path)
+
+    def _load_cache(self, root: str) -> dict:
+        """The cache file's content, or {} when it is missing, corrupt,
+        written by another cache version, or written for another dataset
+        root. Partition entries are keyed by root-relative path plus
+        (size, mtime_ns), so a cache file pointed at another dataset with
+        coinciding paths and stats would silently serve the wrong
+        exemplars. A root mismatch is recorded in ``reset_from_root`` and
+        warned about: a cache file alternated between two datasets resets
+        on EVERY run, which is correct but pure thrash."""
+        try:
+            with open(self.cache_path, encoding="utf-8") as fh:
+                cache = json.load(fh)
+        except (OSError, ValueError):
+            return {}
+        if not isinstance(cache, dict) or cache.get("version") != _SCAN_CACHE_VERSION:
+            return {}
+        if cache.get("root") != root:
+            self.reset_from_root = cache.get("root")
+            warnings.warn(
+                f"scan cache {self.cache_path!r} was written for a different "
+                "dataset root and was discarded (full footer rescan); "
+                "alternating two datasets through one cache file resets it "
+                "on every run — use one cache file per dataset",
+                stacklevel=4,
+            )
+            return {}
+        return cache
+
+    def distinct(self) -> list[str]:
+        """The distinct fingerprints in first-seen fragment order (after
+        read_all)."""
+        return list(dict.fromkeys(self.fp_by_rel[rel] for rel in self.rels))
+
+    def arrow_schema(self, fp: str):
+        import pyarrow as pa
+
+        return pa.ipc.read_schema(pa.py_buffer(self.exemplars[fp][0]))
+
+    def spark_schema(self, fp: str) -> T.StructType:
+        if fp not in self.spark_schemas:
+            self.spark_schemas[fp] = _to_spark(self.arrow_schema(fp))
+        return self.spark_schemas[fp]
+
+    def violations(self) -> list[str]:
+        """The INT96 / non-decimal FLBA columns of every fragment (after
+        read_all), deduplicated in fragment order."""
+        return list(
+            dict.fromkeys(v for fp in self.distinct() for v in self.exemplars[fp][1])
+        )
+
+    def drift_report(self) -> list[dict]:
+        """schema_drift_report over the fingerprints (after read_all): each
+        distinct footer schema is compared with the first fragment's once,
+        and its changes are stamped onto every fragment carrying it."""
+        if len(self.rels) <= 1:
+            return []
+        ref = self.rels[0]
+        ref_fp = self.fp_by_rel[ref]
+        changes: dict[str, list[dict]] = {ref_fp: []}
+        report: list[dict] = []
+        for rel in self.rels[1:]:
+            fp = self.fp_by_rel[rel]
+            if fp not in changes:
+                changes[fp] = _schema_changes(
+                    self.spark_schema(ref_fp), self.spark_schema(fp)
+                )
+            report += [
+                {**c, "file": self.file(rel), "reference_file": self.file(ref)}
+                for c in changes[fp]
+            ]
+        return report
+
+    def first_footer(self) -> T.StructType:
+        """The first fragment's footer schema — what pyarrow's dataset
+        discovery reports for the whole directory (empty when there are no
+        fragments)."""
+        if not self.rels:
+            return T.StructType([])
+        first = self.rels[0]
+        if first not in self.fp_by_rel:  # read_all has not run
+            fp, exemplar = _read_footer(self.file(first))
+            self.fp_by_rel[first] = fp
+            self.exemplars.setdefault(fp, exemplar)
+        return self.spark_schema(self.fp_by_rel[first])
+
+    def schema(self, unify: bool = False) -> T.StructType:
+        """The dataset's Spark schema: the first fragment's footer — or,
+        with ``unify``, the promoted union of every distinct footer (after
+        read_all) — plus the hive partition columns no footer carries."""
+        footer = self._unified() if unify else self.first_footer()
+        return T.StructType(footer.fields + self.partition_fields(footer.names))
+
+    def _unified(self) -> T.StructType:
+        import pyarrow as pa
+
+        if not self.rels:
+            raise FileNotFoundError(f"no .parquet fragments under {self.path}")
+        schemas = [self.arrow_schema(fp) for fp in self.distinct()]
+        try:
+            # ArrowTypeError subclasses TypeError, so the true-conflict arm
+            # must come FIRST or the promote_options-compat fallback eats it
+            unified = pa.unify_schemas(schemas, promote_options="permissive")
+        except pa.lib.ArrowTypeError as e:
+            raise SchemaDriftError(
+                f"fragments of {self.path} cannot be unified even with type "
+                f"promotion: {e}"
+            ) from e
+        except TypeError:
+            # older pyarrow without promote_options: exact-match unify only
+            try:
+                unified = pa.unify_schemas(schemas)
+            except pa.lib.ArrowTypeError as e:
+                raise SchemaDriftError(
+                    f"fragments of {self.path} cannot be unified (pyarrow too "
+                    f"old for type promotion): {e}"
+                ) from e
+        return _to_spark(unified)
+
+    def partition_fields(self, footer_names: Iterable[str]) -> list[T.StructField]:
+        """StructFields (nesting order, nullable like Spark reports
+        partition columns) for the hive keys no footer carries, each typed
+        per value shape."""
+        fields = []
+        for k in self.keys:
+            if k in footer_names:
+                continue
+            dtype: T.DataType | None = None
+            for v in self.values[k]:
+                vt = _partition_value_type(v)
+                dtype = vt if dtype is None else _widen_partition_types(dtype, vt)
+            fields.append(T.StructField(k, T.StringType() if dtype is None else dtype, True))
+        return fields
+
+
+def _read_footer(file_path: str) -> tuple[str, tuple[bytes, list[str]]]:
+    """(fingerprint, exemplar) for one fragment from ONE
+    ``pq.read_metadata``. The exemplar holds the footer's Arrow schema as
+    IPC bytes, with the schema-level key-value metadata stripped (writer
+    blobs such as pandas' carry per-file row counts, which would split one
+    schema into many), plus the columns whose PHYSICAL type the reference
+    panics on: INT96 (legacy Hive/Impala timestamps, src/parquetutils.rs:85)
+    and non-decimal FIXED_LEN_BYTE_ARRAY (src/parquetutils.rs:76-88 has no
+    FLBA arm). Arrow conversion erases physical types (INT96 arrives as
+    timestamp[ns], FLBA as fixed_size_binary → BinaryType → would silently
+    map to String), so strict parity needs this footer-level evidence.
+    Decimal-annotated FLBA is excluded: it surfaces as DecimalType and is
+    rejected by _scalar's DECIMAL arm with the right message. The
+    fingerprint is an md5 over both parts.
+
+    Runs on the driver or inside a Spark task. An unreadable footer raises
+    pyarrow's error type, naming the fragment, with pyarrow's error
+    chained."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        footer = pq.read_metadata(file_path).schema
+        ipc = footer.to_arrow_schema().remove_metadata().serialize().to_pybytes()
+    except (OSError, pa.ArrowException) as e:
+        raise type(e)(f"cannot read the Parquet footer of {file_path}: {e}") from e
+    violations: list[str] = []
+    for i in range(len(footer)):
+        col = footer.column(i)
+        kind = col.physical_type
+        if kind == "INT96" or (
+            kind == "FIXED_LEN_BYTE_ARRAY" and str(col.converted_type) != "DECIMAL"
+        ):
+            if f"{col.name} ({kind})" not in violations:
+                violations.append(f"{col.name} ({kind})")
+    fp = hashlib.md5(ipc + "\n".join(violations).encode("utf-8")).hexdigest()
+    return fp, (ipc, violations)
+
+
+def _read_footers(files):
+    """(file → fingerprint, fingerprint → exemplar) over a batch of
+    fragments: the driver loop and, shipped whole, one task of the Spark
+    fan-out — which therefore collects a 16-byte digest per fragment plus
+    one exemplar per distinct footer, not one schema per file."""
+    fp_by_file: dict[str, str] = {}
+    exemplars: dict[str, tuple[bytes, list[str]]] = {}
+    for f in files:
+        fp, exemplar = _read_footer(f)
+        fp_by_file[f] = fp
+        exemplars.setdefault(fp, exemplar)
+    yield fp_by_file, exemplars
+
+
+def _to_spark(arrow_schema) -> T.StructType:
+    """Arrow schema → Spark StructType, timestamps kept as TimestampType."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=False)
+    except TypeError:  # older signature
+        return from_arrow_schema(arrow_schema)
 
 
 def hive_partition_fields(
@@ -417,130 +721,31 @@ def hive_partition_fields(
     must append them explicitly or the emitted table silently drops the
     partition keys — the first thing a real lakehouse user hits.
 
-    Discovery is footer-free, data-free, and pyarrow-free: one stdlib
-    directory walk parses the segment names. Returns [] for plain files and
-    flat directories. A key that ALSO appears in the footers (some writers
-    duplicate partition columns into the data) is excluded — the footer
-    typing wins; pass ``footer_names`` when the caller already holds the
-    footer schema (skips a pyarrow footer read), otherwise it is read here
-    when pyarrow is available (without pyarrow no key is excluded)."""
-    scan = _hive_partition_scan(path)
-    if scan is None:
+    Discovery is footer-free and data-free: one directory walk parses the
+    segment names. Returns [] for plain files and flat directories. A key
+    that ALSO appears in the footers (some writers duplicate partition
+    columns into the data) is excluded — the footer typing wins; pass
+    ``footer_names`` when the caller already holds the footer schema,
+    otherwise the first fragment's footer is read here."""
+    scan = _scan_dataset(path)
+    if not scan.keys:
         return []
     if footer_names is None:
-        try:
-            import pyarrow.dataset as ds
-
-            footer_names = set(ds.dataset(path, format="parquet").schema.names)
-        except ImportError:
-            footer_names = set()
-    else:
-        footer_names = set(footer_names)
-    return [f for f in _typed_partition_fields(scan) if f.name not in footer_names]
+        footer_names = scan.first_footer().names
+    return scan.partition_fields(set(footer_names))
 
 
-_UNSET = object()  # "_hive_scan not provided — discover it here" sentinel
-
-
-def _hive_extra_fields(path, footer_names, scan=_UNSET) -> list[T.StructField]:
-    """The hive partition fields to APPEND to a footer schema: typed
-    directory keys minus the footer-duplicated ones. Accepts a pre-computed
-    ``_hive_partition_scan`` so one directory walk serves a whole
-    ``schema_to_clickhouse`` call."""
-    if scan is _UNSET:
-        scan = _hive_partition_scan(path)
-    if scan is None:
-        return []
-    footer_names = set(footer_names)
-    return [f for f in _typed_partition_fields(scan) if f.name not in footer_names]
-
-
-def infer_parquet_schema(
-    path: str, spark: SparkSession | None = None, *, _hive_scan=_UNSET
-) -> T.StructType:
+def infer_parquet_schema(path: str, spark: SparkSession | None = None) -> T.StructType:
     """Footer-only schema inference (no data pages, no Spark job).
 
-    Fast path: pyarrow reads the footer on the driver and the arrow schema is
-    converted to Spark types — mirrors the reference's metadata-only read
-    (src/parquetutils.rs:28-30) and also handles TIMESTAMP(NANOS), which
-    Spark's own reader rejects. Falls back to ``spark.read.parquet`` when
-    pyarrow is unavailable. Hive-layout directories get their ``key=value``
-    partition columns appended (typed by discovery — see
-    hive_partition_fields), matching what Spark's own reader would report
-    for the same directory.
-    """
-    try:
-        import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        arrow_schema = ds.dataset(path, format="parquet").schema
-        try:
-            schema = from_arrow_schema(arrow_schema, prefer_timestamp_ntz=False)
-        except TypeError:  # older signature
-            schema = from_arrow_schema(arrow_schema)
-        return T.StructType(
-            schema.fields + _hive_extra_fields(path, schema.names, _hive_scan)
-        )
-    except ImportError:
-        if spark is None:
-            raise
-        # Spark's own reader discovers + types hive partition columns
-        # natively, so this fallback stays hive-correct without pyarrow
-        return spark.read.parquet(path).schema
-
-
-def _strict_physical_violations(path: str) -> list[str]:
-    """Columns whose PHYSICAL Parquet type the reference panics on: INT96
-    (legacy Hive/Impala timestamps, src/parquetutils.rs:85) and non-decimal
-    FIXED_LEN_BYTE_ARRAY (src/parquetutils.rs:76-88 has no FLBA arm).
-    Arrow-converted schemas erase physical types (INT96 arrives as
-    timestamp[ns], FLBA as fixed_size_binary → BinaryType → would silently
-    map to String), so strict parity needs this footer-level check.
-    Decimal-annotated FLBA is excluded here: it surfaces as DecimalType and
-    is rejected by _scalar's DECIMAL arm with the right message.
-
-    Scans EVERY footer of a directory dataset recursively — a violating
-    column in any part-file (or partition subdirectory) must panic, not
-    just one in the lexically-first file. Footers are metadata-only reads;
-    at 100 TB this is one small read per file, still worth it for a DDL
-    tool that runs once per dataset. Returns [] when pyarrow is
-    unavailable or the path isn't introspectable."""
-    try:
-        import os
-
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            files = [
-                os.path.join(root, name)
-                for root, _dirs, names in os.walk(path)
-                for name in sorted(names)
-                if name.endswith(".parquet")
-            ]
-        else:
-            files = [path]
-        out: list[str] = []
-        seen: set[tuple[str, str]] = set()
-        for f in files:
-            pf_schema = pq.ParquetFile(f).schema  # ParquetSchema: physical types
-            for i in range(len(pf_schema)):
-                col = pf_schema.column(i)
-                phys = col.physical_type
-                if phys == "INT96":
-                    kind = "INT96"
-                elif (
-                    phys == "FIXED_LEN_BYTE_ARRAY"
-                    and str(col.converted_type) != "DECIMAL"
-                ):
-                    kind = "FIXED_LEN_BYTE_ARRAY"
-                else:
-                    continue
-                if (col.name, kind) not in seen:
-                    seen.add((col.name, kind))
-                    out.append(f"{col.name} ({kind})")
-        return out
-    except Exception:  # noqa: BLE001 — fidelity check only, never fatal
-        return []
+    pyarrow reads the first fragment's footer on the driver and the arrow
+    schema is converted to Spark types — mirrors the reference's
+    metadata-only read (src/parquetutils.rs:28-30) and also handles
+    TIMESTAMP(NANOS), which Spark's own reader rejects. Hive-layout
+    directories get their ``key=value`` partition columns appended (typed
+    by discovery — see hive_partition_fields), matching what Spark's own
+    reader would report for the same directory. ``spark`` is unused."""
+    return _scan_dataset(path).schema()
 
 
 def schema_to_clickhouse(
@@ -557,100 +762,83 @@ def schema_to_clickhouse(
     Parquet footer → schema walk → ClickHouse DDL (optionally written to a
     file, as the reference's BufWriter sink does).
 
-    Strict mode walks EVERY footer of a directory dataset (the
-    _strict_physical_violations discipline) and additionally refuses to
-    emit DDL when fragments disagree (SchemaDriftError): pyarrow's dataset
-    discovery reports the first fragment's schema, so on a drifted table
-    the generated DDL would silently misdescribe every later part-file.
-    Lenient mode keeps the first-fragment behavior (use
+    Strict mode reads EVERY footer of a directory dataset: it refuses the
+    physical types the reference panics on (INT96, non-decimal FLBA) in
+    any fragment, and refuses to emit DDL when fragments disagree
+    (SchemaDriftError) — the DDL describes the first fragment, so on a
+    drifted table it would silently misdescribe every later part-file.
+    Lenient mode reads only the first fragment's footer (use
     schema_drift_report to inspect the drift). ``unify=True`` resolves
     drift instead of refusing: the DDL is emitted for the PROMOTED union
     schema covering every fragment (unified_parquet_schema) — the schema
     the re-created table needs so all existing part-files load into it.
 
-    ``drift_cache`` (r14): path to an incremental_drift_scan cache file —
-    the strict drift gate (and, with ``unify=True``, the promotion scan)
-    then re-reads footers ONLY for partitions whose listing changed since
-    the last run, so repeat DDL generation on a 10⁵-file table costs a
-    directory listing instead of 10⁵ footer round-trips. (The
-    physical-type scan still reads footers directly: its INT96/FLBA
-    evidence lives below the payloads the cache fingerprints.)"""
+    One directory walk and at most one read per footer serve the whole
+    call: the physical-type check, the drift gate, the schema, the
+    ``partition by`` clause and the warnings. ``drift_cache`` (r14): path
+    to an incremental_drift_scan cache file — every footer read of the
+    call then happens ONLY for partitions whose listing changed since the
+    last run, so repeat DDL generation on an unchanged 10⁵-file table
+    costs a directory listing and zero footer reads."""
+    scan = _scan_dataset(parquet_path, drift_cache, spark)
+    if strict or unify:
+        scan.read_all()
     if strict:
-        bad = _strict_physical_violations(parquet_path)
+        bad = scan.violations()
         if bad:
             raise UnsupportedTypeError(
                 "reference panics on these physical types "
                 f"(src/parquetutils.rs:76-88,85): {bad}"
             )
-        if not unify:
-            drift = (
-                incremental_drift_scan(parquet_path, drift_cache, spark)[
-                    "report"
-                ]
-                if drift_cache is not None
-                else schema_drift_report(parquet_path, spark)
+        drift = [] if unify else scan.drift_report()
+        if drift:
+            preview = "; ".join(
+                f"{d['file'].rsplit('/', 1)[-1]}:{d['column']} {d['change']}"
+                for d in drift[:5]
             )
-            if drift:
-                preview = "; ".join(
-                    f"{d['file'].rsplit('/', 1)[-1]}:{d['column']} {d['change']}"
-                    for d in drift[:5]
-                )
-                raise SchemaDriftError(
-                    f"{len(drift)} fragment-schema disagreement(s) in "
-                    f"{parquet_path} (vs first fragment) — DDL would "
-                    f"misdescribe the drifted part-files: {preview}"
-                    f"{' …' if len(drift) > 5 else ''} "
-                    "(pass unify=True / --unify to emit the promoted "
-                    "union schema instead)"
-                )
-    # ONE directory walk serves schema append, partition clause, and every
-    # warning below (the r13 path re-listed the tree up to three times)
-    scan = _hive_partition_scan(parquet_path)
-    schema = (
-        unified_parquet_schema(
-            parquet_path, _hive_scan=scan, drift_cache=drift_cache
-        )
-        if unify
-        else infer_parquet_schema(parquet_path, spark, _hive_scan=scan)
-    )
+            raise SchemaDriftError(
+                f"{len(drift)} fragment-schema disagreement(s) in "
+                f"{parquet_path} (vs first fragment) — DDL would "
+                f"misdescribe the drifted part-files: {preview}"
+                f"{' …' if len(drift) > 5 else ''} "
+                "(pass unify=True / --unify to emit the promoted "
+                "union schema instead)"
+            )
     # ALL hive keys go in `partition by (...)` — including keys some
     # writers duplicate into the part-file footers (those keep their
     # footer typing in the column list but are still the table's
     # partition keys; dropping the clause for them would silently
     # un-partition the table)
-    part_cols = [k for k in scan[0]] if scan else []
     ddl = struct_to_clickhouse_ddl(
-        schema,
+        scan.schema(unify),
         table_name,
         primary_key,
         strict=strict,
-        partition_by=part_cols or None,
+        partition_by=scan.keys or None,
     )
-    if scan:
-        _keys, _values, null_keys, ragged_keys = scan
-        if ragged_keys:
-            # a key present under some branches but absent from others
-            # (ragged layout) means rows with NO value for the partition
-            # key — Spark itself refuses such trees ("conflicting
-            # directory structures"); emit the DDL but say so loudly
-            ddl = (
-                f"-- WARNING: partition column(s) {', '.join(ragged_keys)} "
-                "are missing from some part-file branches (ragged hive "
-                "layout); rows under those branches have no value for the "
-                "partition key — Spark's reader rejects such trees outright"
-                "\n" + ddl
-            )
-        if null_keys:
-            # a __HIVE_DEFAULT_PARTITION__ directory means that key is NULL
-            # for those rows — the bare partition-key column the DDL emits
-            # would reject them on load, so say it loudly instead of
-            # failing later
-            ddl = (
-                f"-- WARNING: partition column(s) {', '.join(null_keys)} "
-                "contain NULL values (__HIVE_DEFAULT_PARTITION__ "
-                "directories); the bare partition-key column rejects NULL "
-                "rows — backfill the key or use allow_nullable_key\n" + ddl
-            )
+    if scan.ragged_keys:
+        # a key present under some branches but absent from others
+        # (ragged layout) means rows with NO value for the partition
+        # key — Spark itself refuses such trees ("conflicting
+        # directory structures"); emit the DDL but say so loudly
+        ddl = (
+            f"-- WARNING: partition column(s) {', '.join(scan.ragged_keys)} "
+            "are missing from some part-file branches (ragged hive "
+            "layout); rows under those branches have no value for the "
+            "partition key — Spark's reader rejects such trees outright"
+            "\n" + ddl
+        )
+    if scan.null_keys:
+        # a __HIVE_DEFAULT_PARTITION__ directory means that key is NULL
+        # for those rows — the bare partition-key column the DDL emits
+        # would reject them on load, so say it loudly instead of
+        # failing later
+        ddl = (
+            f"-- WARNING: partition column(s) {', '.join(scan.null_keys)} "
+            "contain NULL values (__HIVE_DEFAULT_PARTITION__ "
+            "directories); the bare partition-key column rejects NULL "
+            "rows — backfill the key or use allow_nullable_key\n" + ddl
+        )
     if out_path is not None:
         with open(out_path, "w", encoding="utf-8") as fh:
             fh.write(ddl)
@@ -738,36 +926,6 @@ def _schema_changes(old_schema: T.StructType, new_schema: T.StructType) -> list[
     return changes
 
 
-def _list_fragments(path: str) -> list[str]:
-    """Every .parquet part-file under a dataset path, sorted for
-    determinism; a plain file is its own single fragment."""
-    import os
-
-    if os.path.isdir(path):
-        return [
-            os.path.join(root, name)
-            for root, _dirs, names in sorted(os.walk(path))
-            for name in sorted(names)
-            if name.endswith(".parquet")
-        ]
-    return [path]
-
-
-def _read_footer_schema_json(file_path: str) -> str:
-    """One fragment's footer schema as Spark schema JSON — runs on the
-    driver OR inside a Spark task (imports stay local so the closure ships
-    clean to executors)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    arrow_schema = pq.read_schema(file_path)
-    try:
-        spark_schema = from_arrow_schema(arrow_schema, prefer_timestamp_ntz=False)
-    except TypeError:  # older signature
-        spark_schema = from_arrow_schema(arrow_schema)
-    return spark_schema.json()
-
-
 def fragment_schemas(
     path: str,
     spark: SparkSession | None = None,
@@ -775,13 +933,14 @@ def fragment_schemas(
 ) -> list[tuple[str, T.StructType]]:
     """(fragment file, footer schema) for every part-file of a dataset.
 
-    pyarrow's dataset discovery (and therefore infer_parquet_schema on a
-    directory) reports the FIRST fragment's schema — drift in any later
+    infer_parquet_schema on a directory (like pyarrow's dataset
+    discovery) reports the FIRST fragment's schema — drift in any later
     part-file is silently masked. This reads every footer individually so
     drift is observable. Footers are metadata-only reads (~KB each); at or
     above `distributed_threshold` files (and given a SparkSession) the
     scan fans out over executors — each task opens its files' footers with
-    pyarrow and ships back the schema JSON.
+    pyarrow and ships back fingerprints plus one exemplar per distinct
+    footer.
 
     Threshold calibration (measured r12): on a LOCAL filesystem a footer
     read is ~0.14 ms, so the driver loop beats the fan-out up to tens of
@@ -794,148 +953,40 @@ def fragment_schemas(
     way, and both paths return identical results (tested).
 
     Collect cost model: tasks ship back one (file, md5-fingerprint) pair
-    per fragment plus ONE exemplar schema JSON per DISTINCT schema,
+    per fragment plus ONE exemplar per DISTINCT footer schema,
     deduplicated inside each task. A 10⁵-file drifted table therefore
-    returns 10⁵ 16-byte digests and a handful of KB-sized JSONs — not 10⁵
-    full schema payloads (the naive per-file-JSON collect this replaced).
-    Measured r13 at exactly the 8192-file threshold (local FS, 2-schema
-    drifted corpus): driver loop 1.13 s vs fingerprint fan-out 1.07 s —
-    the crossover sits right at the calibrated default even locally, and
-    every object-store footer adds 10-50 ms per file to the driver side
-    only."""
-    files = _list_fragments(path)
-    fp_by_file, json_by_fp = _footer_fingerprints(
-        files, spark, distributed_threshold
-    )
-    # parse each distinct schema ONCE, share the StructType across files
-    schema_by_fp = {
-        fp: T.StructType.fromJson(json.loads(j)) for fp, j in json_by_fp.items()
-    }
-    return [(f, schema_by_fp[fp_by_file[f]]) for f in files]
+    returns 10⁵ 16-byte digests and a handful of KB-sized exemplars — not
+    10⁵ full schema payloads. Measured r13 at exactly the 8192-file
+    threshold (local FS, 2-schema drifted corpus): driver loop 1.13 s vs
+    fingerprint fan-out 1.07 s — the crossover sits right at the
+    calibrated default even locally, and every object-store footer adds
+    10-50 ms per file to the driver side only. Each distinct schema is
+    converted to Spark types once and shared across its files."""
+    scan = _scan_dataset(path, spark=spark)
+    scan.read_all(distributed_threshold)
+    return [(scan.file(rel), scan.spark_schema(scan.fp_by_rel[rel])) for rel in scan.rels]
 
 
-def _footer_fingerprints(
-    files: list[str],
-    spark: SparkSession | None = None,
-    distributed_threshold: int = 8192,
-) -> tuple[dict[str, str], dict[str, str]]:
-    """(file → md5-of-footer-schema-JSON, fingerprint → exemplar JSON) for
-    the given fragment files — the r13 fingerprint-collect, factored out so
-    both the full scan (fragment_schemas) and the incremental scan
-    (incremental_drift_scan) share one implementation. At or above
-    ``distributed_threshold`` files (and given a SparkSession) the footer
-    reads fan out over executors, shipping back 16-byte digests plus ONE
-    exemplar schema JSON per distinct schema."""
-    import hashlib
-
-    if spark is not None and len(files) >= distributed_threshold:
-
-        def _scan(file_iter):
-            # local imports + local dedup: ships clean, returns one
-            # (rows, exemplars) pair per task
-            import hashlib as _h
-
-            rows: list[tuple[str, str]] = []
-            exemplars: dict[str, str] = {}
-            for f in file_iter:
-                j = _read_footer_schema_json(f)
-                fp = _h.md5(j.encode("utf-8")).hexdigest()
-                rows.append((f, fp))
-                exemplars.setdefault(fp, j)
-            yield (rows, exemplars)
-
-        sc = spark.sparkContext
-        n_slices = max(1, min(len(files) // 8, sc.defaultParallelism * 4))
-        fp_by_file: dict[str, str] = {}
-        json_by_fp: dict[str, str] = {}
-        for rows, exemplars in (
-            sc.parallelize(files, n_slices).mapPartitions(_scan).collect()
-        ):
-            fp_by_file.update(rows)
-            json_by_fp.update(exemplars)
-        return fp_by_file, json_by_fp
-    fp_by_file = {}
-    json_by_fp = {}
-    for f in files:
-        j = _read_footer_schema_json(f)
-        fp = hashlib.md5(j.encode("utf-8")).hexdigest()
-        fp_by_file[f] = fp
-        json_by_fp.setdefault(fp, j)
-    return fp_by_file, json_by_fp
-
-
-def unified_parquet_schema(
-    path: str, *, _hive_scan=_UNSET, drift_cache: str | None = None
-) -> T.StructType:
+def unified_parquet_schema(path: str, *, drift_cache: str | None = None) -> T.StructType:
     """The PROMOTED union schema across every fragment of a dataset —
     what the table schema should be so that every part-file reads under
     it: types widen along Arrow's permissive promotion lattice
     (int32+int64 → int64, float+double → double), columns union, and a
     truly incompatible pair (int vs string) raises SchemaDriftError with
-    the conflicting column named.
+    the conflicting column named. Hive partition columns are appended.
 
     This is the EMIT side of schema_drift_report: the report says which
     fragments drifted; this produces the one schema that covers them all
     (feed it to struct_to_clickhouse_ddl, or use the CLI's --unify).
-    Footer-only, driver-side (the r12 calibration: local footer reads are
-    ~0.14 ms, fine into tens of thousands of files; promotion runs on the
-    Arrow schemas, so the fan-out path's Spark-schema JSON doesn't
-    apply)."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    files = _list_fragments(path)
-    if not files:
-        raise FileNotFoundError(f"no .parquet fragments under {path}")
-    import pyarrow as pa
-
-    # dedup BEFORE promotion (r14): a 10⁵-file table usually carries a
-    # handful of distinct schemas, and unify_schemas walks its whole input
-    # list — promote over one exemplar per distinct schema instead.
-    # First-seen order is preserved, only exact duplicates are dropped, so
-    # the promotion result is unchanged (equal schemas add nothing to the
-    # union). With ``drift_cache`` the footer reads themselves go
-    # incremental too: unchanged partitions serve their arrow-IPC
-    # exemplars from the cache (shared file with incremental_drift_scan).
-    if drift_cache is not None:
-        arrow_schemas = _cached_distinct_arrow_schemas(path, drift_cache)
-    else:
-        seen: set[bytes] = set()
-        arrow_schemas = []
-        for f in files:
-            s = pq.read_schema(f)
-            key = s.serialize().to_pybytes()
-            if key not in seen:
-                seen.add(key)
-                arrow_schemas.append(s)
-    try:
-        # ArrowTypeError subclasses TypeError, so the true-conflict arm
-        # must come FIRST or the promote_options-compat fallback eats it
-        unified = pa.unify_schemas(arrow_schemas, promote_options="permissive")
-    except pa.lib.ArrowTypeError as e:
-        raise SchemaDriftError(
-            f"fragments of {path} cannot be unified even with type "
-            f"promotion: {e}"
-        ) from e
-    except TypeError:
-        # older pyarrow without promote_options: exact-match unify only
-        try:
-            unified = pa.unify_schemas(arrow_schemas)
-        except pa.lib.ArrowTypeError as e:
-            raise SchemaDriftError(
-                f"fragments of {path} cannot be unified (pyarrow too old "
-                f"for type promotion): {e}"
-            ) from e
-    try:
-        spark_schema = from_arrow_schema(unified, prefer_timestamp_ntz=False)
-    except TypeError:
-        spark_schema = from_arrow_schema(unified)
-    # hive partition columns live in directory names, not footers — append
-    # them here too or --unify would drop the partition keys
-    return T.StructType(
-        spark_schema.fields
-        + _hive_extra_fields(path, spark_schema.names, _hive_scan)
-    )
+    Footer-only, and promotion runs over ONE exemplar per distinct footer
+    schema in first-seen order (a 10⁵-file table usually carries a handful)
+    — equal schemas add nothing to the union, so the result is unchanged.
+    With ``drift_cache`` the footer reads go incremental: unchanged
+    partitions serve their exemplars from the cache shared with
+    incremental_drift_scan and the strict DDL gate."""
+    scan = _scan_dataset(path, drift_cache)
+    scan.read_all()
+    return scan.schema(unify=True)
 
 
 def schema_drift_report(
@@ -953,17 +1004,9 @@ def schema_drift_report(
     An empty list means every footer agrees and the dataset-level DDL is
     trustworthy. Footer-only; distributed over executors past
     `distributed_threshold` files (see fragment_schemas)."""
-    frags = fragment_schemas(path, spark, distributed_threshold)
-    if len(frags) <= 1:
-        return []
-    ref_file, ref_schema = frags[0]
-    report: list[dict] = []
-    for f, schema in frags[1:]:
-        for change in _schema_changes(ref_schema, schema):
-            change["file"] = f
-            change["reference_file"] = ref_file
-            report.append(change)
-    return report
+    scan = _scan_dataset(path, spark=spark)
+    scan.read_all(distributed_threshold)
+    return scan.drift_report()
 
 
 def incremental_drift_scan(
@@ -978,21 +1021,27 @@ def incremental_drift_scan(
     with a hive layout the natural re-scan unit is the partition directory,
     and between two runs almost all partitions are untouched.
 
-    Cost model per run: one fragment LISTING (names + size + mtime — the
-    same listing every directory mode already pays, and on object stores
-    the stat fields ride along with the LIST response), then footer reads
-    ONLY for partitions whose listing fingerprint changed (new, mutated, or
-    compacted partitions) or whose cached entries are missing their
-    exemplar. A steady-state daily run on a 10⁵-file, 10³-partition table
-    that appended one partition reads ~10² footers instead of 10⁵ — the
-    report itself is computed from cached 16-byte fingerprints plus one
-    exemplar schema JSON per distinct footer schema (the r13
-    fingerprint-collect layout, persisted).
+    Cost model per run: one fragment LISTING plus a stat per fragment
+    (names + size + mtime — on object stores the stat fields ride along
+    with the LIST response), then footer reads ONLY for partitions whose
+    listing fingerprint changed (new, mutated, or compacted partitions) or
+    whose cached entries are missing their exemplar. A steady-state daily
+    run on a 10⁵-file, 10³-partition table that appended one partition
+    reads ~10² footers instead of 10⁵.
 
-    The cache file is JSON, rewritten atomically each run; deleting it (or
-    a version bump) degrades to a full scan with identical results. The
-    cache is keyed by the dataset's absolute root (a cache file pointed
-    at a different tree rescans fully — ADVICE r14) plus per-file
+    The cache file is JSON with one layout shared by this scan, the
+    strict DDL gate and the unify scan (``drift_cache=``)::
+
+        {"version": 2, "root": "/abs/dataset/root",
+         "partitions": {"<dir>": {"listing_fp": md5,
+                                  "files": {"<rel path>": fingerprint}}},
+         "exemplars": {fingerprint: {"ipc": base64 Arrow schema,
+                                     "violations": [INT96/FLBA columns]}}}
+
+    It is rewritten atomically each run; deleting it (or a version bump)
+    degrades to a full scan with identical results. The cache is keyed by
+    the dataset's absolute root (a cache file pointed at a different tree
+    rescans fully, with a warning — ADVICE r14) plus per-file
     (size, mtime_ns); like every mtime-based cache it cannot see an
     in-place rewrite that preserves BOTH size and mtime (touch -r /
     mtime-restoring sync tools) — a per-file content check would cost a
@@ -1007,251 +1056,19 @@ def incremental_drift_scan(
          "partitions_reused": [...],       # relative dirs served by cache
          "footers_read": N}
     """
-    files, root, by_part, lfp_by_part = _partition_listing(path)
-    cache = _load_scan_cache(cache_path, root=root)
-    reset_from_root = cache.pop("_reset_from_root", None)
-    cached_parts = cache.get("partitions", {})
-    cached_exemplars = cache.get("exemplars", {})
-    rescanned: list[str] = []
-    reused: list[str] = []
-    to_read: list[tuple[str, str]] = []
-    new_parts: dict[str, dict] = {}
-    import os
-
-    for part in sorted(by_part):
-        lfp = lfp_by_part[part]
-        entry = cached_parts.get(part)
-        usable = (
-            entry is not None
-            and entry.get("listing_fp") == lfp
-            and set(entry.get("files", {})) == {rel for rel, _ in by_part[part]}
-            and all(fp in cached_exemplars for fp in entry["files"].values())
-        )
-        if usable:
-            reused.append(part)
-            new_parts[part] = entry
-        else:
-            rescanned.append(part)
-            to_read.extend(by_part[part])
-            new_parts[part] = {"listing_fp": lfp, "files": {}}
-
-    fp_by_abs, fresh_exemplars = _footer_fingerprints(
-        [a for _, a in to_read], spark, distributed_threshold
-    )
-    for rel, a in to_read:
-        part = os.path.dirname(rel) or "."
-        new_parts[part]["files"][rel] = fp_by_abs[a]
-
-    fp_by_rel: dict[str, str] = {}
-    for entry in new_parts.values():
-        fp_by_rel.update(entry["files"])
-    used = set(fp_by_rel.values())
-    exemplars = {
-        fp: j
-        for fp, j in {**cached_exemplars, **fresh_exemplars}.items()
-        if fp in used
-    }
-
-    report: list[dict] = []
-    rels_sorted = [os.path.relpath(f, root) for f in files]
-    if len(rels_sorted) > 1:
-        schema_by_fp = {
-            fp: T.StructType.fromJson(json.loads(j))
-            for fp, j in exemplars.items()
-        }
-        ref_rel = rels_sorted[0]
-        ref_fp = fp_by_rel[ref_rel]
-        ref_schema = schema_by_fp[ref_fp]
-        for rel in rels_sorted[1:]:
-            fp = fp_by_rel[rel]
-            if fp == ref_fp:
-                continue  # identical footer — no diff possible
-            # join with the CALLER's path, not the absolutized root, so
-            # cached and uncached runs report identical paths on relative
-            # inputs — schema_drift_report parity (ADVICE r14)
-            for change in _schema_changes(ref_schema, schema_by_fp[fp]):
-                change["file"] = os.path.join(path, rel)
-                change["reference_file"] = os.path.join(path, ref_rel)
-                report.append(change)
-
-    _write_scan_cache(
-        cache_path,
-        {
-            **cache,
-            "version": 1,
-            "root": root,
-            "partitions": new_parts,
-            "exemplars": exemplars,
-        },
-    )
+    scan = _scan_dataset(path, cache_path, spark)
+    scan.read_all(distributed_threshold)
     return {
-        "report": report,
-        "partitions_rescanned": rescanned,
-        "partitions_reused": reused,
-        "footers_read": len(to_read),
+        "report": scan.drift_report(),
+        "partitions_rescanned": scan.rescanned,
+        "partitions_reused": scan.reused,
+        "footers_read": scan.footers_read,
         # non-None when the cache file was written for a different dataset
         # root and had to be discarded (full rescan): alternating two
         # datasets through one cache file thrashes on every run — visible
         # here instead of silently rescanning (ADVICE r15)
-        "cache_reset_root_mismatch": reset_from_root,
+        "cache_reset_root_mismatch": scan.reset_from_root,
     }
-
-
-def _partition_listing(path: str):
-    """(files, root, by_part, listing_fp_by_part): the one directory
-    listing every incremental scan shares — fragments grouped by partition
-    directory with an md5 over (name, size, mtime_ns) per partition."""
-    import hashlib
-    import os
-
-    files = [os.path.abspath(f) for f in _list_fragments(path)]
-    root = os.path.abspath(path)
-    by_part: dict[str, list[tuple[str, str]]] = {}
-    stat_by_rel: dict[str, tuple[int, int]] = {}
-    for f in files:
-        rel = os.path.relpath(f, root)
-        part = os.path.dirname(rel) or "."
-        by_part.setdefault(part, []).append((rel, f))
-        st = os.stat(f)
-        stat_by_rel[rel] = (st.st_size, st.st_mtime_ns)
-    lfp_by_part = {
-        part: hashlib.md5(
-            "\n".join(
-                f"{rel}\x00{stat_by_rel[rel][0]}\x00{stat_by_rel[rel][1]}"
-                for rel, _ in by_part[part]
-            ).encode("utf-8")
-        ).hexdigest()
-        for part in by_part
-    }
-    return files, root, by_part, lfp_by_part
-
-
-def _load_scan_cache(cache_path: str, root: str | None = None) -> dict:
-    """The scan-cache JSON, or a fresh empty one on miss/corruption.
-    Unknown top-level sections are preserved by writers so the drift
-    (Spark-JSON) and unify (arrow-IPC) payloads can share one file.
-
-    When *root* (the dataset's absolute root) is given and the cache was
-    written for a DIFFERENT root, the whole cache is discarded: partition
-    entries are keyed by root-relative path + (size, mtime_ns), so a cache
-    file pointed at another dataset with coinciding rel-paths/stats would
-    silently serve the wrong exemplars (ADVICE r14). The reset is marked
-    with a ``_reset_from_root`` key (the clobbered root) so callers can
-    surface it — a cache file alternated between two datasets resets on
-    EVERY run, which is correct but pure thrash, and it was invisible
-    before r16 (ADVICE r15). Callers pop the marker before writing. Caches
-    written before the root key existed (no ``root``) are still honored."""
-    try:
-        with open(cache_path, encoding="utf-8") as fh:
-            loaded = json.load(fh)
-        if isinstance(loaded, dict) and loaded.get("version") == 1:
-            if root is not None and loaded.get("root") not in (None, root):
-                return {
-                    "version": 1,
-                    "partitions": {},
-                    "exemplars": {},
-                    "_reset_from_root": loaded.get("root"),
-                }
-            return loaded
-    except (OSError, ValueError):
-        pass
-    return {"version": 1, "partitions": {}, "exemplars": {}}
-
-
-def _write_scan_cache(cache_path: str, cache: dict) -> None:
-    import os
-
-    tmp = f"{cache_path}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(cache, fh)
-    os.replace(tmp, cache_path)
-
-
-def _cached_distinct_arrow_schemas(path: str, cache_path: str) -> list:
-    """One exemplar pyarrow schema per DISTINCT footer schema, in
-    first-seen sorted-file order — the unify path's input — served from
-    the per-partition cache: unchanged partitions contribute their cached
-    arrow-IPC exemplars without a single footer read; mutated partitions
-    re-read only their own files. Shares the cache FILE (separate
-    ``arrow_*`` sections) and the listing fingerprints with
-    incremental_drift_scan; either writer preserves the other's payload."""
-    import base64
-    import hashlib
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files, root, by_part, lfp_by_part = _partition_listing(path)
-    cache = _load_scan_cache(cache_path, root=root)
-    if cache.pop("_reset_from_root", None) is not None:
-        import warnings
-
-        warnings.warn(
-            f"scan cache {cache_path!r} was written for a different dataset "
-            f"root and was discarded (full footer rescan); alternating two "
-            "datasets through one cache file resets it on every run — use "
-            "one cache file per dataset",
-            stacklevel=2,
-        )
-    cached_parts = cache.get("arrow_partitions", {})
-    cached_ex = cache.get("arrow_exemplars", {})
-    new_parts: dict[str, dict] = {}
-    to_read: list[tuple[str, str]] = []
-    for part in sorted(by_part):
-        lfp = lfp_by_part[part]
-        entry = cached_parts.get(part)
-        usable = (
-            entry is not None
-            and entry.get("listing_fp") == lfp
-            and set(entry.get("files", {})) == {rel for rel, _ in by_part[part]}
-            and all(fp in cached_ex for fp in entry["files"].values())
-        )
-        if usable:
-            new_parts[part] = entry
-        else:
-            to_read.extend(by_part[part])
-            new_parts[part] = {"listing_fp": lfp, "files": {}}
-
-    fresh_ex: dict[str, str] = {}
-    for rel, f in to_read:
-        ipc = pq.read_schema(f).serialize().to_pybytes()
-        fp = hashlib.md5(ipc).hexdigest()
-        part = os.path.dirname(rel) or "."
-        new_parts[part]["files"][rel] = fp
-        fresh_ex.setdefault(fp, base64.b64encode(ipc).decode("ascii"))
-
-    fp_by_rel: dict[str, str] = {}
-    for entry in new_parts.values():
-        fp_by_rel.update(entry["files"])
-    used = set(fp_by_rel.values())
-    exemplars = {
-        fp: b
-        for fp, b in {**cached_ex, **fresh_ex}.items()
-        if fp in used
-    }
-    _write_scan_cache(
-        cache_path,
-        {
-            **cache,
-            "version": 1,
-            "root": root,
-            "arrow_partitions": new_parts,
-            "arrow_exemplars": exemplars,
-        },
-    )
-    out: list = []
-    seen: set[str] = set()
-    for f in files:
-        fp = fp_by_rel[os.path.relpath(f, root)]
-        if fp not in seen:
-            seen.add(fp)
-            out.append(
-                pa.ipc.read_schema(
-                    pa.BufferReader(base64.b64decode(exemplars[fp]))
-                )
-            )
-    return out
 
 
 def _render_column_type(

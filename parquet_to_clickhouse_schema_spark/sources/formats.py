@@ -547,10 +547,9 @@ def export_dataset_for_clickhouse(
 
     One distributed read → one distributed TSV write; discovery is one
     driver-side directory listing. Returns the DDL string."""
-    from parquet_to_clickhouse_schema_spark.ddl import _hive_partition_scan
+    from parquet_to_clickhouse_schema_spark.ddl import _scan_dataset
 
-    scan = _hive_partition_scan(parquet_path)
-    part_cols = list(scan[0]) if scan else []
+    part_cols = _scan_dataset(parquet_path).keys
     df = spark.read.parquet(parquet_path)
     return export_for_clickhouse(
         df,

@@ -1836,13 +1836,14 @@ def test_cli_drift_report_with_cache(tmp_path, capsys):
 
 
 def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
-    """r14: the strict CREATE path's drift gate accepts the incremental
-    cache — the second DDL generation on an unchanged dataset reads ZERO
-    footers for the drift check, and a drifted partition added later still
-    raises SchemaDriftError through the cached path."""
+    """r14: the strict CREATE path accepts the incremental cache — the
+    second DDL generation on an unchanged dataset reads ZERO footers in
+    total (physical-type check, drift gate and schema alike), and a drifted
+    partition added later still raises SchemaDriftError through the cached
+    path."""
     import pyarrow as pa
+    import pyarrow.parquet as _pq
 
-    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.ddl import SchemaDriftError
 
     d = tmp_path / "t.parquet"
@@ -1855,13 +1856,12 @@ def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
     out1 = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
     assert "partition by (year)" in out1
 
-    # second run: the drift gate must not re-read any footer. The
-    # physical-type scan (_strict_physical_violations) reads footers for
-    # its own INT96/FLBA evidence, so count only the drift gate's reads.
+    # second run: no footer is read at all — the cached exemplars carry
+    # the physical-type evidence as well as the schemas
     reads = []
-    real = ddl_mod._read_footer_schema_json
+    real = _pq.read_metadata
     monkeypatch.setattr(
-        ddl_mod, "_read_footer_schema_json", lambda f: (reads.append(f), real(f))[1]
+        _pq, "read_metadata", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1]
     )
     out2 = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
     assert out2 == out1
@@ -1911,14 +1911,15 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     """r14: the --unify promotion scan accepts the shared drift cache —
     the second unify on an unchanged tree reads ZERO footers, a mutated
     partition re-reads only itself, the promoted schema is identical to
-    the uncached path, and the drift/unify payloads coexist in ONE cache
-    file without clobbering each other."""
+    the uncached path, and drift, unify and strict calls interleaved on
+    ONE cache file all stay at zero footer reads."""
     import json as _json
 
     import pyarrow as pa
     import pyarrow.parquet as _pq
 
     from parquet_to_clickhouse_schema_spark.ddl import (
+        SchemaDriftError,
         incremental_drift_scan,
         unified_parquet_schema,
     )
@@ -1937,16 +1938,22 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     got1 = unified_parquet_schema(str(d), drift_cache=cache)
     assert got1.simpleString() == expected.simpleString()
 
-    # drift scan shares the file; its write must preserve the arrow payload
-    incremental_drift_scan(str(d), cache)
-    blob = _json.loads((tmp_path / "cache.json").read_text())
-    assert "arrow_partitions" in blob and "partitions" in blob
-
     reads = []
-    real = _pq.read_schema
-    monkeypatch.setattr(_pq, "read_schema", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1])
-    got2 = unified_parquet_schema(str(d), drift_cache=cache)
-    assert got2.simpleString() == expected.simpleString()
+    real = _pq.read_metadata
+    monkeypatch.setattr(
+        _pq, "read_metadata", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1]
+    )
+    # drift, strict and unify calls interleaved on the one cache file are
+    # each served from it entirely (the strict gate refuses the drifted
+    # tree from the cached exemplars alone)
+    for _ in range(2):
+        assert incremental_drift_scan(str(d), cache)["footers_read"] == 0
+        with pytest.raises(SchemaDriftError):
+            schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
+        got2 = unified_parquet_schema(str(d), drift_cache=cache)
+        assert got2.simpleString() == expected.simpleString()
+        ddl2 = schema_to_clickhouse(str(d), "t", "id", unify=True, drift_cache=cache)
+        assert "id Int64\n" in ddl2
     assert reads == []  # steady state: zero footer reads
 
     # mutate one partition: only it re-reads; result still matches uncached
@@ -1980,3 +1987,96 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     assert any("different dataset root" in str(w.message) for w in caught)
     blob2 = _json.loads((tmp_path / "cache.json").read_text())
     assert "_reset_from_root" not in blob2
+
+
+def test_hidden_paths_are_not_fragments(tmp_path):
+    """Spark's hidden-path rule: a `_temporary/` attempt directory (no `=`)
+    and dot-files are not part of the dataset, so a conflicting footer
+    left there by an unfinished write neither trips the strict drift gate
+    nor counts as a ragged hive branch."""
+    import pyarrow as pa
+
+    d = tmp_path / "t.parquet"
+    (d / "dt=1").mkdir(parents=True)
+    _write_fragment(d / "dt=1", "part-0.parquet", {"id": pa.array([1], pa.int64())})
+    clean = schema_to_clickhouse(str(d), "t", "id")
+
+    (d / "_temporary" / "0").mkdir(parents=True)
+    _write_fragment(d / "_temporary" / "0", "part-0.parquet", {"id": pa.array(["x"])})
+    _write_fragment(d / "dt=1", ".part-1.parquet", {"id": pa.array(["x"])})
+    (d / "_SUCCESS").write_bytes(b"")
+    ddl = schema_to_clickhouse(str(d), "t", "id")
+    assert ddl == clean
+    assert "WARNING" not in ddl
+
+
+def test_unreadable_footer_fails_strict_naming_the_file(tmp_path):
+    """A part-file whose footer cannot be read fails strict DDL with an
+    error that names the file and chains pyarrow's error — cold, and with
+    a warm drift cache that the broken file was added behind."""
+    import pyarrow as pa
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    _write_fragment(d, "a.parquet", {"id": pa.array([1], pa.int64())})
+    cache = str(tmp_path / "cache.json")
+    schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)  # warm it
+    (d / "b.parquet").write_bytes(b"not a parquet file")
+    for drift_cache in (None, cache):
+        with pytest.raises(pa.ArrowInvalid) as exc:
+            schema_to_clickhouse(str(d), "t", "id", drift_cache=drift_cache)
+        assert str(d / "b.parquet") in str(exc.value)
+        assert isinstance(exc.value.__cause__, pa.ArrowInvalid)
+
+
+def test_lenient_ddl_describes_the_drift_reference_fragment(tmp_path):
+    """One fragment order for everything: `k=a-b/` sorts before `k=a/` by
+    full relative path, and the lenient DDL's columns come from the very
+    fragment the drift report names as its reference."""
+    import pyarrow as pa
+
+    from parquet_to_clickhouse_schema_spark.ddl import schema_drift_report
+
+    d = tmp_path / "t.parquet"
+    for part, typ in (("k=a", pa.int32()), ("k=a-b", pa.int64())):
+        (d / part).mkdir(parents=True)
+        _write_fragment(d / part, "part-0.parquet", {"id": pa.array([1], typ)})
+
+    report = schema_drift_report(str(d))
+    assert len(report) == 1
+    ref = report[0]["reference_file"]
+    ref_id_line = schema_to_clickhouse(ref, "t", "x", strict=False).splitlines()[2]
+    ddl = schema_to_clickhouse(str(d), "t", "x", strict=False)
+    assert ref_id_line in ddl.splitlines()
+    assert ref_id_line == "    id Nullable(Int64)"
+
+
+def test_pandas_metadata_does_not_split_cached_exemplars(tmp_path):
+    """Footers that differ only in schema-level writer metadata (pandas
+    records each file's row count) share ONE exemplar in the scan cache,
+    whichever scan writes it."""
+    import json as _json
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        incremental_drift_scan,
+        unified_parquet_schema,
+    )
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    for i, n in enumerate((2, 5)):
+        table = pa.Table.from_pandas(pd.DataFrame({"id": range(n)}))
+        pq.write_table(table, str(d / f"part-{i}.parquet"))
+    assert pq.read_schema(str(d / "part-0.parquet")).metadata != pq.read_schema(
+        str(d / "part-1.parquet")
+    ).metadata
+    cache = tmp_path / "cache.json"
+
+    unified_parquet_schema(str(d), drift_cache=str(cache))
+    assert len(_json.loads(cache.read_text())["exemplars"]) == 1
+    assert incremental_drift_scan(str(d), str(cache))["report"] == []
+    assert len(_json.loads(cache.read_text())["exemplars"]) == 1
