@@ -735,7 +735,7 @@ def hive_partition_fields(
     return scan.partition_fields(set(footer_names))
 
 
-def infer_parquet_schema(path: str, spark: SparkSession | None = None) -> T.StructType:
+def infer_parquet_schema(path: str) -> T.StructType:
     """Footer-only schema inference (no data pages, no Spark job).
 
     pyarrow reads the first fragment's footer on the driver and the arrow
@@ -744,7 +744,7 @@ def infer_parquet_schema(path: str, spark: SparkSession | None = None) -> T.Stru
     TIMESTAMP(NANOS), which Spark's own reader rejects. Hive-layout
     directories get their ``key=value`` partition columns appended (typed
     by discovery — see hive_partition_fields), matching what Spark's own
-    reader would report for the same directory. ``spark`` is unused."""
+    reader would report for the same directory."""
     return _scan_dataset(path).schema()
 
 
@@ -861,11 +861,7 @@ def struct_to_spark_ddl(schema: T.StructType, table_name: str, location: str | N
     return f"CREATE TABLE {table_name} (\n{cols}\n) USING parquet{loc};\n"
 
 
-def schema_diff(
-    old_path: str,
-    new_path: str,
-    spark: SparkSession | None = None,
-) -> list[dict]:
+def schema_diff(old_path: str, new_path: str) -> list[dict]:
     """Schema-drift report between two Parquet datasets (footer-only, no
     data pages — same metadata discipline as schema_to_clickhouse): one
     entry per added / removed / retyped / renullabled column, recursing
@@ -880,8 +876,8 @@ def schema_diff(
       nullability_changed      — same path+type, different nullability
     Returns [] when the schemas match.
     """
-    old_schema = infer_parquet_schema(old_path, spark)
-    new_schema = infer_parquet_schema(new_path, spark)
+    old_schema = infer_parquet_schema(old_path)
+    new_schema = infer_parquet_schema(new_path)
     return _schema_changes(old_schema, new_schema)
 
 
@@ -1095,7 +1091,6 @@ def schema_diff_to_clickhouse_alter(
     table_name: str,
     primary_key: str | Iterable[str] | None = None,
     strict: bool = True,
-    spark: SparkSession | None = None,
     out_path: str | None = None,
 ) -> str:
     """Footer-to-footer schema evolution as executable ClickHouse DDL: the
@@ -1135,8 +1130,10 @@ def schema_diff_to_clickhouse_alter(
         pks = {primary_key}
     else:
         pks = set(primary_key)
-    old_schema = infer_parquet_schema(old_path, spark)
-    new_schema = infer_parquet_schema(new_path, spark)
+    # one scan per side: the schema and the hive keys come from the same
+    # walk and the same first-fragment footer
+    old_scan, new_scan = _scan_dataset(old_path), _scan_dataset(new_path)
+    old_schema, new_schema = old_scan.schema(), new_scan.schema()
     old_top = {f.name: f for f in old_schema.fields}
     new_top = {f.name: f for f in new_schema.fields}
     # hive directory columns are the CREATE path's `partition by` keys —
@@ -1146,8 +1143,12 @@ def schema_diff_to_clickhouse_alter(
     # between the two datasets (promoted or demoted) is refused outright
     # even when its type is stable (r16 — `partition by` itself cannot be
     # edited by ALTER in either direction).
-    old_part = {f.name for f in hive_partition_fields(old_path)}
-    new_part = {f.name for f in hive_partition_fields(new_path)}
+    old_part = {
+        f.name for f in old_scan.partition_fields(old_scan.first_footer().names)
+    }
+    new_part = {
+        f.name for f in new_scan.partition_fields(new_scan.first_footer().names)
+    }
     part_cols = old_part | new_part
 
     def render(f: T.StructField) -> str:

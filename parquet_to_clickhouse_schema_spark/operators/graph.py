@@ -140,7 +140,9 @@ def dedup_clusters(spark, sf_dir: str, threshold: float = 0.5) -> DataFrame:
     representative per cluster (min doc_id). `jaccard` is the EXACT
     shingle-set Jaccard since the r9 verification promotion (was the
     minhash estimate)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_near_dedup_minhash
+    from parquet_to_clickhouse_schema_spark.operators.llm_dedup import (
+        q_near_dedup_minhash,
+    )
 
     pairs = q_near_dedup_minhash(spark, sf_dir).filter(
         F.col("jaccard") >= threshold

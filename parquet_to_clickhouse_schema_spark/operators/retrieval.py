@@ -21,17 +21,17 @@ from pyspark.sql import functions as F
 
 from parquet_to_clickhouse_schema_spark._registry import new_registry
 from parquet_to_clickhouse_schema_spark.functions.compat import qround, sql_qround
-from parquet_to_clickhouse_schema_spark.functions.text import (
+from parquet_to_clickhouse_schema_spark.functions.text_core import (
     BM25_B,
     BM25_K1,
     BM25_TERMS,
 )
-from parquet_to_clickhouse_schema_spark.operators.llm import (
+from parquet_to_clickhouse_schema_spark.operators.llm_ann import (
     ANN_V_DIM,
-    KMV_K,
     _IVF_GRID_SQL,
     _md5_unit_grid,
 )
+from parquet_to_clickhouse_schema_spark.operators.llm_cluster import KMV_K
 from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
 QUERIES, ORACLES, _q = new_registry()

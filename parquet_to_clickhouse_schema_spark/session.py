@@ -55,6 +55,13 @@ _TUNED_CONFS: dict[str, str] = {
 }
 
 
+# Confs that decide query results, not just speed: a session that refuses
+# them would return wrong timestamps silently, so tune() raises instead.
+_SEMANTIC_CONFS = frozenset(
+    {"spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"}
+)
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -70,7 +77,11 @@ def tune(spark: SparkSession) -> SparkSession:
     autoBroadcastJoinThreshold=-1 to exercise a shuffle join, or an
     operator temporarily lowering a threshold. The marker conf records
     that this session already received the engine defaults; later calls
-    are no-ops and user overrides stick."""
+    are no-ops and user overrides stick.
+
+    A conf that decides results (``_SEMANTIC_CONFS``) must take: if the
+    session refuses it, tune() raises naming the conf. Performance confs
+    that a read-only deployment refuses are skipped."""
     try:
         if spark.conf.get(_TUNED_MARKER, None) == "1":
             return spark
@@ -88,8 +99,13 @@ def tune(spark: SparkSession) -> SparkSession:
                 elif existing:
                     v = existing
             spark.conf.set(k, v)
-        except Exception:
-            pass  # read-only in some deployments; engine still works
+        except Exception as e:
+            # a performance conf may be read-only in some deployments; the
+            # engine still works without it
+            if k in _SEMANTIC_CONFS:
+                raise RuntimeError(
+                    f"cannot set {k}={v} on this session; query results depend on it"
+                ) from e
     try:
         if int(spark.conf.get("spark.sql.shuffle.partitions")) > 4 * default_parallelism():
             spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
@@ -111,7 +127,6 @@ def get_spark(app_name: str = "parquet_to_clickhouse_schema_spark") -> SparkSess
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
     )
     for k, v in _TUNED_CONFS.items():
         builder = builder.config(k, v)

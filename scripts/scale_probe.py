@@ -22,160 +22,122 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from parquet_to_clickhouse_schema_spark.operators import aggregation, relational, sortset, windows
+from parquet_to_clickhouse_schema_spark import registry
 from parquet_to_clickhouse_schema_spark.session import get_spark
 from parquet_to_clickhouse_schema_spark.sources.io import TABLES, load_table
 
 BASE_SF = "/root/testdata/sf0.1"
 SCALED_ROOT = "/tmp/spark_graft_scale_v2"  # v2: events now scale too
 
-QUERIES = {
-    "q_agg_hash": aggregation.q_agg_hash,
-    "q_join_sortmerge": relational.q_join_sortmerge,
-    "q_join_multiway": relational.q_join_multiway,
-    "q_window_rank": windows.q_window_rank,
-    "q_window_rank_scalable": windows.q_window_rank_scalable,
-    "q_topk": sortset.q_topk,
-}
+# Key families probed, resolved through registry.all_queries().
+QUERIES = (
+    "q_agg_hash",
+    "q_join_sortmerge",
+    "q_join_multiway",
+    "q_window_rank",
+    "q_window_rank_scalable",
+    "q_topk",
+)
 
+LLM_QUERIES = (
+    # round-5 additions. q_fuzzy_pairs is deliberately NOT probed: the
+    # k-replica corpus gives every doc k exact copies, so its OUTPUT
+    # (all pairs within edit distance 3) grows ~k² by construction
+    # (~22M qualifying pairs at k=10) — the probe would measure the
+    # dataset's quadratic pair count, not the plan. Its scale evidence
+    # is the lossless-blocking equality test plus the measured 82s→22s
+    # prefix-filter win at sf0.1.
+    "q_bm25_score",
+    "q_epoch_shuffle",
+    "q_pack_sequences",
+    "q_dedup_exact",
+    "q_near_dedup_minhash",
+    "q_dedup_ngram",
+    "q_dedup_simhash",
+    "q_cosine_topk",
+    "q_dedup_embedding",
+    "q_text_stats",
+    "q_doc_fingerprint",
+    # the sub-quadratic ANN escape hatches for the two O(n²) exact ops
+    "q_ann_lsh_topk",
+    "q_ivf_topk",
+    "q_pq_topk",
+)
 
-def _llm_queries():
-    from parquet_to_clickhouse_schema_spark.operators import llm, training
-    from parquet_to_clickhouse_schema_spark.functions import text
+R6_QUERIES = (
+    # round-6 additions. q_interp_linear is grid-bounded (O(hours x
+    # types) regardless of fact size) so a fact-scale probe is
+    # uninformative; q_bigram_pmi/q_bpe_pairs outputs are fixed top-k.
+    "q_dq_checks",
+    "q_unigram_nll",
+    "q_bigram_pmi",
+    "q_bpe_pairs",
+    "q_source_entropy",
+    "q_cdc_apply",
+    "q_event_transitions",
+    "q_embed_outliers",
+    "q_mode_agg",
+    "q_mad_robust",
+)
 
-    return {
-        # round-5 additions. q_fuzzy_pairs is deliberately NOT probed: the
-        # k-replica corpus gives every doc k exact copies, so its OUTPUT
-        # (all pairs within edit distance 3) grows ~k² by construction
-        # (~22M qualifying pairs at k=10) — the probe would measure the
-        # dataset's quadratic pair count, not the plan. Its scale evidence
-        # is the lossless-blocking equality test plus the measured 82s→22s
-        # prefix-filter win at sf0.1.
-        "q_bm25_score": text.q_bm25_score,
-        "q_epoch_shuffle": training.q_epoch_shuffle,
-        "q_pack_sequences": training.q_pack_sequences,
-        "q_dedup_exact": llm.q_dedup_exact,
-        "q_near_dedup_minhash": llm.q_near_dedup_minhash,
-        "q_dedup_ngram": llm.q_dedup_ngram,
-        "q_dedup_simhash": llm.q_dedup_simhash,
-        "q_cosine_topk": llm.q_cosine_topk,
-        "q_dedup_embedding": llm.q_dedup_embedding,
-        "q_text_stats": llm.q_text_stats,
-        "q_doc_fingerprint": text.q_doc_fingerprint,
-        # the sub-quadratic ANN escape hatches for the two O(n²) exact ops
-        "q_ann_lsh_topk": llm.q_ann_lsh_topk,
-        "q_ivf_topk": llm.q_ivf_topk,
-        "q_pq_topk": llm.q_pq_topk,
-    }
+R7_QUERIES = (
+    # round-7 additions. q_recursive_cte is spine-bounded (80 rows at
+    # any fact scale) and q_order_nulls is a TakeOrdered scan — probing
+    # them measures the scan, not a plan risk. The report shapes ride
+    # lineitem/orders; the stream ops ride the scaled-users events
+    # axis; the corpus ops ride documents.
+    "q_report_volume_shipping",
+    "q_report_market_share",
+    "q_report_ship_priority",
+    "q_report_top_supplier",
+    "q_report_part_supp_count",
+    "q_report_min_cost_supplier",
+    "q_report_waiting_suppliers",
+    "q_report_idle_customers",
+    "q_distinct_on",
+    "q_acf",
+    "q_cusum",
+    "q_oov_rate",
+    "q_freq_topk_sketch",
+    "q_contamination_score",
+    "q_curriculum_order",
+    "q_incremental_dedup",
+    "q_stream_enrich",
+    "q_window_time_range",
+    "q_time_rollup",
+)
 
-
-def _r6_queries():
-    from parquet_to_clickhouse_schema_spark.functions import text
-    from parquet_to_clickhouse_schema_spark.operators import aggregation, dq, llm, merge
-    from parquet_to_clickhouse_schema_spark.streaming import batch_twins
-
-    return {
-        # round-6 additions. q_interp_linear is grid-bounded (O(hours x
-        # types) regardless of fact size) so a fact-scale probe is
-        # uninformative; q_bigram_pmi/q_bpe_pairs outputs are fixed top-k.
-        "q_dq_checks": dq.q_dq_checks,
-        "q_unigram_nll": text.q_unigram_nll,
-        "q_bigram_pmi": text.q_bigram_pmi,
-        "q_bpe_pairs": text.q_bpe_pairs,
-        "q_source_entropy": text.q_source_entropy,
-        "q_cdc_apply": merge.q_cdc_apply,
-        "q_event_transitions": batch_twins.q_event_transitions,
-        "q_embed_outliers": llm.q_embed_outliers,
-        "q_mode_agg": aggregation.q_mode_agg,
-        "q_mad_robust": aggregation.q_mad_robust,
-    }
-
-
-def _r7_queries():
-    from parquet_to_clickhouse_schema_spark.functions import text
-    from parquet_to_clickhouse_schema_spark.operators import (
-        reports,
-        sqlfeatures,
-        timeseries,
-        training,
-    )
-    from parquet_to_clickhouse_schema_spark.streaming import batch_twins
-
-    return {
-        # round-7 additions. q_recursive_cte is spine-bounded (80 rows at
-        # any fact scale) and q_order_nulls is a TakeOrdered scan — probing
-        # them measures the scan, not a plan risk. The report shapes ride
-        # lineitem/orders; the stream ops ride the scaled-users events
-        # axis; the corpus ops ride documents.
-        "q_report_volume_shipping": reports.q_report_volume_shipping,
-        "q_report_market_share": reports.q_report_market_share,
-        "q_report_ship_priority": reports.q_report_ship_priority,
-        "q_report_top_supplier": reports.q_report_top_supplier,
-        "q_report_part_supp_count": reports.q_report_part_supp_count,
-        "q_report_min_cost_supplier": reports.q_report_min_cost_supplier,
-        "q_report_waiting_suppliers": reports.q_report_waiting_suppliers,
-        "q_report_idle_customers": reports.q_report_idle_customers,
-        "q_distinct_on": sqlfeatures.q_distinct_on,
-        "q_acf": timeseries.q_acf,
-        "q_cusum": timeseries.q_cusum,
-        "q_oov_rate": text.q_oov_rate,
-        "q_freq_topk_sketch": text.q_freq_topk_sketch,
-        "q_contamination_score": training.q_contamination_score,
-        "q_curriculum_order": training.q_curriculum_order,
-        "q_incremental_dedup": training.q_incremental_dedup,
-        "q_stream_enrich": batch_twins.q_stream_enrich,
-        "q_window_time_range": batch_twins.q_window_time_range,
-        "q_time_rollup": batch_twins.q_time_rollup,
-    }
-
-
-def _r7b_queries():
-    from parquet_to_clickhouse_schema_spark.functions import text
-    from parquet_to_clickhouse_schema_spark.operators import (
-        aggregation,
-        dq,
-        graph,
-        llm,
-        merge,
-        reports,
-        sqlfeatures,
-        timeseries,
-        training,
-        udfs,
-    )
-    from parquet_to_clickhouse_schema_spark.streaming import batch_twins
-
-    return {
-        # round-7 second batch. q_benford/q_moving_median/q_chi_square are
-        # aggregate-first like q_cusum (fact collapses to a calendar/digit
-        # bounded table); included to confirm, not because risk is likely.
-        "q_moving_median": aggregation.q_moving_median,
-        "q_benford": aggregation.q_benford,
-        "q_skyline": sqlfeatures.q_skyline,
-        "q_limit_offset": sqlfeatures.q_limit_offset,
-        "q_chi_square": timeseries.q_chi_square,
-        "q_table_checksum": dq.q_table_checksum,
-        "q_image_decode": llm.q_image_decode,
-        "q_audio_decode": llm.q_audio_decode,
-        "q_video_frames": llm.q_video_frames,
-        "q_copurchase_pairs": graph.q_copurchase_pairs,
-        "q_audience_overlap": graph.q_audience_overlap,
-        "q_incremental_agg": merge.q_incremental_agg,
-        "q_udf_arrow": udfs.q_udf_arrow,
-        "q_oov_rate": text.q_oov_rate,  # re-probe: vocab K changed to 20
-        "q_report_important_stock": reports.q_report_important_stock,
-        "q_report_excess_supply": reports.q_report_excess_supply,
-        "q_mix_temperature": training.q_mix_temperature,
-        "q_funnel_time": reports.q_funnel_time,
-        "q_ship_latency": reports.q_ship_latency,
-        "q_cohort_ltv": reports.q_cohort_ltv,
-        "q_spend_alerts": batch_twins.q_spend_alerts,
-        "q_seasonal_decompose": timeseries.q_seasonal_decompose,
-        "q_rolling_corr": timeseries.q_rolling_corr,
-        "q_lang_confusion": text.q_lang_confusion,
-        "q_filter_sweep": text.q_filter_sweep,
-        "q_bootstrap_ci": aggregation.q_bootstrap_ci,
-    }
+R7B_QUERIES = (
+    # round-7 second batch. q_benford/q_moving_median/q_chi_square are
+    # aggregate-first like q_cusum (fact collapses to a calendar/digit
+    # bounded table); included to confirm, not because risk is likely.
+    "q_moving_median",
+    "q_benford",
+    "q_skyline",
+    "q_limit_offset",
+    "q_chi_square",
+    "q_table_checksum",
+    "q_image_decode",
+    "q_audio_decode",
+    "q_video_frames",
+    "q_copurchase_pairs",
+    "q_audience_overlap",
+    "q_incremental_agg",
+    "q_udf_arrow",
+    "q_oov_rate",  # re-probe: vocab K changed to 20
+    "q_report_important_stock",
+    "q_report_excess_supply",
+    "q_mix_temperature",
+    "q_funnel_time",
+    "q_ship_latency",
+    "q_cohort_ltv",
+    "q_spend_alerts",
+    "q_seasonal_decompose",
+    "q_rolling_corr",
+    "q_lang_confusion",
+    "q_filter_sweep",
+    "q_bootstrap_ci",
+)
 
 
 KEY_SHIFT = 10_000_000_000
@@ -250,26 +212,22 @@ def main() -> None:
     spark = get_spark("scale_probe")
     scaled = build_scaled(spark, k)
 
-    queries = dict(QUERIES)
+    keys = QUERIES
     if "--llm" in sys.argv:
-        queries = _llm_queries()
+        keys = LLM_QUERIES
     if "--r6" in sys.argv:
-        queries = _r6_queries()
+        keys = R6_QUERIES
     if "--r7" in sys.argv:
-        queries = _r7_queries()
+        keys = R7_QUERIES
     if "--r7b" in sys.argv:
-        queries = _r7b_queries()
+        keys = R7B_QUERIES
     for a in sys.argv[1:]:
-        # --keys=q_a,q_b: probe a named subset (union of all known sets
-        # plus anything registered) — for re-probing changed operators
+        # --keys=q_a,q_b: probe a named subset of the registry — for
+        # re-probing changed operators
         if a.startswith("--keys="):
-            from parquet_to_clickhouse_schema_spark import registry
-
-            pool = dict(QUERIES)
-            for f in (_llm_queries, _r6_queries, _r7_queries, _r7b_queries):
-                pool.update(f())
-            pool.update(registry.all_queries())
-            queries = {k: pool[k] for k in a[len("--keys="):].split(",")}
+            keys = a[len("--keys="):].split(",")
+    registered = registry.all_queries()
+    queries = {name: registered[name] for name in keys}
 
     results = {}
     for name, fn in queries.items():

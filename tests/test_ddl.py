@@ -1409,6 +1409,44 @@ def test_alter_refused_column_gets_no_move(tmp_path):
     assert "-- (refused column region sits at `after id`" in ddl
 
 
+def test_alter_scans_each_side_once(tmp_path, monkeypatch):
+    """The ALTER takes each side's schema and its hive partition keys from
+    one dataset scan: one directory walk and one footer read per side."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as _pq
+
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        schema_diff_to_clickhouse_alter,
+    )
+
+    sides = {}
+    for side, cols in (("old", {"id": pa.array([1], pa.int64())}),
+                       ("new", {"id": pa.array([1], pa.int64()),
+                                "v": pa.array([1.0])})):
+        d = tmp_path / f"{side}.parquet"
+        for year in (2024, 2025):
+            (d / f"year={year}").mkdir(parents=True)
+            _write_fragment(d / f"year={year}", "part-000.parquet", cols)
+        sides[side] = str(d)
+
+    walks, reads = [], []
+    real_walk, real_read = os.walk, _pq.read_metadata
+    monkeypatch.setattr(
+        os, "walk", lambda p, *a, **kw: (walks.append(p), real_walk(p, *a, **kw))[1]
+    )
+    monkeypatch.setattr(
+        _pq, "read_metadata",
+        lambda f, **kw: (reads.append(str(f)), real_read(f, **kw))[1],
+    )
+    ddl = schema_diff_to_clickhouse_alter(sides["old"], sides["new"], "t",
+                                          primary_key="id")
+    assert "add column v Nullable(Float64) after id" in ddl
+    assert sorted(walks) == [sides["new"], sides["old"]]
+    assert len(reads) == 2
+
+
 def test_unified_schema_promotes_map_values(tmp_path):
     """Map value types widen through --unify too (int32+int64 value →
     Map(String, Int64)) — the container family test_unified_schema_nested

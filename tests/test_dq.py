@@ -4,9 +4,13 @@ stay silent (violations=0, but still one row) on clean data."""
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_to_clickhouse_schema_spark import registry
 from parquet_to_clickhouse_schema_spark.operators import dq
+from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
 from .conftest import SF_SMOKE
+
+Q = registry.all_queries()
 
 
 def _rows(df):
@@ -142,3 +146,79 @@ def test_delete_propagation_cascade_is_closed(spark):
     assert rows["orders"].n_subjects <= DEL_N
     assert rows["lineitem"].n_subjects <= rows["orders"].n_subjects
     assert rows["lineitem"].n_rows >= rows["orders"].n_rows  # >=1 line/order
+
+
+def test_srm_check_counts_users_once_and_flags_consistently(spark):
+    """Group sizes partition the distinct-user universe, the chi-square is
+    the literal 2(n_a-E)^2/E, and the flag agrees with the statistic."""
+    from parquet_to_clickhouse_schema_spark.operators.dq import SRM_CRIT
+
+    [r] = Q["q_ab_srm_check"](spark, SF_SMOKE).collect()
+    n_users = (
+        load_table(spark, SF_SMOKE, "events").select("user_id").distinct().count()
+    )
+    assert r.n_a + r.n_b == n_users
+    e = (r.n_a + r.n_b) / 2.0
+    assert abs(r.srm_chi2 - 2 * (r.n_a - e) ** 2 / e) < 2e-6
+    assert r.srm_flag == int(2 * (r.n_a - e) ** 2 / e > SRM_CRIT)
+
+
+def test_bloom_plan_matches_textbook_formulas(spark):
+    """k and FPR must equal the textbook bloom formulas for the exact
+    distinct counts, and FPR must decrease as n decreases at fixed m."""
+    import math
+
+    from parquet_to_clickhouse_schema_spark.operators.dq import BLOOM_BITS
+
+    rows = {(r.tbl, r.key_col): r for r in Q["q_bloom_fpr_plan"](spark, SF_SMOKE).collect()}
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    n_ok = li.select("l_orderkey").distinct().count()
+    r = rows[("lineitem", "l_orderkey")]
+    assert r.n_distinct == n_ok
+    k = max(int(BLOOM_BITS / n_ok * math.log(2) + 0.5), 1)
+    assert r.k_opt == k
+    fpr = (1 - math.exp(-k * n_ok / BLOOM_BITS)) ** k
+    assert abs(r.fpr - fpr) < 2e-8
+    assert len(rows) == 4 and all(x.fpr >= 0 for x in rows.values())
+
+
+def test_power_analysis_is_monotone_in_mde(spark):
+    """Smaller detectable effects need more samples (n ∝ 1/δ²), the
+    baseline matches the corpus conversion rate, and feasibility is
+    consistent with the user count."""
+    rows = sorted(Q["q_power_analysis"](spark, SF_SMOKE).collect(), key=lambda r: r.mde)
+    ns = [r.n_per_arm for r in rows]
+    assert ns == sorted(ns, reverse=True)
+    ev = load_table(spark, SF_SMOKE, "events")
+    n_users = ev.select("user_id").distinct().count()
+    for r in rows:
+        assert 0.0 <= r.baseline_rate <= 1.0
+        assert r.feasible_now == int(2 * r.n_per_arm <= n_users)
+
+
+def test_table_checksum_invariant_under_row_order(spark):
+    """The checksum must be a pure content function: reshuffling rows and
+    repartitioning cannot change it; flipping one cent in one row must."""
+    import tempfile
+
+    base = load_table(spark, SF_SMOKE, "orders")
+    with tempfile.TemporaryDirectory() as tmp:
+        # same content, different physical order + partitioning
+        base.orderBy(F.rand(7)).repartition(13).write.parquet(
+            f"{tmp}/orders.parquet"
+        )
+        shuffled = Q["q_table_checksum"](spark, tmp).first()
+    orig = Q["q_table_checksum"](spark, SF_SMOKE).first()
+    assert (orig.n_rows, orig.checksum) == (shuffled.n_rows, shuffled.checksum)
+
+    with tempfile.TemporaryDirectory() as tmp:
+        tampered = base.withColumn(
+            "o_totalprice",
+            F.when(F.col("o_orderkey") == 1, F.col("o_totalprice") + 0.01).otherwise(
+                F.col("o_totalprice")
+            ),
+        )
+        tampered.write.parquet(f"{tmp}/orders.parquet")
+        bad = Q["q_table_checksum"](spark, tmp).first()
+    assert bad.checksum != orig.checksum
+    assert bad.n_rows == orig.n_rows

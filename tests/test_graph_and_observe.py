@@ -156,3 +156,30 @@ def test_graph_triangles_on_planted_graph(spark, tmp_path):
     assert r.n_triangles == 1
     assert r.n_wedges == 5
     assert abs(r.clustering_coeff - 0.6) < 1e-6
+
+
+def test_connected_components_old_carry_converges(spark):
+    # a 9-chain plus a separate triangle: labels must reach the chain's
+    # min in ceil(log2(diameter)) pointer-jumping rounds and stop
+    edges = [(i, i + 1) for i in range(10, 19)] + [(1, 2), (2, 3), (1, 3)]
+    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    got = {
+        r.doc_id: r.cluster_id for r in connected_components(df).collect()
+    }
+    assert got == {**{i: 10 for i in range(10, 20)}, **{i: 1 for i in (1, 2, 3)}}
+    # output schema carries no helper columns
+    assert connected_components(df).columns == ["doc_id", "cluster_id"]
+
+
+def test_cc_one_job_per_round_converges_exactly(spark):
+    # 30-node chain bridged into a 5-clique: pointer jumping must close the
+    # chain in O(log n) rounds and every vertex lands on min id 0
+    chain = [(i, i + 1) for i in range(30)]
+    clique = [(100 + a, 100 + b) for a in range(5) for b in range(a + 1, 5)]
+    bridge = [(30, 100)]
+    df = spark.createDataFrame(
+        chain + clique + bridge, "doc_a LONG, doc_b LONG"
+    )
+    got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
+    assert set(got.values()) == {0}
+    assert len(got) == 36

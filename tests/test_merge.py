@@ -4,11 +4,16 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from parquet_to_clickhouse_schema_spark import registry
 from parquet_to_clickhouse_schema_spark.operators.merge import (
     scd2_apply,
     scd2_merge,
     upsert,
 )
+from parquet_to_clickhouse_schema_spark.sources.io import load_table
+from tests.conftest import SF_SMOKE
+
+Q = registry.all_queries()
 
 
 def _t(s):
@@ -65,3 +70,32 @@ def test_scd2_merge_appends_new_version(spark):
     assert current == {1: "v2", 2: "w1"}
     old = out.filter(~F.col("is_current")).collect()
     assert len(old) == 1 and old[0].val == "v1" and old[0].valid_to == _t("2024-06-01")
+
+
+def test_snapshot_diff_is_total_and_consistent(spark):
+    """Every current user is classified exactly once; 'added' users have no
+    pre-cut event; 'unchanged' users' latest event is at or before the cut
+    OR their state coincides."""
+    from parquet_to_clickhouse_schema_spark.operators.merge import SNAP_T1
+
+    rows = {r.user_id: r for r in Q["q_snapshot_diff"](spark, SF_SMOKE).collect()}
+    ev = load_table(spark, SF_SMOKE, "events")
+    assert len(rows) == ev.select("user_id").distinct().count()
+    cut = SNAP_T1
+    pre_users = {
+        r.user_id
+        for r in ev.filter(F.col("ts") <= F.lit(cut).cast("timestamp"))
+        .select("user_id")
+        .distinct()
+        .collect()
+    }
+    for u, r in rows.items():
+        if r.change == "added":
+            assert u not in pre_users and r.old_type is None
+        else:
+            assert u in pre_users and r.old_type is not None
+        if r.change == "unchanged":
+            assert r.old_type == r.new_type
+    # at smoke SF every user stays active past the cut, so 'changed'
+    # dominates; 'unchanged'/'added' appear at larger SFs
+    assert "changed" in {r.change for r in rows.values()}

@@ -1,15 +1,24 @@
 """Multimodal plumbing: mapInPandas decode pipeline — real stdlib codecs
-(PPM/BMP/WAV/PPM-stream) plus the deterministic fake for absent ones."""
+(PPM/BMP/WAV/PPM-stream) plus the deterministic fake for absent ones — and
+the perceptual dedup keys built on it (dHash, audio fingerprint)."""
+
+from collections import Counter
 
 import pytest
 
+from parquet_to_clickhouse_schema_spark import registry
 from parquet_to_clickhouse_schema_spark.operators.multimodal import (
     N_FEAT,
     decode_payload,
     extract_features,
     multimodal_table,
 )
+from parquet_to_clickhouse_schema_spark.sources.io import load_table
 from tests.conftest import SF_SMOKE
+
+Q = registry.all_queries()
+
+_DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 
 def test_unsupported_format_raises_not_implemented():
@@ -310,7 +319,7 @@ def test_png_decode_through_pipeline(spark):
     """q_image_decode_png and q_image_decode see the SAME pixel bytes, so
     their channel means must be identical row-for-row — PNG deflate
     round-trip vs plain PPM passthrough."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_media import (
         q_image_decode,
         q_image_decode_png,
     )
@@ -325,3 +334,176 @@ def test_png_decode_through_pipeline(spark):
     }
     assert png == ppm
     assert len(png) > 0
+
+
+def test_image_dhash_dedup_matches_pure_python(spark):
+    """Per-doc dHash == hashing the first-96-byte pixel grid directly in
+    Python (no numpy, no decoder) — and exact-duplicate texts must land
+    in a shared bucket."""
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "text"
+    ).collect()
+    ref = {}
+    for r in docs:
+        if len(r.text) < 96:
+            continue
+        codes = [ord(c) for c in r.text[:96]]
+        gray = [
+            [sum(codes[(row * 8 + col) * 3 : (row * 8 + col) * 3 + 3])
+             for col in range(8)]
+            for row in range(4)
+        ]
+        h = 0
+        for row in range(4):
+            for col in range(7):
+                if gray[row][col] < gray[row][col + 1]:
+                    h |= 1 << (row * 7 + col)
+        ref[r.doc_id] = h
+    rows = Q["q_image_dhash_dedup"](spark, SF_SMOKE).collect()
+    got = {r.doc_id: r.dhash for r in rows}
+    assert got == ref
+    # bucket sizes are consistent with the hashes
+    sizes = Counter(got.values())
+    for r in rows:
+        assert r.bucket_size == sizes[r.dhash]
+        assert r.is_dup == (sizes[r.dhash] > 1)
+
+
+def test_dhash_brightness_invariance_property():
+    """THE property that makes dHash a perceptual (not cryptographic)
+    signature: a uniform brightness shift adds the same constant to every
+    gray sum, preserving all adjacent-pair orderings — the hash is
+    unchanged. Exercised over hypothesis-generated 8x4 P6 payloads (no
+    Spark needed; dhash_image is the exact kernel the operator ships)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from parquet_to_clickhouse_schema_spark.operators.multimodal import (
+        dhash_image,
+    )
+
+    header = b"P6\n8 4\n255\n"
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        st.lists(st.integers(0, 155), min_size=96, max_size=96),
+        st.integers(1, 100),
+    )
+    def check(pixels, shift):
+        base = header + bytes(pixels)
+        shifted = header + bytes(p + shift for p in pixels)  # never clips
+        assert dhash_image(base) == dhash_image(shifted)
+        assert 0 <= dhash_image(base) < (1 << 28)
+
+    check()
+
+
+def test_audio_fingerprint_matches_pure_python(spark):
+    """Per-doc audio fingerprint == hashing the first-96-byte amplitude
+    stream directly in Python (no numpy, no wave parser)."""
+    docs = load_table(spark, SF_SMOKE, "documents").select(
+        "doc_id", "text"
+    ).collect()
+    ref = {}
+    for r in docs:
+        if len(r.text) < 96:
+            continue
+        amps = [ord(c) - 128 for c in r.text[:96]]
+        e = [sum(a * a for a in amps[f * 4 : f * 4 + 4]) for f in range(24)]
+        h = 0
+        for f in range(23):
+            if e[f] < e[f + 1]:
+                h |= 1 << f
+        ref[r.doc_id] = h
+    rows = Q["q_audio_fingerprint_dedup"](spark, SF_SMOKE).collect()
+    got = {r.doc_id: r.afp for r in rows}
+    assert got == ref
+    sizes = Counter(got.values())
+    for r in rows:
+        assert r.bucket_size == sizes[r.afp]
+        assert r.is_dup == (sizes[r.afp] > 1)
+
+
+def test_audio_fingerprint_gain_invariance_property():
+    """THE property that makes the fingerprint perceptual: uniform gain
+    scales every frame energy by the same factor, preserving all
+    orderings — the fingerprint is unchanged (hypothesis-generated
+    amplitude streams, integer gain, no clipping by construction)."""
+    import struct
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from parquet_to_clickhouse_schema_spark.operators.multimodal import (
+        audio_fingerprint,
+    )
+
+    def wav(amps):
+        hdr = (
+            b"RIFF"
+            + struct.pack("<I", 36 + len(amps))
+            + b"WAVE"
+            + b"fmt "
+            + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
+            + b"data"
+            + struct.pack("<I", len(amps))
+        )
+        return hdr + bytes(a + 128 for a in amps)
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(st.integers(-42, 42), min_size=96, max_size=96),
+           st.integers(2, 3))
+    def check(amps, gain):
+        scaled = [a * gain for a in amps]  # |a*3| <= 126: never clips
+        assert audio_fingerprint(wav(amps)) == audio_fingerprint(wav(scaled))
+        assert 0 <= audio_fingerprint(wav(amps)) < (1 << 23)
+
+    check()
+
+
+@pytest.mark.parametrize(
+    "key", ["q_image_dhash_dedup", "q_audio_fingerprint_dedup"]
+)
+def test_perceptual_dedup_nonascii_fails_loud(spark, tmp_path, key):
+    """A doc whose 96-char prefix UTF-8-encodes to >96 bytes must fail the
+    job with its doc_id, not ship a payload the oracle can't mirror."""
+    sf = str(tmp_path)
+    good = "a" * 96
+    bad = "é" + "a" * 95  # 96 chars, 97 UTF-8 bytes
+    spark.createDataFrame(
+        [(1, good, "en", "s", 96), (2, bad, "fr", "s", 96)], _DOC_SCHEMA
+    ).write.parquet(f"{sf}/documents.parquet")
+    with pytest.raises(Exception, match="non-single-byte.*doc_id=2"):
+        Q[key](spark, sf).collect()
+
+
+def test_perceptual_dedup_decode_failure_fails_loud(spark):
+    """The _loud_hash guard converts an ok=False row into a job failure
+    naming the doc_id (before r18 the row was silently filtered)."""
+    from parquet_to_clickhouse_schema_spark.operators.llm_media import _loud_hash
+
+    df = spark.createDataFrame(
+        [(7, 123, True), (8, 0, False)],
+        "doc_id long, dhash long, dhash_ok boolean",
+    )
+    ok = df.filter("doc_id = 7").select(
+        "doc_id", _loud_hash("dhash_ok", "dhash", "image")
+    )
+    assert ok.collect()[0].dhash == 123
+    with pytest.raises(Exception, match="image decode failed for doc_id=8"):
+        df.select("doc_id", _loud_hash("dhash_ok", "dhash", "image")).collect()
+
+
+def test_perceptual_dedup_all_rows_kept(spark, tmp_path):
+    """Row parity with the oracle's WHERE length(text) >= 96: every
+    qualifying doc appears exactly once in the dedup output."""
+    sf = str(tmp_path)
+    rows = [(i, chr(97 + i % 26) * 100, "en", "s", 100) for i in range(12)]
+    rows.append((99, "short", "en", "s", 5))  # below the 96-char floor
+    spark.createDataFrame(rows, _DOC_SCHEMA).write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    for key in ("q_image_dhash_dedup", "q_audio_fingerprint_dedup"):
+        out = Q[key](spark, sf)
+        assert out.count() == 12
+        assert out.select("doc_id").distinct().count() == 12

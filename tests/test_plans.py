@@ -169,18 +169,18 @@ def test_cosine_topk_plans_as_single_cogroup(spark):
     n_blocks sequential mapInPandas jobs; the rebuild must plan as exactly
     ONE FlatMapCoGroupsInPandas (block-cogroup all-pairs) with no python
     stage beyond it — building the DataFrame must not trigger block jobs."""
-    from parquet_to_clickhouse_schema_spark.operators import llm
+    from parquet_to_clickhouse_schema_spark.operators import llm_ann
 
-    df = llm.q_cosine_topk(spark, SF_SMOKE)
+    df = llm_ann.q_cosine_topk(spark, SF_SMOKE)
     plan = executed_plan(df)
     assert plan.count("FlatMapCoGroupsInPandas") == 1
     assert "MapInPandas" not in plan
 
 
 def test_dedup_embedding_plans_as_single_cogroup(spark):
-    from parquet_to_clickhouse_schema_spark.operators import llm
+    from parquet_to_clickhouse_schema_spark.operators import llm_dedup
 
-    df = llm.q_dedup_embedding(spark, SF_SMOKE)
+    df = llm_dedup.q_dedup_embedding(spark, SF_SMOKE)
     plan = executed_plan(df)
     assert plan.count("FlatMapCoGroupsInPandas") == 1
     assert "MapInPandas" not in plan
@@ -191,9 +191,9 @@ def test_cogroup_sides_not_pruned_by_self_join_dedup(spark):
     analyzer's self-join dedup — the right side gets column-pruned to the
     grouping key and the kernel crashes with KeyError: 'vec_id'. The
     independent-read fix must keep vec_id+embedding in both cogroup inputs."""
-    from parquet_to_clickhouse_schema_spark.operators import llm
+    from parquet_to_clickhouse_schema_spark.operators import llm_dedup
 
-    df = llm.q_dedup_embedding(spark, SF_SMOKE)
+    df = llm_dedup.q_dedup_embedding(spark, SF_SMOKE)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     import re
 
@@ -206,12 +206,12 @@ def test_cogroup_sides_not_pruned_by_self_join_dedup(spark):
 def test_dedup_embedding_empty_input(spark, tmp_path):
     """ADVICE r2: the r2 loop left the unioned plan as None on an empty
     table and crashed; the cogroup form must return an empty result."""
-    from parquet_to_clickhouse_schema_spark.operators import llm
+    from parquet_to_clickhouse_schema_spark.operators import llm_dedup
 
     spark.createDataFrame(
         [], "vec_id long, embedding array<float>"
     ).write.parquet(f"{tmp_path}/embeddings.parquet")
-    out = llm.q_dedup_embedding(spark, str(tmp_path))
+    out = llm_dedup.q_dedup_embedding(spark, str(tmp_path))
     assert out.count() == 0
     assert out.columns == ["vec_a", "vec_b", "cosine"]
 
@@ -313,7 +313,7 @@ def test_dedup_exact_shuffles_fixed_width_digest(spark):
     the bytes the text key would."""
     import re
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_dedup_exact
+    from parquet_to_clickhouse_schema_spark.operators.llm_dedup import q_dedup_exact
 
     df = q_dedup_exact(spark, SF_SMOKE)
     plan = executed_plan(df)
@@ -460,7 +460,7 @@ def test_bm25_broadcasts_stats_and_prunes_scan(spark):
     """q_bm25_score's document-frequency and corpus-stats sides must
     broadcast (no shuffle for the joins), and the token explode must be
     filtered to the query terms before any aggregation."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_bm25_score
+    from parquet_to_clickhouse_schema_spark.functions.text_core import q_bm25_score
 
     df = q_bm25_score(spark, SF_SMOKE)
     plan = executed_plan(df)
@@ -475,7 +475,7 @@ def test_bm25_broadcasts_stats_and_prunes_scan(spark):
 def test_fuzzy_pairs_has_no_cartesian_product(spark):
     """The lossless prefix filter must plan as equi-joins — a
     CartesianProduct would mean the quadratic fallback leaked in."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_fuzzy_pairs
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import q_fuzzy_pairs
 
     plan = executed_plan(q_fuzzy_pairs(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
@@ -538,7 +538,7 @@ def test_mode_agg_argmax_no_window(spark):
 def test_unigram_nll_broadcasts_freq_table(spark):
     """q_unigram_nll's claim: the vocab-bounded unigram table broadcasts
     onto the token stream (AQE), never a fact-fact sort-merge."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_unigram_nll
+    from parquet_to_clickhouse_schema_spark.functions.text_core import q_unigram_nll
 
     df = q_unigram_nll(spark, SF_SMOKE)
     df.collect()  # let AQE finalize join strategies
@@ -549,7 +549,9 @@ def test_unigram_nll_broadcasts_freq_table(spark):
 def test_embed_outliers_broadcasts_centroids_and_moments(spark):
     """q_embed_outliers's claim: centroid and per-label moment tables are
     broadcast back; the only fact-sized shuffles are the two aggregates."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_embed_outliers
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
+        q_embed_outliers,
+    )
 
     df = q_embed_outliers(spark, SF_SMOKE)
     df.collect()
@@ -571,7 +573,7 @@ def test_dq_checks_fk_uses_anti_join(spark):
 def test_bpe_pairs_explodes_vocab_not_corpus(spark):
     """q_bpe_pairs's claim: the char-pair explode runs over the DISTINCT
     word table (vocab-bounded), i.e. AFTER a word-count aggregate."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_bpe_pairs
+    from parquet_to_clickhouse_schema_spark.functions.text_core import q_bpe_pairs
 
     df = q_bpe_pairs(spark, SF_SMOKE)
     plan = optimized_plan(df)
@@ -629,7 +631,9 @@ def test_profile_table_single_scan(spark):
 
 def test_embed_quantize_no_shuffle_no_python(spark):
     """q_embed_quantize's claim: row-local folds, scan-bound."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_embed_quantize
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
+        q_embed_quantize,
+    )
 
     df = q_embed_quantize(spark, SF_SMOKE)
     assert shuffle_count(df) == 0
@@ -701,9 +705,9 @@ def test_acf_series_is_broadcast_sized(spark):
 
 def test_oov_vocab_broadcast(spark):
     """The 500-row vocab joins broadcast onto the token stream."""
-    from parquet_to_clickhouse_schema_spark.functions import text
+    from parquet_to_clickhouse_schema_spark.functions import text_core
 
-    df = text.q_oov_rate(spark, SF_SMOKE)
+    df = text_core.q_oov_rate(spark, SF_SMOKE)
     assert uses_broadcast_join(df)
 
 

@@ -7,10 +7,12 @@ import __spark_entry__ as entrymod
 from parquet_to_clickhouse_schema_spark.operators.aggregation import (
     q_agg_approx_distinct,
 )
-from parquet_to_clickhouse_schema_spark.operators.llm import (
+from parquet_to_clickhouse_schema_spark.operators.llm_ann import (
     ann_lsh_topk,
-    minhash_signatures,
     q_cosine_topk,
+)
+from parquet_to_clickhouse_schema_spark.operators.llm_dedup import (
+    minhash_signatures,
     q_near_dedup_minhash,
 )
 
@@ -183,7 +185,7 @@ def test_dp_count_release_mechanism(spark):
     import math
     from collections import defaultdict
 
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_core import (
         _DP_2P60,
         q_dp_count_release,
     )
@@ -265,7 +267,7 @@ def test_ngram_blocking_recall_vs_unblocked(spark):
     union must find every J >= 0.8 pair the unblocked join finds (Jaccard
     >= 0.8 bounds the size ratio to [0.8, 1.25], within one 32-wide bucket
     step for this corpus)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_dedup_ngram
+    from parquet_to_clickhouse_schema_spark.operators.llm_dedup import q_dedup_ngram
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     d = load_table(spark, SF_SMOKE, "documents")
@@ -303,7 +305,7 @@ def test_simhash_detects_planted_near_duplicates(spark, tmp_path):
     """64-bit simhash with 4x16-bit pigeonhole blocks: a 1-token-in-100
     change stays within Hamming <= 3 (deterministic — xxhash64 is seeded);
     an unrelated doc does not pair. Values frozen from an observed run."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_dedup_simhash
+    from parquet_to_clickhouse_schema_spark.operators.llm_dedup import q_dedup_simhash
 
     base = " ".join(f"tok{i}" for i in range(100))
     near = " ".join(f"tok{i}" for i in range(99)) + " tokX"
@@ -324,7 +326,7 @@ def test_near_dedup_runs_and_is_deterministic(spark):
 
 @pytest.mark.slow
 def test_ivf_recall_vs_bruteforce(spark):
-    from parquet_to_clickhouse_schema_spark.operators.llm import ivf_topk
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import ivf_topk
 
     exact = {(r.vec_id, r.nbr_id) for r in q_cosine_topk(spark, SF_SMOKE).collect()}
     approx = {
@@ -340,7 +342,7 @@ def test_pq_recall_vs_bruteforce(spark):
     500 vectors the re-ranked top-3 must recover most of the brute-force
     top-3 even on the hard case of near-orthogonal random vectors
     (measured 0.84; 0.68/0.96 at refine 32/128)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import pq_topk
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import pq_topk
 
     exact = {(r.vec_id, r.nbr_id) for r in q_cosine_topk(spark, SF_SMOKE).collect()}
     approx = {
@@ -354,7 +356,7 @@ def test_pq_rejects_indivisible_subspace_count(spark):
     """dim % m != 0 must fail fast on the driver with a clear message, not
     silently drop trailing dimensions or throw a reshape error on an
     executor mid-job (embeddings table is dim=64; m=7 does not divide it)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import ivfpq_topk, pq_topk
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import ivfpq_topk, pq_topk
 
     with pytest.raises(ValueError, match="not divisible"):
         pq_topk(spark, SF_SMOKE, m=7)
@@ -367,7 +369,7 @@ def test_ivfpq_recall_vs_bruteforce(spark):
     8/16 lists on near-orthogonal vectors with Lloyd-trained centroids);
     the ADC+exact-refine stage must not lose materially below it
     (measured 0.795)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import ivfpq_topk
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import ivfpq_topk
 
     exact = {(r.vec_id, r.nbr_id) for r in q_cosine_topk(spark, SF_SMOKE).collect()}
     approx = {(r.vec_id, r.nbr_id) for r in ivfpq_topk(spark, SF_SMOKE).collect()}
@@ -426,7 +428,7 @@ def test_kmeans_recovers_planted_blobs(spark):
 
     import numpy as np
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import kmeans_fit
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import kmeans_fit
 
     rnd = random.Random(7)
     centers = [[10.0, 0.0, 0.0, 0.0], [0.0, 10.0, 0.0, 0.0], [0.0, 0.0, 10.0, 0.0]]
@@ -466,7 +468,7 @@ def test_fuzzy_pairs_prefix_filter_is_lossless(spark):
     q_fuzzy_pairs result equals the unblocked same-language quadratic join
     pair-for-pair (Ukkonen's bound guarantees no qualifying pair can be
     dropped, unlike the recall-based MinHash/SimHash blockers)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
         FUZZY_MAXD,
         FUZZY_PLEN,
         q_fuzzy_pairs,
@@ -504,7 +506,7 @@ def test_pii_scrub_redacts_planted_pii(spark, tmp_path):
     """The synthetic corpus carries no PII, so the oracle proves only regex
     parity there — this plants real emails/IPs/phones and asserts detection
     counts and redaction output."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_pii_scrub
+    from parquet_to_clickhouse_schema_spark.functions.text_core import q_pii_scrub
 
     rows = [
         (1, "contact alice.smith+spam@example.co.uk or bob@site.org today"),
@@ -556,9 +558,7 @@ def test_ann_verified_topk_values_are_exact(spark):
     [-1, 1])."""
     from collections import Counter
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
-        q_ann_verified_topk,
-    )
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import q_ann_verified_topk
 
     exact = {
         (r.vec_id, r.nbr_id): r.cosine
@@ -580,7 +580,7 @@ def test_simhash_verified_pairs_are_valid(spark):
     within the declared radius, deterministic across runs, and in the
     same density ballpark as the xxhash64 production variant (both hash
     families see the same planted near-duplicates)."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_dedup import (
         q_dedup_simhash,
         q_simhash_verified,
     )
@@ -603,9 +603,7 @@ def test_ivf_verified_topk_values_are_exact(spark):
     shared 1e-4 quantization."""
     from collections import Counter
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
-        q_ivf_verified_topk,
-    )
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import q_ivf_verified_topk
 
     exact = {
         (r.vec_id, r.nbr_id): r.cosine
@@ -627,7 +625,7 @@ def test_kmeans_verified_partitions_corpus(spark):
     must PARTITION the corpus — cluster sizes sum to the embedding count,
     ids stay within the declared k, every returned cluster is non-empty
     with a positive centroid norm, and the run is deterministic."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
         KMV_K,
         q_kmeans_verified,
     )
@@ -650,9 +648,7 @@ def test_pq_verified_topk_values_are_exact(spark):
     quantization."""
     from collections import Counter
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
-        q_pq_verified_topk,
-    )
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import q_pq_verified_topk
 
     exact = {
         (r.vec_id, r.nbr_id): r.cosine
@@ -678,7 +674,7 @@ def test_ivfpq_verified_topk_values_are_exact(spark):
     1e-4 quantization."""
     from collections import Counter
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import (
         q_ivfpq_verified_topk,
     )
 
@@ -704,7 +700,7 @@ def test_random_projection_preserves_norms(spark):
     variance-normalized 16x64 matrix the projected norm concentrates
     around the original (E[ratio²]=1), so the mean ratio must sit well
     inside [0.7, 1.3] and every ratio must be positive and finite."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
         q_random_projection,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -746,7 +742,7 @@ def test_semdedup_drops_are_valid(spark):
     """q_semdedup (r10, oracle-gated): every dropped vector names a
     LOWER-id keeper, duplicate similarity meets the threshold, each vector
     is dropped at most once, and the run is deterministic."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
         SEMDEDUP_TAU,
         q_semdedup,
     )
@@ -766,7 +762,7 @@ def test_hard_negatives_are_cross_label(spark):
     range and rank-ordered."""
     from collections import Counter
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_cluster import (
         q_hard_negatives,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -794,7 +790,7 @@ def test_perplexity_buckets_cover_corpus(spark):
     every language."""
     from collections import defaultdict
 
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_core import (
         q_perplexity_buckets,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -816,7 +812,7 @@ def test_dsir_weights_favor_target(spark):
     every document once, and target-language documents must average a
     HIGHER weight than non-target ones (the defining property of the
     likelihood-ratio score)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_core import (
         DSIR_TARGET_LANG,
         q_dsir_weights,
     )
@@ -884,7 +880,7 @@ def test_emb_rows_raises_on_ragged_embedding(spark, tmp_path):
     letting it vanish from q_rank_fusion / q_mmr_diversify rankings."""
     import pytest
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import ANN_V_DIM
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import ANN_V_DIM
     from parquet_to_clickhouse_schema_spark.operators.retrieval import (
         _emb_rows,
     )
@@ -932,7 +928,7 @@ def test_bigram_lm_score_covers_corpus_and_is_positive(spark):
     length is 10 tokens, so all have bigrams) gets a score; NLL is
     positive (every interpolated P < 1); and n_bigrams == n_tokens - 1
     for a spot-checked doc."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         q_bigram_lm_score,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -955,7 +951,7 @@ def test_bpe_encode_roundtrips_and_compresses(spark):
     reorder characters); symbol counts never exceed character counts;
     and at least one word actually compressed (the top merge occurs in
     the corpus by construction)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_bpe_encode
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_bpe_encode
 
     rows = q_bpe_encode(spark, SF_SMOKE).collect()
     assert rows
@@ -999,7 +995,7 @@ def test_ann_recall_eval_is_bounded_and_consistent(spark):
     """q_ann_recall_eval (r10, oracle-gated): exactly RQ_N query rows; hits
     can never exceed either the candidate count or the cutoff; recall is
     hits/RQ_K; and a query with zero LSH candidates scores exactly zero."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import (
         RQ_K,
         RQ_N,
         q_ann_recall_eval,
@@ -1102,7 +1098,7 @@ def test_nb_classifier_learns_language(spark):
     (20%) by a clear margin — the synthetic languages share most of their
     word-soup vocabulary, so the learnable signal is the marker-token
     skew, not full separability (measured ~39% at smoke SF)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_nb_classifier
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_nb_classifier
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     n = load_table(spark, SF_SMOKE, "documents").count()
@@ -1185,10 +1181,8 @@ def test_feature_mi_top_buckets_are_marker_heavy(spark):
     up to quantization, sorted non-increasing, and the top-20 must surface
     language-marker buckets (the planted signal — measured at ranks 7-9
     behind a handful of lang-skewed vocabulary words)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
-        _LANG_MARKERS,
-        q_feature_mi,
-    )
+    from parquet_to_clickhouse_schema_spark.functions.text_core import _LANG_MARKERS
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_feature_mi
     import hashlib
 
     rows = q_feature_mi(spark, SF_SMOKE).collect()
@@ -1208,7 +1202,7 @@ def test_feature_mi_top_buckets_are_marker_heavy(spark):
 def test_knn_eval_votes_are_consistent(spark):
     """q_knn_eval (r10, oracle-gated): one row per query, the winning vote
     count is between 1 and KNN_K, and `correct` equals label equality."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import (
         KNN_K,
         KNN_Q,
         q_knn_eval,
@@ -1224,7 +1218,7 @@ def test_knn_eval_votes_are_consistent(spark):
 def test_vocab_overlap_matrix_is_complete_and_bounded(spark):
     """q_vocab_overlap (r10, oracle-gated): all C(langs,2) unordered pairs
     present, jaccard in [0,1], intersection never exceeds either side."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_vocab_overlap
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_vocab_overlap
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     langs = {
@@ -1243,7 +1237,7 @@ def test_token_burstiness_markers_spread_less_than_content(spark):
     """q_token_burstiness (r10, oracle-gated): top tokens emitted in count
     order with non-negative VMR; doc_freq never exceeds the corpus size;
     the count-ordering ties broken by token."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         BURST_TOP,
         q_token_burstiness,
     )
@@ -1301,7 +1295,7 @@ def test_ngram_novelty_first_doc_is_fully_novel(spark):
     """q_ngram_novelty (r10, oracle-gated): novelty in [0,1]; the LOWEST
     doc_id with shingles is 100% novel by construction (nothing earlier
     exists); counts are consistent."""
-    from parquet_to_clickhouse_schema_spark.functions.text import q_ngram_novelty
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_ngram_novelty
 
     rows = q_ngram_novelty(spark, SF_SMOKE).collect()
     assert rows
@@ -1458,7 +1452,7 @@ def test_lsh_param_sweep_shows_the_tradeoff(spark):
     """q_lsh_param_sweep (r10, oracle-gated): one row per layout; more,
     narrower bands must yield monotonically MORE candidate pairs (the
     cost axis) and at least as much recall as the narrowest layout."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import (
         LSH_SWEEP_CFGS,
         q_lsh_param_sweep,
     )
@@ -1479,7 +1473,7 @@ def test_matryoshka_recall_grows_with_dims(spark):
     """q_matryoshka_eval (r10, oracle-gated): one row per truncation
     level; recall must be monotone non-decreasing in the kept dimension
     count, and each recall in [0, 1]."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import (
         MAT_DIMS,
         q_matryoshka_eval,
     )
@@ -1516,7 +1510,7 @@ def test_pca_power_finds_a_unit_direction_that_beats_random(spark):
     direction (power iteration made progress)."""
     import math
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_pca_power
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import q_pca_power
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     rows = sorted(q_pca_power(spark, SF_SMOKE).collect(), key=lambda r: r.d)
@@ -1556,7 +1550,7 @@ def test_embed_standardize_matches_numpy(spark):
     a numpy replay to quantization precision."""
     import numpy as np
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import (
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import (
         q_embed_standardize,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -1581,7 +1575,7 @@ def test_linear_probe_mse_is_non_increasing(spark):
     MSE equals the label variance (w=0 predicts the mean)."""
     import numpy as np
 
-    from parquet_to_clickhouse_schema_spark.operators.llm import q_linear_probe
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import q_linear_probe
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     rows = sorted(q_linear_probe(spark, SF_SMOKE).collect(), key=lambda r: r.step)
@@ -1626,10 +1620,8 @@ def test_auc_marker_beats_chance_and_matches_replay(spark):
     sklearn-free pairwise replay. The VALUE is the corpus's truth — here
     ≈0.45, i.e. the marker heuristic is uninformative for en (documented
     in the op); the test pins the statistic, not a wished-for verdict."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
-        _LANG_MARKERS,
-        q_auc_marker,
-    )
+    from parquet_to_clickhouse_schema_spark.functions.text_core import _LANG_MARKERS
+    from parquet_to_clickhouse_schema_spark.functions.text_models import q_auc_marker
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
     r = q_auc_marker(spark, SF_SMOKE).collect()[0]
@@ -1652,7 +1644,7 @@ def test_content_chunks_cover_the_corpus_and_realign(spark):
     corpus token count (chunks partition every doc), and content-defined
     boundaries REALIGN after an insertion — the defining property vs
     fixed-width chunking (all but the edited chunk's boundaries match)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         CDC_MASK,
         q_content_chunks,
     )
@@ -1689,7 +1681,7 @@ def test_confidence_bins_cover_docs_and_top_bin_beats_bottom(spark):
     """q_confidence_bins (r10, oracle-gated): bins partition the corpus;
     the most-confident quartile must be more accurate than the least
     (the calibration property that makes score-gated filters safe)."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         CONF_BINS,
         q_confidence_bins,
     )
@@ -1795,7 +1787,7 @@ def test_chunk_dedup_ratio_detects_planted_duplicate(spark, tmp_path):
     spark.createDataFrame(
         [(1, text), (2, text)], "doc_id long, text string"
     ).write.parquet(f"{tmp_path}/documents.parquet")
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         q_chunk_dedup_ratio,
     )
 
@@ -1861,7 +1853,7 @@ def test_minhash_union_estimates_are_tight(spark):
     """q_minhash_union (r10, oracle-gated): all C(5,2) pairs present; the
     64-slot estimate must land within ~3/sqrt(64) of the truth (generous
     3-sigma MinHash envelope) and the union bounds hold."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         MHU_SOURCES,
         q_minhash_union,
     )
@@ -1878,7 +1870,8 @@ def test_minhash_union_estimates_are_tight(spark):
 def test_ndcg_is_bounded_and_ideal_is_respected(spark):
     """q_ndcg (r10, oracle-gated): one row per query, ndcg in [0, 1]
     (corpus-ideal normalization upper-bounds every query), dcg > 0."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import RQ_N, q_ndcg
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import RQ_N
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import q_ndcg
 
     rows = q_ndcg(spark, SF_SMOKE).collect()
     assert len(rows) == RQ_N
@@ -1891,7 +1884,7 @@ def test_quantile_normalize_reference_is_monotone(spark):
     """q_quantile_normalize (r10, oracle-gated): the reference distribution
     is non-decreasing in rank, every rank covered by every source, and
     min <= ref <= max at each rank."""
-    from parquet_to_clickhouse_schema_spark.functions.text import (
+    from parquet_to_clickhouse_schema_spark.functions.text_models import (
         q_quantile_normalize,
     )
     from parquet_to_clickhouse_schema_spark.sources.io import load_table
@@ -2020,7 +2013,8 @@ def test_markov_stationary_is_a_distribution_near_empirical(spark):
 def test_mrr_ranks_and_reciprocals_are_consistent(spark):
     """q_mrr (r10, oracle-gated): every query present; rr = 1/rank when a
     same-label hit exists and exactly 0 when none does."""
-    from parquet_to_clickhouse_schema_spark.operators.llm import RQ_K, RQ_N, q_mrr
+    from parquet_to_clickhouse_schema_spark.operators.llm_ann import RQ_K, RQ_N
+    from parquet_to_clickhouse_schema_spark.operators.llm_eval import q_mrr
 
     rows = q_mrr(spark, SF_SMOKE).collect()
     assert len(rows) == RQ_N

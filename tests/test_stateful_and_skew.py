@@ -1,4 +1,5 @@
-"""Custom stateful streaming operator + skew utilities."""
+"""Custom stateful streaming operator, state-store sizing + skew and
+partition-spreading utilities."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,13 +8,17 @@ from parquet_to_clickhouse_schema_spark.operators.skew import (
     salted_equi_join,
     top_key_skew_ratio,
 )
-from parquet_to_clickhouse_schema_spark.sources.io import load_table
+from parquet_to_clickhouse_schema_spark.sources.io import fanout_scan, load_table
 from parquet_to_clickhouse_schema_spark.streaming.stateful import (
     spend_alerts_batch,
     spend_alerts_stream,
     spend_alerts_transform_with_state,
 )
-from parquet_to_clickhouse_schema_spark.streaming.stream_demo import run_to_memory
+from parquet_to_clickhouse_schema_spark.streaming.stream_demo import (
+    STATE_KEYS_PER_PARTITION,
+    run_to_memory,
+    state_partitions_for,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -142,3 +147,30 @@ def test_pack_sequences_deskewed_under_dominant_language(spark, tmp_path):
     # every bin respects the budget (first doc of a bin may start it, so a
     # bin never exceeds budget + one doc, and docs here are < budget)
     assert all(v <= PACK_BUDGET + 44 for v in bins.values())
+
+
+def test_fanout_scan_spreads_single_partition(spark):
+    df = spark.range(1000).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    out = fanout_scan(df, spark)
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in out.collect()) == list(range(1000))
+
+
+def test_fanout_scan_noop_when_already_parallel(spark):
+    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.range(1000).repartition(target)
+    out = fanout_scan(df, spark)
+    # identity, not merely equal partition count: no extra exchange
+    assert out is df
+
+
+def test_state_partitions_for_bounds(spark):
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert state_partitions_for(spark, 0) == 1
+    assert state_partitions_for(spark, 1) == 1
+    assert (
+        state_partitions_for(spark, STATE_KEYS_PER_PARTITION * 3) == min(3, cap)
+    )
+    assert state_partitions_for(spark, 10**9) == cap

@@ -1,8 +1,13 @@
 """Structured Streaming: the readStream variants must agree with their
 batch twins on the bounded events source (same event-time semantics)."""
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
+from parquet_to_clickhouse_schema_spark import registry
+from parquet_to_clickhouse_schema_spark.sources.io import load_table
 from parquet_to_clickhouse_schema_spark.streaming.batch_twins import (
     q_session_window,
     q_tumbling_window,
@@ -14,6 +19,8 @@ from parquet_to_clickhouse_schema_spark.streaming.stream_demo import (
     stream_tumbling_counts,
 )
 from tests.conftest import SF_SMOKE
+
+Q = registry.all_queries()
 
 
 def test_stream_tumbling_matches_batch(spark):
@@ -299,3 +306,76 @@ def test_late_data_report_matches_sequential_replay(spark):
         for r in q_late_data_report(spark, SF_SMOKE).collect()
     }
     assert got == dict(want)
+
+
+def test_time_range_frame_boundary_inclusive(spark):
+    """An event exactly 3600 s earlier IS in the trailing-1h frame; one
+    microsecond beyond is not — pin the bound the oracle agrees on."""
+    t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [
+        (1, 7, t0 - datetime.timedelta(seconds=3600, microseconds=1), "view", 1.0, "{}"),
+        (2, 7, t0 - datetime.timedelta(seconds=3600), "view", 2.0, "{}"),
+        (3, 7, t0, "view", 4.0, "{}"),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, event_type string, value double, props string"
+    )
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as tmp:
+        for name in ("events",):
+            df.write.mode("overwrite").parquet(f"{tmp}/{name}.parquet")
+        out = {r.event_id: r for r in Q["q_window_time_range"](spark, tmp).collect()}
+    assert out[3].n_trailing_1h == 2  # events 2 (exactly -3600 s) and 3
+    assert out[3].value_trailing_1h == pytest.approx(6.0)
+    assert out[2].n_trailing_1h == 2  # events 1 and 2 are within an hour
+
+
+def test_sequence_count_matches_greedy_simulation(spark):
+    """Per user, n_chains must equal the literal greedy matcher run
+    driver-side over the (ts, event_id)-ordered stream: a purchase closes
+    a chain iff an unmatched earlier view exists."""
+    from collections import defaultdict
+
+    rows = {r.user_id: r.n_chains for r in Q["q_sequence_count"](spark, SF_SMOKE).collect()}
+    ev = (
+        load_table(spark, SF_SMOKE, "events")
+        .filter(F.col("event_type").isin("view", "purchase"))
+        .select("user_id", "ts", "event_id", "event_type")
+        .collect()
+    )
+    streams = defaultdict(list)
+    for r in ev:
+        streams[r.user_id].append((r.ts, r.event_id, r.event_type))
+    want = {}
+    for u, es in streams.items():
+        es.sort()
+        avail = chains = 0
+        for _, _, t in es:
+            if t == "view":
+                avail += 1
+            elif avail > 0:
+                avail -= 1
+                chains += 1
+        want[u] = chains
+    assert rows == want
+    assert any(c > 1 for c in rows.values())  # multi-episode users exist
+
+
+def test_session_metrics_cover_all_events_and_respect_the_gap(spark):
+    """Session event counts sum to the event total, durations are
+    nonnegative, and no session's span can be built from gaps that each
+    exceed the cut (spot-consistency with q_sessionize's session count
+    per user)."""
+    rows = Q["q_session_metrics"](spark, SF_SMOKE).collect()
+    ev = load_table(spark, SF_SMOKE, "events")
+    assert sum(r.n_events for r in rows) == ev.count()
+    assert all(r.duration_sec >= 0 and r.n_events >= 1 for r in rows)
+    sess = Q["q_sessionize"](spark, SF_SMOKE).collect()
+    per_user_sessions = {}
+    for r in sess:
+        per_user_sessions.setdefault(r.user_id, set()).add(r.session_idx)
+    from collections import Counter
+
+    got = Counter(r.user_id for r in rows)
+    assert all(got[u] == len(s) for u, s in per_user_sessions.items())
