@@ -80,13 +80,13 @@ def main(argv: list[str] | None = None) -> int:
             # swallow the other request
             ap.error("--drift-report and --list-queries are mutually exclusive")
         if args.drift_report is not None:
-            from parquet_to_clickhouse_schema_spark.ddl import (
-                hive_partition_fields,
-                incremental_drift_scan,
-                schema_drift_report,
-            )
+            from parquet_to_clickhouse_schema_spark.ddl import _scan_dataset
 
-            parts = hive_partition_fields(args.drift_report)
+            # one listing and one footer pass serve the partition columns,
+            # the report and the cache telemetry
+            scan = _scan_dataset(args.drift_report, args.drift_cache)
+            scan.read_all()
+            parts = scan.partition_fields(scan.first_footer().names)
             if parts:
                 # partition columns live in directory names, not footers —
                 # say so, or their absence from the report reads as a miss
@@ -98,18 +98,12 @@ def main(argv: list[str] | None = None) -> int:
                     f"directory layout, not footers): {rendered}\n"
                 )
             if args.drift_cache is not None:
-                scan = incremental_drift_scan(
-                    args.drift_report, args.drift_cache
-                )
-                drift = scan["report"]
                 sys.stdout.write(
-                    f"{args.drift_report}: {scan['footers_read']} footer(s) "
-                    f"read, {len(scan['partitions_rescanned'])} partition(s) "
-                    f"rescanned, {len(scan['partitions_reused'])} served "
-                    "from cache\n"
+                    f"{args.drift_report}: {scan.footers_read} footer(s) read, "
+                    f"{len(scan.rescanned)} partition(s) rescanned, "
+                    f"{len(scan.reused)} served from cache\n"
                 )
-            else:
-                drift = schema_drift_report(args.drift_report)
+            drift = scan.drift_report()
             if not drift:
                 sys.stdout.write(
                     f"{args.drift_report}: all fragment footers agree\n"

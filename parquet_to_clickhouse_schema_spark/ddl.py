@@ -46,6 +46,7 @@ import hashlib
 import json
 import os
 import re
+import sys
 import warnings
 from typing import Iterable
 
@@ -477,7 +478,18 @@ class _DatasetScan:
         if self.spark is not None and len(files) >= distributed_threshold:
             sc = self.spark.sparkContext
             n_slices = max(1, min(len(files) // 8, sc.defaultParallelism * 4))
-            batches = sc.parallelize(files, n_slices).mapPartitions(_read_footers).collect()
+            # ship the reader by value: pickled by reference, every executor
+            # would have to import this package
+            from pyspark import cloudpickle
+
+            module = sys.modules[__name__]
+            owned = __name__ not in cloudpickle.list_registry_pickle_by_value()
+            cloudpickle.register_pickle_by_value(module)
+            try:
+                batches = sc.parallelize(files, n_slices).mapPartitions(_read_footers).collect()
+            finally:
+                if owned:
+                    cloudpickle.unregister_pickle_by_value(module)
         else:
             batches = _read_footers(files)
         fp_by_file: dict[str, str] = {}
@@ -686,7 +698,7 @@ def _read_footer(file_path: str) -> tuple[str, tuple[bytes, list[str]]]:
 
 def _read_footers(files):
     """(file → fingerprint, fingerprint → exemplar) over a batch of
-    fragments: the driver loop and, shipped whole, one task of the Spark
+    fragments: the driver loop and, shipped by value, one task of the Spark
     fan-out — which therefore collects a 16-byte digest per fragment plus
     one exemplar per distinct footer, not one schema per file."""
     fp_by_file: dict[str, str] = {}

@@ -1281,91 +1281,64 @@ def q_freq_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bpe_train(
-    spark: SparkSession,
-    words: DataFrame,
-    n_merges: int = 10,
-) -> list[tuple[str, str, int]]:
+def bpe_train(words: DataFrame, n_merges: int = 10) -> DataFrame:
     """Full iterative BPE training over a (tok, wfreq) word-frequency table:
     repeat [count adjacent symbol pairs -> take the most frequent ->
-    merge it everywhere] n_merges times, returning the learned merges as
-    (left, right, pair_count) in merge order — the distributed version of
-    the Sennrich et al. trainer loop, of which q_bpe_pairs is one gated
-    step.
+    merge it everywhere] n_merges times. Returns a lazy
+    (merge_rank, left, right, pair_count) frame of the learned merges in
+    merge order — the Sennrich et al. trainer loop, of which q_bpe_pairs is
+    one gated step.
 
-    Distributed representation: each word is an ARRAY of current symbols
-    (initially characters). Per iteration:
-    - pair counts: vocab-bounded explode + map-side-combinable sum (the
-      word table follows Heaps' law — ~1M rows at 100 TB, so iterations
-      cost vocab scans, not corpus scans; the corpus is touched ONCE to
-      build word frequencies);
-    - argmax: a deterministic TakeOrdered(1) by (count desc, left, right)
-      — ulp-free because counts are exact integers;
-    - merge: a JVM-side aggregate fold over each symbol array (no UDF) —
-      left-to-right, non-overlapping, exactly like the reference trainer.
-    localCheckpoint every few iterations truncates the growing lineage
-    (the same discipline as pagerank/kmeans)."""
-    syms = words.select(
-        "wfreq", F.expr("split(tok, '')").alias("syms")
-    ).localCheckpoint()
-    merges: list[tuple[str, str, int]] = []
-    for it in range(n_merges):
-        # fully-merged 1-symbol words can never pair again — and under
-        # Spark 4's default ANSI mode, indexing their array via
-        # sequence(1, 0) throws INVALID_ARRAY_INDEX, so gate the size
-        pairs = syms.filter(F.size("syms") >= 2).select(
-            "wfreq",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(syms[i - 1] AS a, syms[i] AS b))"
-                )
-            ).alias("p"),
-        )
-        top = (
-            pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("wfreq").cast("bigint").alias("c"))
-            .orderBy(F.col("c").desc(), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, c = top[0].a, top[0].b, int(top[0].c)
-        merges.append((a, b, c))
-        merged = a + b
-        # left-to-right non-overlapping merge as an aggregate fold: when
-        # the previous accumulated symbol == a and the current == b,
-        # replace the last acc element with the merged symbol. Built with
-        # Column lambdas (F.lit for the symbols), NOT f-string SQL
-        # literals — repr() of control characters is not a valid Spark
-        # SQL escape and would silently compare the wrong symbol
-        def _make_fold(a: str, b: str, merged: str):
-            def _merge_fold(acc, x):
-                hit = (
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(a))
-                    & (x == F.lit(b))
-                )
-                return F.when(
-                    hit,
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1),
-                        F.array(F.lit(merged)),
-                    ),
-                ).otherwise(F.concat(acc, F.array(x)))
+    The loop state is the word-type table, bounded by the vocabulary
+    (Heaps' law — ~1M rows at 100 TB), not the corpus; the corpus is
+    touched ONCE, upstream, to build the word frequencies. So the whole
+    loop runs as ONE grouped-map task on a constant key, in Python:
+    - each word starts as its tuple of characters; equal symbol tuples
+      share one count;
+    - argmax is (count desc, left, right) over exact integer counts —
+      Python str order is Spark's UTF-8 byte order, so ties break as they
+      would in Spark;
+    - merge is a left-to-right, non-overlapping scan, exactly like the
+      reference trainer. A word that has fully merged into one symbol
+      yields no pairs and stays.
+    No step launches a Spark job, and the driver sees no rows. ``train``
+    is nested so it ships to the executor by value."""
 
-            return _merge_fold
+    def train(pdf):
+        import pandas as pd
 
-        syms = syms.select(
-            "wfreq",
-            F.aggregate(
-                "syms", F.array().cast("array<string>"), _make_fold(a, b, merged)
-            ).alias("syms"),
+        cur: dict[tuple, int] = {}
+        for tok, f in zip(pdf["tok"].tolist(), pdf["wfreq"].tolist()):
+            cur[tuple(tok)] = cur.get(tuple(tok), 0) + f
+        merges = []
+        for rank in range(1, n_merges + 1):
+            counts: dict[tuple, int] = {}
+            for syms, f in cur.items():
+                for pair in zip(syms, syms[1:]):
+                    counts[pair] = counts.get(pair, 0) + f
+            if not counts:
+                break
+            (a, b), c = min(counts.items(), key=lambda pc: (-pc[1], pc[0]))
+            merges.append((rank, a, b, c))
+            merged: dict[tuple, int] = {}
+            for syms, f in cur.items():
+                out, i = [], 0
+                while i < len(syms):
+                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                        out.append(a + b)
+                        i += 2
+                    else:
+                        out.append(syms[i])
+                        i += 1
+                merged[tuple(out)] = merged.get(tuple(out), 0) + f
+            cur = merged
+        return pd.DataFrame(
+            merges, columns=["merge_rank", "left", "right", "pair_count"]
         )
-        if (it + 1) % 3 == 0:
-            syms = syms.localCheckpoint()
-    return merges
+
+    return words.groupBy(F.lit("all")).applyInPandas(
+        train, "merge_rank int, left string, right string, pair_count bigint"
+    )
 
 
 BPE_TRAIN_MERGES = 6
@@ -1381,11 +1354,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is not expressible as one SQL statement (same class as
     q_kmeans_clusters / q_pagerank)."""
     words = _word_freqs(load_table(spark, sf_dir, "documents"))
-    merges = bpe_train(spark, words, n_merges=BPE_TRAIN_MERGES)
-    return spark.createDataFrame(
-        [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
-        "merge_rank INT, left STRING, right STRING, pair_count BIGINT",
-    )
+    return bpe_train(words, n_merges=BPE_TRAIN_MERGES)
 
 
 BPEV_ROUNDS = 4  # unrolled merge rounds in the verified twin
@@ -1465,9 +1434,9 @@ def q_bpe_train_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical in both engines — probed: ' a  a  a  a ' + merge (a,a) ->
     ' aa  aa '). Pair counts re-split the state (split on double space),
     argmax is deterministic (count desc, left, right) over exact integer
-    counts. Unlike bpe_train's per-round driver argmax collect, the twin
-    is fully declarative: each round's top pair is a 1-row broadcast
-    crossJoin, never driver state.
+    counts. Unlike bpe_train's in-task Python loop, the twin is fully
+    declarative: each round's top pair is a 1-row broadcast crossJoin,
+    never driver state.
 
     100 TB shape: the corpus is touched once (word-frequency groupBy,
     map-side combined, Heaps'-bounded output); each unrolled round is a

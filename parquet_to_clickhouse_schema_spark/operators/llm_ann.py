@@ -112,7 +112,7 @@ def cosine_topk_blocked(
     import numpy as np
     import pandas as pd
 
-    n = _embeddings_rowcount(spark, sf_dir)  # footer metadata, no Spark job
+    n = _embeddings_rowcount(sf_dir)  # footer metadata, no Spark job
     n_blocks = max(1, -(-n // index_block_rows))
     fanout, indexed = _block_sides(spark, sf_dir, n_blocks, n_blocks)
 
@@ -207,7 +207,7 @@ def ann_lsh_topk(
     import pandas as pd
 
     if n_planes is None:
-        n = _embeddings_rowcount(spark, sf_dir)
+        n = _embeddings_rowcount(sf_dir)
         n_planes = min(12, max(4, math.ceil(math.log2(max(n, 2) / 256))))
     npl, ntb = n_planes, n_tables
 
@@ -597,7 +597,7 @@ def pq_topk(
     codes_df = e.mapInPandas(encode_batches, schema="vec_id long, codes array<int>")
 
     # --- coarse ADC scan: 2-D block cogroup, queries x codes ---
-    n = _embeddings_rowcount(spark, sf_dir)
+    n = _embeddings_rowcount(sf_dir)
     n_blocks = max(1, -(-n // index_block_rows))
     queries = e.withColumn(
         "qblk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")

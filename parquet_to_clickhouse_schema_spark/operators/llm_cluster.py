@@ -357,7 +357,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n = _embeddings_rowcount(spark, sf_dir)  # footer metadata, no Spark job
+    n = _embeddings_rowcount(sf_dir)  # footer metadata, no Spark job
     n_blocks = max(1, -(-n // 1024))
     eq = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     ei = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")

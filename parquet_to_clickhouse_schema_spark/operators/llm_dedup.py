@@ -949,19 +949,13 @@ _EMB_DEDUP_ORACLE = """
 """
 
 
-def _embeddings_rowcount(spark: SparkSession, sf_dir: str) -> int:
+def _embeddings_rowcount(sf_dir: str) -> int:
     """Row count from Parquet footers only — a true metadata read on the
     driver (pyarrow sums row-group counts; no Spark job, no data pages).
-    Sizing the block grid is the only consumer, so the fallback when
-    pyarrow is missing is a column-pruned Spark count."""
-    try:
-        import pyarrow.dataset as ds
+    Sizing the block grid is the only consumer."""
+    import pyarrow.dataset as ds
 
-        return ds.dataset(
-            f"{sf_dir}/embeddings.parquet", format="parquet"
-        ).count_rows()
-    except Exception:  # noqa: BLE001 — sizing only, any count works
-        return load_table(spark, sf_dir, "embeddings").count()
+    return ds.dataset(f"{sf_dir}/embeddings.parquet", format="parquet").count_rows()
 
 
 def _empty_pairs(score_col: str):
@@ -1066,7 +1060,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n = _embeddings_rowcount(spark, sf_dir)  # footer metadata, no Spark job
+    n = _embeddings_rowcount(sf_dir)  # footer metadata, no Spark job
     n_blocks = max(1, -(-n // 1024))
     fanout, indexed = _block_sides(spark, sf_dir, n_blocks, n_blocks)
 

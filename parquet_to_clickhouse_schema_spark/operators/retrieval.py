@@ -14,8 +14,6 @@ LLM-pipeline contract (BASELINE.json:6), not §2.1.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -356,21 +354,22 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     {MMR_K} greedy steps over the top-{MMR_N} shortlist of cosine
     relevance against an md5-derived query vector.
 
-    Greedy selection is inherently sequential, so both engines UNROLL the
-    {MMR_K} steps: Spark chains {MMR_K} lazy (anti-join → max-sim → argmax)
-    stages over the bounded candidate frame (no collect — the driver never
-    sees a row); the oracle chains one CTE pair per step, the same trick
-    as q_pagerank_ranks' unrolled power iterations. Determinism: relevance
-    and pairwise sims are quantized at 1e-4 BEFORE any comparison, every
-    argmax orders by (score, vec_id) — a total order — and the score
-    arithmetic ({MMR_LAMBDA}*qrel − {MMR_MU}*maxsim, both weights written
-    as literals so neither engine computes 1−λ) is the identical IEEE
-    expression shape cross-engine. Scale shape: the shortlist is top-N
-    (TakeOrdered, no global sort); everything after operates on N={MMR_N}
-    rows — at 100 TB N grows to maybe 10³ and the N² sim matrix is one
-    broadcast-sized frame; the corpus-sized work stays in the shortlist
-    scan. MMR's candidates-then-greedy split is exactly what makes it
-    usable at scale."""
+    Greedy selection is inherently sequential. The oracle UNROLLS the
+    {MMR_K} steps as one CTE pair per step, the same trick as
+    q_pagerank_ranks' unrolled power iterations. Spark builds the quantized
+    shortlist relevance and pairwise sims lazily, then runs the whole greedy
+    loop inside ONE cogroup task on a constant key (no collect — the driver
+    never sees a row, and no step launches a job of its own). Determinism:
+    relevance and pairwise sims are quantized at 1e-4 BEFORE any
+    comparison, every argmax orders by (score, vec_id) — a total order —
+    and the score arithmetic ({MMR_LAMBDA}*qrel − {MMR_MU}*maxsim, both
+    weights written as literals so neither engine computes 1−λ) is the
+    identical IEEE expression shape in Python floats and in DuckDB. Scale
+    shape: the shortlist is top-N (TakeOrdered, no global sort); everything
+    after operates on N={MMR_N} rows — at 100 TB N grows to maybe 10³ and
+    the greedy task holds the N² sim matrix, a few MB; the corpus-sized
+    work stays in the shortlist scan. MMR's candidates-then-greedy split is
+    exactly what makes it usable at scale."""
     # r16 (VERDICT r15 #4): the relevance scan is ROW-LOCAL — the query
     # vector is collected into one broadcast array row (_query_vec_row)
     # and the dot/norm are zip_with/aggregate folds over the embedding
@@ -400,10 +399,9 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("qrel"),
     )
-    # localCheckpoint (the graph.py iterative-op pattern, NOT .cache —
-    # nothing pinned for the session) truncates lineage so the MMR_K
-    # unrolled steps below reuse these MMR_N-row frames instead of
-    # re-scanning embeddings once per step
+    # localCheckpoint (NOT .cache — nothing pinned for the session): both
+    # sides of the sim crossJoin below read this MMR_N-row frame, which
+    # would otherwise re-run the embedding scan once per side
     cand_full = (
         scored.orderBy(F.col("qrel").desc(), "vec_id")
         .limit(MMR_N)
@@ -436,52 +434,40 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("qsim"),
         )
-        .localCheckpoint()
     )
 
-    s1 = (
-        cand.orderBy(F.col("qrel").desc(), "vec_id")
-        .limit(1)
-        .select(
-            "vec_id",
-            F.lit(1).alias("step"),
-            (F.lit(MMR_LAMBDA) * F.col("qrel")).alias("score"),
-        )
+    # the greedy loop holds N qrel values and N² sims, so it runs as ONE
+    # cogroup task on a constant key: plain Python floats evaluate the same
+    # IEEE expression (lam*qrel − mu*msim) Spark would, and no per-step job,
+    # barrier or checkpoint is needed. Nested, so it ships by value.
+    k, lam, mu = MMR_K, MMR_LAMBDA, MMR_MU
+
+    def greedy(cand_pdf, sims_pdf):
+        import pandas as pd
+
+        qrel = dict(zip(cand_pdf["vec_id"].tolist(), cand_pdf["qrel"].tolist()))
+        pairs = zip(sims_pdf["a"].tolist(), sims_pdf["b"].tolist())
+        sim = dict(zip(pairs, sims_pdf["qsim"].tolist()))
+
+        def score(v):
+            if not selected:
+                return lam * qrel[v]
+            return lam * qrel[v] - mu * max(sim[v, s] for s in selected)
+
+        picks, selected = [], []
+        for step in range(1, min(k, len(qrel)) + 1):
+            rest = (v for v in qrel if v not in selected)
+            v = min(rest, key=lambda v: (-score(v), v))
+            picks.append((step, v, score(v)))
+            selected.append(v)
+        return pd.DataFrame(picks, columns=["step", "vec_id", "score"])
+
+    picks = (
+        cand.groupBy(F.lit("all"))
+        .cogroup(sims.groupBy(F.lit("all")))
+        .applyInPandas(greedy, "step int not null, vec_id long, score double")
     )
-    # r18: each unrolled pick is localCheckpoint'ed (1 row). Lazy chaining
-    # made step k's plan re-derive every previous pick — the final union
-    # was a 325-node plan whose TakeOrdered branches recomputed the whole
-    # greedy prefix per step (4 steps ≈ 2^k tiny-job blowup at the tail).
-    # Checkpointing the single-row pick truncates that recursion; the
-    # greedy loop stays fully distributed (no collect — the driver still
-    # never sees a row). Anchor median 1.94 → 1.52 s at sf0.1.
-    picks = [s1.localCheckpoint()]
-    selected = picks[0].select("vec_id")
-    for step in range(2, MMR_K + 1):
-        rem = cand.join(selected, "vec_id", "left_anti")
-        msim = (
-            sims.join(selected.withColumnRenamed("vec_id", "b"), "b")
-            .groupBy("a")
-            .agg(F.max("qsim").alias("msim"))
-            .withColumnRenamed("a", "vec_id")
-        )
-        pick = (
-            rem.join(msim, "vec_id")
-            .select(
-                "vec_id",
-                F.lit(step).alias("step"),
-                (
-                    F.lit(MMR_LAMBDA) * F.col("qrel")
-                    - F.lit(MMR_MU) * F.col("msim")
-                ).alias("score"),
-            )
-            .orderBy(F.col("score").desc(), "vec_id")
-            .limit(1)
-            .localCheckpoint()
-        )
-        picks.append(pick)
-        selected = selected.union(pick.select("vec_id"))
-    return reduce(DataFrame.union, picks).select(
+    return picks.select(
         F.col("step").cast("int").alias("step"),
         "vec_id",
         qround(F.col("score"), 6).alias("mmr_score"),

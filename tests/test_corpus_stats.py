@@ -715,6 +715,22 @@ def test_bpe_train_matches_pure_python_reference(spark):
     assert got == ref
 
 
+def test_bpe_train_launches_no_job_per_merge(spark):
+    """The merge loop runs inside one task: constructing the trainer
+    launches as many jobs for 2 merges as for 6."""
+    from .conftest import construct_jobs
+
+    words = spark.createDataFrame(
+        [("lower", 5), ("newest", 6), ("widest", 3)], "tok string, wfreq long"
+    )
+    jobs, rows = {}, {}
+    for n in (2, 6):
+        jobs[n], df = construct_jobs(spark, lambda: tx.bpe_train(words, n_merges=n))
+        rows[n] = df.count()
+    assert rows == {2: 2, 6: 6}
+    assert jobs[2] == jobs[6]
+
+
 def test_bpe_train_verified_equals_production_trainer(spark):
     """q_bpe_train_verified (r16, oracle-gated): the unrolled declarative
     twin's BPEV_ROUNDS merges must equal the production trainer's first
@@ -780,7 +796,12 @@ def test_bpe_train_survives_word_collapse_under_ansi(spark):
     words = spark.createDataFrame(
         [("ab", 100), ("abc", 10), ("cd", 5)], "tok string, wfreq long"
     )
-    merges = bpe_train(spark, words, n_merges=4)
+    merges = [
+        (r.left, r.right, r.pair_count)
+        for r in sorted(
+            bpe_train(words, n_merges=4).collect(), key=lambda r: r.merge_rank
+        )
+    ]
     # first merge collapses 'ab' (the dominant word) into one symbol
     assert merges[0] == ("a", "b", 110)
     assert len(merges) >= 2  # training continued past the collapse

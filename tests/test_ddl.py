@@ -1447,6 +1447,57 @@ def test_alter_scans_each_side_once(tmp_path, monkeypatch):
     assert len(reads) == 2
 
 
+@pytest.mark.parametrize("cached", [False, True])
+def test_cli_drift_report_scans_once(tmp_path, monkeypatch, cached):
+    """--drift-report takes the hive partition columns, the report and the
+    cache telemetry from one dataset scan: one directory walk and one
+    footer read per fragment."""
+    import contextlib
+    import io
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as _pq
+
+    from parquet_to_clickhouse_schema_spark.cli import main
+
+    d = tmp_path / "t.parquet"
+    for year, typ in ((2024, pa.int64()), (2025, pa.int32())):
+        (d / f"year={year}").mkdir(parents=True)
+        _write_fragment(d / f"year={year}", "part-000.parquet",
+                        {"id": pa.array([1], typ)})
+
+    walks, reads = [], []
+    real_walk, real_read = os.walk, _pq.read_metadata
+    monkeypatch.setattr(
+        os, "walk", lambda p, *a, **kw: (walks.append(p), real_walk(p, *a, **kw))[1]
+    )
+    monkeypatch.setattr(
+        _pq, "read_metadata",
+        lambda f, **kw: (reads.append(str(f)), real_read(f, **kw))[1],
+    )
+    argv = ["--drift-report", str(d)]
+    if cached:
+        argv += ["--drift-cache", str(tmp_path / "cache.json")]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = main(argv)
+    assert rc == 3
+    assert buf.getvalue() == "".join(
+        [
+            f"{d}: hive partition columns (from directory layout, not "
+            "footers): year int\n",
+            f"{d}: 2 footer(s) read, 2 partition(s) rescanned, 0 served "
+            "from cache\n" if cached else "",
+            f"{d}/year=2025/part-000.parquet: id type_changed "
+            "(reference bigint, found int)\n",
+            "1 disagreement(s)\n",
+        ]
+    )
+    assert walks == [str(d)]
+    assert len(reads) == 2
+
+
 def test_unified_schema_promotes_map_values(tmp_path):
     """Map value types widen through --unify too (int32+int64 value →
     Map(String, Int64)) — the container family test_unified_schema_nested

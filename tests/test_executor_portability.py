@@ -1,0 +1,64 @@
+"""Executor-side code must not need the package on the executors' path.
+
+Spark's Python workers import what a task pickled by reference. When the
+package is reachable only through the driver's ``sys.path`` (no
+``PYTHONPATH``, a working directory outside the repo), a by-reference
+function fails every task with ``ModuleNotFoundError``. This runs the
+footer fan-out and the two in-task greedy loops in exactly that setting.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+from tests.conftest import SF_SMOKE
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_PROBE = """
+import json, sys
+sys.path.insert(0, {repo!r})
+import pyarrow as pa, pyarrow.parquet as pq
+from parquet_to_clickhouse_schema_spark.ddl import fragment_schemas
+from parquet_to_clickhouse_schema_spark.functions.text_core import q_bpe_train
+from parquet_to_clickhouse_schema_spark.operators.retrieval import q_mmr_diversify
+from parquet_to_clickhouse_schema_spark.session import get_spark
+
+for i in range(3):
+    pq.write_table(pa.table({{"id": pa.array([i], pa.int64())}}),
+                   f"lake/part-{{i}}.parquet")
+spark = get_spark("portability")
+dist = fragment_schemas("lake", spark, distributed_threshold=1)
+print(json.dumps({{
+    "fanout_equal": [(f, s.json()) for f, s in dist]
+                    == [(f, s.json()) for f, s in fragment_schemas("lake")],
+    "fanout_files": len(dist),
+    "mmr_rows": q_mmr_diversify(spark, {sf!r}).count(),
+    "bpe_rows": q_bpe_train(spark, {sf!r}).count(),
+}}))
+"""
+
+
+def test_executor_code_runs_without_package_on_worker_path(tmp_path):
+    (tmp_path / "lake").mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _PROBE.format(repo=_REPO, sf=SF_SMOKE)],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        cwd=tmp_path,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {
+        "fanout_equal": True,
+        "fanout_files": 3,
+        "mmr_rows": 4,
+        "bpe_rows": 6,
+    }

@@ -873,6 +873,25 @@ def test_mmr_diversify_picks_are_greedy_and_distinct(spark):
     assert all(rows[0].mmr_score >= r.mmr_score for r in rows[1:])
 
 
+def test_mmr_diversify_launches_no_job_per_greedy_step(spark, monkeypatch):
+    """The greedy loop runs inside one task: constructing the query
+    launches as many jobs for MMR_K=2 as for MMR_K=4."""
+    from parquet_to_clickhouse_schema_spark.operators import retrieval
+
+    from .conftest import construct_jobs
+
+    retrieval.q_mmr_diversify(spark, SF_SMOKE)  # warm the scan
+    jobs, rows = {}, {}
+    for k in (2, 4):
+        monkeypatch.setattr(retrieval, "MMR_K", k)
+        jobs[k], df = construct_jobs(
+            spark, lambda: retrieval.q_mmr_diversify(spark, SF_SMOKE)
+        )
+        rows[k] = df.count()
+    assert rows == {2: 2, 4: 4}
+    assert jobs[2] == jobs[4]
+
+
 def test_emb_rows_raises_on_ragged_embedding(spark, tmp_path):
     """r17 (ADVICE r16): zip_with pads a width mismatch with NULL, which
     would poison the cosine fold into a silent NULL — _emb_rows must make
