@@ -13,6 +13,12 @@ and the MEDIAN is reported — single-shot timings on a shared sandbox swing
 1.2-3.6x run-to-run with zero code change (measured r3 vs r4), which is
 noise, not signal. Codegen/JIT warmup lands in rep 1 and the median
 discards it.
+
+    python bench.py [key ...]
+
+Named registry keys are timed in place of HEADLINE, the way a single key is
+anchored in BASELINE.md; the output has the same shape and the full payload
+still goes to BENCH_NORMALIZED.json.
 """
 
 from __future__ import annotations
@@ -108,33 +114,27 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    keys = sys.argv[1:] or HEADLINE
     spark = get_spark("bench")
     queries = registry.all_queries()
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
     times: dict[str, float] = {}
 
-    def median_time(fn) -> float:
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            samples.append(time.time() - t0)
-        return round(statistics.median(samples), 3)
+    def timed(key: str) -> dict:
+        # plan construction inside the timer, so no rep benefits from a
+        # previous rep's materialized AQE plan
+        return registry.time_key(spark, key, lambda: queries[key](spark, sf_dir))
 
     # Contention sentinel (VERDICT r11 #3): a fixed ~0.3 s warm canary
-    # (q_topk through the noop sink) timed before and after the suite, plus
-    # os.getloadavg() at both points. The sandbox is shared; whole-suite
-    # drifts of 1.2-1.5x with zero code change have shown up twice (r8, r11)
-    # and previously had to be adjudicated by hand-rerunning queries. If the
-    # after/before canary ratio is far from 1.0 or the load average is high,
-    # the round's numbers are machine-labeled as contended, not regressed.
-    def canary_time() -> float:
-        df = queries["q_topk"](spark, sf_dir)
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
+    # (q_topk's execute time through the noop sink) timed before and after
+    # the suite, plus os.getloadavg() at both points. The sandbox is shared;
+    # whole-suite drifts of 1.2-1.5x with zero code change have shown up
+    # twice (r8, r11) and previously had to be adjudicated by hand-rerunning
+    # queries. If the after/before canary ratio is far from 1.0 or the load
+    # average is high, the round's numbers are machine-labeled as contended,
+    # not regressed.
+    #
     # 8 discarded warmups: one is not enough — r12's artifact showed the
     # "before" median still riding the JIT/codegen ramp (0.308 s vs 0.135 s
     # after, drift_ratio 0.438 on an otherwise-clean run). A measured r13
@@ -144,7 +144,7 @@ def main() -> None:
     # and treat only drift_ratio ABOVE the contended threshold as a
     # machine signal; a ratio somewhat under 1.0 is residual JIT, benign.
     for _ in range(8):
-        canary_time()
+        timed("q_topk")
     # r17 (VERDICT r16 #4): BETWEEN-run host drift. Three same-day r16 runs
     # on identical binaries spanned 66.5-75.9 s while the before/after
     # sentinel stayed clean — the pair detects within-run contention but
@@ -157,31 +157,31 @@ def main() -> None:
     # r16-backfill formula documented in BASELINE.md "cross-run noise
     # calibration".
     canary_samples: list[float] = []
-    before_samples = [canary_time() for _ in range(3)]
+    before_samples = [timed("q_topk")["execute_s"] for _ in range(3)]
     canary_samples.extend(before_samples)
     sentinel_before = round(statistics.median(before_samples), 3)
     load_before = [round(x, 2) for x in os.getloadavg()]
 
-    # the reference's core op: footer-only DDL (no Spark job expected)
-    times["schema_to_clickhouse"] = median_time(
-        lambda: schema_to_clickhouse(
+    # the reference's core op: footer-only DDL (no Spark job, so timed here
+    # rather than through registry.time_key)
+    ddl_samples = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        schema_to_clickhouse(
             f"{sf_dir}/lineitem.parquet", "lineitem", "l_orderkey", spark=spark
         )
-    )
+        ddl_samples.append(time.perf_counter() - t0)
+    times["schema_to_clickhouse"] = round(statistics.median(ddl_samples), 3)
 
-    for i, name in enumerate(HEADLINE):
-        # plan construction inside the timer (run builds the DataFrame
-        # each rep), so no rep benefits from a previous rep's materialized
-        # AQE plan
-        def run(name=name):
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-
-        times[name] = median_time(run)
+    for i, name in enumerate(keys):
+        runs = [timed(name) for _ in range(reps)]
+        times[name] = round(
+            statistics.median(r["construct_s"] + r["execute_s"] for r in runs), 3
+        )
         if (i + 1) % 5 == 0:
-            canary_samples.append(canary_time())
+            canary_samples.append(timed("q_topk")["execute_s"])
 
-    after_samples = [canary_time() for _ in range(3)]
+    after_samples = [timed("q_topk")["execute_s"] for _ in range(3)]
     canary_samples.extend(after_samples)
     sentinel_after = round(statistics.median(after_samples), 3)
     load_after = [round(x, 2) for x in os.getloadavg()]

@@ -7,9 +7,13 @@ ORACLES only when its DuckDB twin hash-matches (rows-only otherwise).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import time
+import uuid
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from parquet_to_clickhouse_schema_spark.functions import (
     scalar,
@@ -229,3 +233,54 @@ def all_oracles() -> dict[str, str]:
     # Same priority-first ordering as all_queries(), in case the driver
     # iterates oracle keys rather than query keys.
     return {k: merged[k] for k in _emission_order(merged)}
+
+
+# The local properties SparkContext.setJobGroup sets; key_scope restores them.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+@contextmanager
+def key_scope(spark: SparkSession, key: str) -> Iterator[Callable[[], int]]:
+    """Tag every Spark job started inside the block with a fresh job group
+    described as ``key``. Yields a callable returning how many jobs the
+    group has started; jobs of a nested scope count only there. The
+    caller's job group is restored on exit, also when the block raises."""
+    sc = spark.sparkContext
+    saved = [(p, sc.getLocalProperty(p)) for p in _JOB_GROUP_PROPS]
+    group = f"key-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, key)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for prop, value in saved:
+            sc.setLocalProperty(prop, value)
+
+
+def time_key(spark: SparkSession, key: str, build: Callable[[], DataFrame]) -> dict:
+    """One run of a key: ``build()`` inside the timer under one key scope,
+    then a noop-sink write that counts rows through an Observation under a
+    second. Returns construct_s, execute_s, rows, construct_jobs and jobs
+    (construct plus execute)."""
+    obs = Observation()
+    with key_scope(spark, key) as construct_jobs:
+        t0 = time.perf_counter()
+        df = build()
+        construct_s = time.perf_counter() - t0
+    with key_scope(spark, key) as execute_jobs:
+        t0 = time.perf_counter()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        execute_s = time.perf_counter() - t0
+    n_construct = construct_jobs()
+    return {
+        "construct_s": construct_s,
+        "execute_s": execute_s,
+        "rows": obs.get["rows"],
+        "construct_jobs": n_construct,
+        "jobs": n_construct + execute_jobs(),
+    }

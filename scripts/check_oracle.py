@@ -28,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from parquet_to_clickhouse_schema_spark import registry  # noqa: E402
 from parquet_to_clickhouse_schema_spark.session import get_spark  # noqa: E402
 from parquet_to_clickhouse_schema_spark.sources.io import TABLES  # noqa: E402
 
@@ -190,9 +191,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
+            with registry.key_scope(spark, name):
+                sdf = fn(spark, sf_dir)
+                s_cols = sdf.columns
+                s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
             print(f"FAIL  {name:28s} spark error: {str(e)[:200]}")

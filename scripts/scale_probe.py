@@ -8,18 +8,19 @@ should show time ratios ~= k (linear in input) — superlinear growth exposes a
 shuffle/skew problem before a cluster ever does.
 
 Usage: python scripts/scale_probe.py [k]      (default k=10, ~6M lineitem rows)
-Writes scaled parquet under /tmp/spark_graft_scale/ (reused across runs).
+Writes scaled parquet under /tmp/spark_graft_scale_v2/x<k>/ (reused across runs).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_to_clickhouse_schema_spark import registry
@@ -142,68 +143,38 @@ R7B_QUERIES = (
 
 KEY_SHIFT = 10_000_000_000
 
+# Key columns each replica shifts by i * KEY_SHIFT; other tables are copied.
+# lineitem/orders keep join cardinalities honest; documents/embeddings repeat
+# their text and vectors (fine for timing; dedup finds the planted copies,
+# which is realistic); events shift (event_id, user_id): k-times more USERS
+# with the same per-user sequence depth — the realistic growth axis for
+# event streams (windows/sessionization per user stay constant-size).
+SHIFTED = {
+    "lineitem": ("l_orderkey",),
+    "orders": ("o_orderkey",),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
+    "events": ("event_id", "user_id"),
+}
+
 
 def build_scaled(spark, k: int) -> str:
     out = f"{SCALED_ROOT}/x{k}"
     if os.path.isdir(f"{out}/lineitem.parquet"):
         return out
-    li = load_table(spark, BASE_SF, "lineitem")
-    o = load_table(spark, BASE_SF, "orders")
-    li_k = None
-    o_k = None
-    for i in range(k):
-        shift = F.lit(i * KEY_SHIFT)
-        li_i = li.withColumn("l_orderkey", F.col("l_orderkey") + shift)
-        o_i = o.withColumn("o_orderkey", F.col("o_orderkey") + shift)
-        li_k = li_i if li_k is None else li_k.unionAll(li_i)
-        o_k = o_i if o_k is None else o_k.unionAll(o_i)
-    li_k.write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-    o_k.write.mode("overwrite").parquet(f"{out}/orders.parquet")
-    # documents/embeddings scale by id shift too (text/vectors repeat —
-    # fine for timing; dedup finds the planted copies, which is realistic)
-    docs = load_table(spark, BASE_SF, "documents")
-    emb = load_table(spark, BASE_SF, "embeddings")
-    d_k = None
-    e_k = None
-    for i in range(k):
-        shift = F.lit(i * KEY_SHIFT)
-        d_i = docs.withColumn("doc_id", F.col("doc_id") + shift)
-        e_i = emb.withColumn("vec_id", F.col("vec_id") + shift)
-        d_k = d_i if d_k is None else d_k.unionAll(d_i)
-        e_k = e_i if e_k is None else e_k.unionAll(e_i)
-    d_k.write.mode("overwrite").parquet(f"{out}/documents.parquet")
-    e_k.write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
-    # events scale by (event_id, user_id) shift: k-times more USERS with the
-    # same per-user sequence depth — the realistic growth axis for event
-    # streams (windows/sessionization per user stay constant-size)
-    ev = load_table(spark, BASE_SF, "events")
-    ev_k = None
-    for i in range(k):
-        shift = F.lit(i * KEY_SHIFT)
-        ev_i = ev.withColumn("event_id", F.col("event_id") + shift).withColumn(
-            "user_id", F.col("user_id") + shift
-        )
-        ev_k = ev_i if ev_k is None else ev_k.unionAll(ev_i)
-    ev_k.write.mode("overwrite").parquet(f"{out}/events.parquet")
     for t in TABLES:
-        if t in ("lineitem", "orders", "documents", "embeddings", "events"):
-            continue
-        dst = f"{out}/{t}.parquet"
-        if not os.path.isdir(dst):
-            load_table(spark, BASE_SF, t).write.mode("overwrite").parquet(dst)
+        df = load_table(spark, BASE_SF, t)
+        cols = SHIFTED.get(t, ())
+        if cols:
+            df = functools.reduce(
+                DataFrame.unionAll,
+                (
+                    df.withColumns({c: F.col(c) + F.lit(i * KEY_SHIFT) for c in cols})
+                    for i in range(k)
+                ),
+            )
+        df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
     return out
-
-
-def time_query(fn, spark, sf_dir: str) -> tuple[float, int]:
-    from pyspark.sql import Observation
-
-    t0 = time.time()
-    obs = Observation()
-    # observe on the noop write: row count from the SAME single execution
-    fn(spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    return round(time.time() - t0, 3), int(obs.get["rows"])
 
 
 def main() -> None:
@@ -226,14 +197,17 @@ def main() -> None:
         # re-probing changed operators
         if a.startswith("--keys="):
             keys = a[len("--keys="):].split(",")
-    registered = registry.all_queries()
-    queries = {name: registered[name] for name in keys}
+    queries = registry.all_queries()
+
+    def timed(name: str, sf_dir: str) -> tuple[float, int]:
+        r = registry.time_key(spark, name, lambda: queries[name](spark, sf_dir))
+        return round(r["construct_s"] + r["execute_s"], 3), r["rows"]
 
     results = {}
-    for name, fn in queries.items():
-        time_query(fn, spark, BASE_SF)  # warm (codegen, file listing)
-        base, base_rows = time_query(fn, spark, BASE_SF)
-        big, big_rows = time_query(fn, spark, scaled)
+    for name in keys:
+        timed(name, BASE_SF)  # warm (codegen, file listing)
+        base, base_rows = timed(name, BASE_SF)
+        big, big_rows = timed(name, scaled)
         entry = {
             "sf0.1_s": base,
             f"x{k}_s": big,

@@ -32,11 +32,11 @@ Usage: python scripts/skew_bench.py [reps]
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -142,12 +142,18 @@ def main() -> None:
     sf = BASE_SF
     build_fact(spark)
 
-    def sentinel() -> float:
-        t0 = time.monotonic()
-        registry.all_queries()["q_topk"](spark, sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.monotonic() - t0, 3)
+    topk = functools.partial(registry.all_queries()["q_topk"], spark, sf)
+
+    def timed(key: str, build) -> float:
+        r = registry.time_key(spark, key, build)
+        return round(r["construct_s"] + r["execute_s"], 3)
+
+    def variant(salted: bool):
+        fact = spark.read.parquet(FACT_DIR)
+        su = spark.read.parquet(os.path.join(sf, "supplier.parquet")).select(
+            "s_suppkey", "s_nationkey"
+        )
+        return agg_join(fact, su, salted)
 
     no_bcast = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
     no_aqe = {"spark.sql.adaptive.enabled": "false"}
@@ -159,8 +165,8 @@ def main() -> None:
     }
 
     for _ in range(4):
-        sentinel()
-    s_before = round(statistics.median([sentinel() for _ in range(3)]), 3)
+        timed("q_topk", topk)
+    s_before = round(statistics.median([timed("q_topk", topk) for _ in range(3)]), 3)
 
     times: dict[str, list] = {k: [] for k in variants}
     counts: dict[str, int] = {}
@@ -168,16 +174,9 @@ def main() -> None:
         for name, (confs, salted) in variants.items():
             old = _confs(spark, confs)
             try:
-                t0 = time.monotonic()
-                fact = spark.read.parquet(FACT_DIR)
-                su = spark.read.parquet(
-                    os.path.join(sf, "supplier.parquet")
-                ).select("s_suppkey", "s_nationkey")
-                df = agg_join(fact, su, salted)
-                df.write.format("noop").mode("overwrite").save()
-                times[name].append(round(time.monotonic() - t0, 3))
+                times[name].append(timed(name, functools.partial(variant, salted)))
                 if name not in counts:  # full value parity, once per variant
-                    counts[name] = sorted(map(tuple, df.collect()))
+                    counts[name] = sorted(map(tuple, variant(salted).collect()))
             finally:
                 _restore(spark, old)
     base = counts["plain_shuffle"]
@@ -185,7 +184,7 @@ def main() -> None:
         if rows != base:
             raise AssertionError(f"{name} result differs from plain_shuffle")
 
-    s_after = round(statistics.median([sentinel() for _ in range(3)]), 3)
+    s_after = round(statistics.median([timed("q_topk", topk) for _ in range(3)]), 3)
     out = {
         "metric": "skew_join_ab",
         "fact_rows": K * 600_000,

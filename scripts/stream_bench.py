@@ -21,13 +21,13 @@ Usage: python scripts/stream_bench.py [sf_dir] [reps]
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import statistics
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -54,14 +54,6 @@ N_FILES = int(os.environ.get("STREAM_BENCH_FILES", "10"))
 # 32-vs-8 A/B is committed in docs/STREAMING.md). Applied around the
 # streaming runs only (the batch sentinel sees the session default).
 STREAM_SHUFFLE = os.environ.get("STREAM_BENCH_SHUFFLE", "auto")
-
-
-def _sentinel(spark, sf_dir: str) -> float:
-    t0 = time.monotonic()
-    registry.all_queries()["q_topk"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return round(time.monotonic() - t0, 3)
 
 
 def _op_session_window(ev):
@@ -208,7 +200,9 @@ def main() -> None:
         base.repartition(N_FILES).write.parquet(src_dir)
         schema = spark.read.parquet(src_dir).schema
 
-        s_before = _sentinel(spark, sf_dir)
+        topk = functools.partial(registry.all_queries()["q_topk"], spark, sf_dir)
+        r = registry.time_key(spark, "q_topk", topk)
+        s_before = round(r["construct_s"] + r["execute_s"], 3)
         default_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         if STREAM_SHUFFLE == "auto":
             from parquet_to_clickhouse_schema_spark.streaming.stream_demo import (
@@ -267,7 +261,8 @@ def main() -> None:
             }
         if stream_shuffle:
             spark.conf.set("spark.sql.shuffle.partitions", default_shuffle)
-        s_after = _sentinel(spark, sf_dir)
+        r = registry.time_key(spark, "q_topk", topk)
+        s_after = round(r["construct_s"] + r["execute_s"], 3)
 
         out = {
             "metric": "stream_micro_batch",

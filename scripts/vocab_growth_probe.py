@@ -29,12 +29,12 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from parquet_to_clickhouse_schema_spark import registry  # noqa: E402
 from parquet_to_clickhouse_schema_spark.functions import text_models  # noqa: E402
 from parquet_to_clickhouse_schema_spark.session import get_spark  # noqa: E402
 
@@ -87,19 +87,6 @@ def build_corpus(spark, k: int, out_dir: str) -> None:
     )
 
 
-def time_query(spark, fn, sf_dir: str, reps: int = 3):
-    samples = []
-    rows = None
-    for _ in range(reps):
-        t0 = time.monotonic()
-        df = fn(spark, sf_dir)  # construction INSIDE the timer
-        df.write.format("noop").mode("overwrite").save()
-        samples.append(round(time.monotonic() - t0, 3))
-        if rows is None:
-            rows = df.count()
-    return round(statistics.median(samples), 3), samples, rows
-
-
 def state_size(spark, sf_dir: str) -> dict:
     """The two state tables the plans materialize: (source, tok) and
     (lang, tok) distinct counts, plus total tokens."""
@@ -131,8 +118,15 @@ def main() -> None:
         spark.read.parquet(os.path.join(dd, "documents.parquet")).count()
 
     for name, fn in QUERIES.items():
-        m1, s1, r1 = time_query(spark, fn, dirs[1])
-        mk, sk, rk = time_query(spark, fn, dirs[k])
+        timed = {}
+        for kk, dd in dirs.items():
+            runs = [
+                registry.time_key(spark, name, lambda dd=dd: fn(spark, dd))
+                for _ in range(3)
+            ]
+            samples = [round(r["construct_s"] + r["execute_s"], 3) for r in runs]
+            timed[kk] = (round(statistics.median(samples), 3), samples, runs[0]["rows"])
+        (m1, s1, r1), (mk, sk, rk) = timed[1], timed[k]
         out[name] = {
             "t_1x_s": m1,
             "t_kx_s": mk,

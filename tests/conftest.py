@@ -1,6 +1,5 @@
 import os
 import sys
-import uuid
 
 import pytest
 
@@ -18,15 +17,3 @@ def spark():
     s = get_spark("tests")
     yield s
 
-
-def construct_jobs(spark, build):
-    """(number of Spark jobs ``build()`` launched, its result): the jobs a
-    query runs while it is constructed, before anything executes it."""
-    sc = spark.sparkContext
-    group = f"construct-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out

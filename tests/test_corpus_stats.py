@@ -718,14 +718,16 @@ def test_bpe_train_matches_pure_python_reference(spark):
 def test_bpe_train_launches_no_job_per_merge(spark):
     """The merge loop runs inside one task: constructing the trainer
     launches as many jobs for 2 merges as for 6."""
-    from .conftest import construct_jobs
+    from parquet_to_clickhouse_schema_spark.registry import key_scope
 
     words = spark.createDataFrame(
         [("lower", 5), ("newest", 6), ("widest", 3)], "tok string, wfreq long"
     )
     jobs, rows = {}, {}
     for n in (2, 6):
-        jobs[n], df = construct_jobs(spark, lambda: tx.bpe_train(words, n_merges=n))
+        with key_scope(spark, "bpe_train") as construct_jobs:
+            df = tx.bpe_train(words, n_merges=n)
+        jobs[n] = construct_jobs()
         rows[n] = df.count()
     assert rows == {2: 2, 6: 6}
     assert jobs[2] == jobs[6]

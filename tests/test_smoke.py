@@ -877,16 +877,15 @@ def test_mmr_diversify_launches_no_job_per_greedy_step(spark, monkeypatch):
     """The greedy loop runs inside one task: constructing the query
     launches as many jobs for MMR_K=2 as for MMR_K=4."""
     from parquet_to_clickhouse_schema_spark.operators import retrieval
-
-    from .conftest import construct_jobs
+    from parquet_to_clickhouse_schema_spark.registry import key_scope
 
     retrieval.q_mmr_diversify(spark, SF_SMOKE)  # warm the scan
     jobs, rows = {}, {}
     for k in (2, 4):
         monkeypatch.setattr(retrieval, "MMR_K", k)
-        jobs[k], df = construct_jobs(
-            spark, lambda: retrieval.q_mmr_diversify(spark, SF_SMOKE)
-        )
+        with key_scope(spark, "q_mmr_diversify") as construct_jobs:
+            df = retrieval.q_mmr_diversify(spark, SF_SMOKE)
+        jobs[k] = construct_jobs()
         rows[k] = df.count()
     assert rows == {2: 2, 4: 4}
     assert jobs[2] == jobs[4]
