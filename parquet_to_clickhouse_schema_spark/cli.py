@@ -15,6 +15,9 @@ Standalone modes (each exits without the four required flags):
     --list-queries [FILTER]      operator catalog with gate status
     --drift-report DATASET_DIR   per-fragment footer drift (exit 0/3)
 Day-2 mode: --diff-against OLD_PARQUET emits ALTER TABLE migration DDL.
+--timings prints each dataset scan's phase timings (listing, footer reads,
+Arrow->Spark conversion, rendering) and footer-read count to stderr;
+stdout is unchanged.
 """
 
 from __future__ import annotations
@@ -23,9 +26,20 @@ import argparse
 import sys
 
 from parquet_to_clickhouse_schema_spark.ddl import (
-    schema_diff_to_clickhouse_alter,
-    schema_to_clickhouse,
+    _alter_table_ddl,
+    _create_table_ddl,
+    _scan_dataset,
 )
+
+
+def _write_timings(scans) -> None:
+    for scan in scans:
+        sys.stderr.write(
+            f"{scan.path}: {len(scan.rels)} fragment(s), listing "
+            f"{scan.listing_s:.6f} s, {scan.footers_read} footer(s) read in "
+            f"{scan.footer_s:.6f} s, convert {scan.convert_s:.6f} s, render "
+            f"{scan.render_s:.6f} s\n"
+        )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -62,6 +76,12 @@ def main(argv: list[str] | None = None) -> int:
         "footers; the file is created on first run and rewritten "
         "atomically each run",
     )
+    ap.add_argument(
+        "--timings",
+        action="store_true",
+        help="print each dataset scan's phase timings (listing, footer "
+        "reads, conversion, rendering) and footer-read count to stderr",
+    )
 
     def _is_standalone_flag(a: str) -> bool:
         # exact flag (or --flag=VALUE) only: a prefix test would also
@@ -80,8 +100,6 @@ def main(argv: list[str] | None = None) -> int:
             # swallow the other request
             ap.error("--drift-report and --list-queries are mutually exclusive")
         if args.drift_report is not None:
-            from parquet_to_clickhouse_schema_spark.ddl import _scan_dataset
-
             # one listing and one footer pass serve the partition columns,
             # the report and the cache telemetry
             scan = _scan_dataset(args.drift_report, args.drift_cache)
@@ -104,6 +122,8 @@ def main(argv: list[str] | None = None) -> int:
                     f"{len(scan.reused)} served from cache\n"
                 )
             drift = scan.drift_report()
+            if args.timings:
+                _write_timings([scan])
             if not drift:
                 sys.stdout.write(
                     f"{args.drift_report}: all fragment footers agree\n"
@@ -121,6 +141,8 @@ def main(argv: list[str] | None = None) -> int:
                 )
             sys.stdout.write(f"{len(drift)} disagreement(s)\n")
             return 3
+        if args.timings:
+            ap.error("--timings does not apply to --list-queries")
         from parquet_to_clickhouse_schema_spark.catalog import (
             describe_queries,
             format_catalog,
@@ -162,28 +184,29 @@ def main(argv: list[str] | None = None) -> int:
 
     pk = [c.strip() for c in args.primary_key.split(",")] if "," in args.primary_key else args.primary_key
 
+    # the library entry points, over scans kept for --timings
     if args.diff_against is not None:
-        ddl = schema_diff_to_clickhouse_alter(
-            args.diff_against,
-            args.parquet_path,
+        scans = [_scan_dataset(args.diff_against), _scan_dataset(args.parquet_path)]
+        ddl = _alter_table_ddl(
+            *scans,
             args.table_name,
-            primary_key=pk,
+            pk,
             strict=not args.lenient,
             out_path=args.clickhouse_schema_path,
         )
-        sys.stdout.write(ddl)
-        return 0
-
-    ddl = schema_to_clickhouse(
-        args.parquet_path,
-        args.table_name,
-        pk,
-        out_path=args.clickhouse_schema_path,
-        strict=not args.lenient,
-        unify=args.unify,
-        drift_cache=args.drift_cache,
-    )
+    else:
+        scans = [_scan_dataset(args.parquet_path, args.drift_cache)]
+        ddl = _create_table_ddl(
+            scans[0],
+            args.table_name,
+            pk,
+            out_path=args.clickhouse_schema_path,
+            strict=not args.lenient,
+            unify=args.unify,
+        )
     sys.stdout.write(ddl)
+    if args.timings:
+        _write_timings(scans)
     return 0
 
 

@@ -47,6 +47,7 @@ import json
 import os
 import re
 import sys
+import time
 import warnings
 from typing import Iterable
 
@@ -372,6 +373,7 @@ def _scan_dataset(
     fragment_schemas) only matter once every footer is needed."""
     from urllib.parse import unquote
 
+    t0 = time.perf_counter()
     if not os.path.isdir(path):
         base, name = os.path.split(path)
         return _DatasetScan(path, base, [name], ([], {}, [], []), cache_path, spark)
@@ -402,10 +404,16 @@ def _scan_dataset(
     inter = set(keys).intersection(*leaf_keysets)
     ragged = sorted(k for k in set().union(*leaf_keysets) if k not in inter)
     hive = (keys, values, sorted(null_keys), ragged)
-    return _DatasetScan(path, path, sorted(rels), hive, cache_path, spark)
+    scan = _DatasetScan(path, path, sorted(rels), hive, cache_path, spark)
+    scan.listing_s = time.perf_counter() - t0
+    return scan
 
 
 _SCAN_CACHE_VERSION = 2
+
+# fragments to read at or above which a scan given a SparkSession fans its
+# footer reads out as Spark tasks (calibration: fragment_schemas)
+_FOOTER_FANOUT_THRESHOLD = 8192
 
 
 class _DatasetScan:
@@ -414,7 +422,18 @@ class _DatasetScan:
     ONE exemplar per distinct fingerprint (see _read_footer), so every
     product — the strict physical-type check, the drift report, the unified
     schema and the first-fragment schema — costs one conversion per
-    distinct footer schema, not one per file."""
+    distinct footer schema, not one per file.
+
+    Every footer read, on the driver or in the fan-out, goes through
+    _read_footer_metadata: one tail read per file, parsed by pyarrow's
+    ParquetReader over the footer bytes, with its ArrowInvalid/OSError
+    contract; each batch converts one footer per distinct schema. The
+    scan reports its own cost: ``footers_read`` counts those reads, and
+    ``listing_s`` (walk plus the cache's stat pass), ``footer_s``,
+    ``convert_s`` (Arrow→Spark conversion and unification) and
+    ``render_s`` (DDL rendering, set by the CREATE/ALTER paths) are wall
+    seconds, each phase timed as a whole rather than per file (the CLI's
+    ``--timings``)."""
 
     def __init__(self, path, base, rels, hive, cache_path, spark):
         self.path, self.base, self.rels = path, base, rels
@@ -428,13 +447,15 @@ class _DatasetScan:
         self.reused: list[str] = []
         self.footers_read = 0
         self.reset_from_root: str | None = None
+        # phase timers (see the class docstring)
+        self.listing_s = self.footer_s = self.convert_s = self.render_s = 0.0
 
     def file(self, rel: str) -> str:
         # join with the CALLER's path, not an absolutized root, so cached
         # and uncached runs report identical paths on relative inputs
         return os.path.join(self.base, rel)
 
-    def read_all(self, distributed_threshold: int = 8192) -> None:
+    def read_all(self, distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD) -> None:
         """Fingerprint every fragment. Fragments are grouped by partition
         directory; with a cache file, a partition whose listing fingerprint
         (md5 over names, sizes and mtime_ns) is unchanged and whose
@@ -451,6 +472,7 @@ class _DatasetScan:
             by_part.setdefault(os.path.dirname(rel) or ".", []).append(rel)
         parts: dict[str, dict] = {}
         to_read: list[str] = []
+        t0 = time.perf_counter()
         for part, rels in sorted(by_part.items()):
             lfp = None
             if self.cache_path is not None:
@@ -473,8 +495,10 @@ class _DatasetScan:
                 to_read += rels
                 entry = {"listing_fp": lfp, "files": {}}
             parts[part] = entry
+        self.listing_s += time.perf_counter() - t0
 
         files = [self.file(rel) for rel in to_read]
+        t0 = time.perf_counter()
         if self.spark is not None and len(files) >= distributed_threshold:
             sc = self.spark.sparkContext
             n_slices = max(1, min(len(files) // 8, sc.defaultParallelism * 4))
@@ -491,7 +515,9 @@ class _DatasetScan:
                 if owned:
                     cloudpickle.unregister_pickle_by_value(module)
         else:
-            batches = _read_footers(files)
+            batches = list(_read_footers(files))
+        self.footer_s += time.perf_counter() - t0
+        self.footers_read += len(files)
         fp_by_file: dict[str, str] = {}
         for fps, exemplars in batches:
             fp_by_file.update(fps)
@@ -505,7 +531,6 @@ class _DatasetScan:
                 base64.b64decode(cached_ex[fp]["ipc"]),
                 cached_ex[fp]["violations"],
             )
-        self.footers_read = len(files)
         if self.cache_path is not None:
             tmp = f"{self.cache_path}.tmp"
             with open(tmp, "w", encoding="utf-8") as fh:
@@ -563,7 +588,9 @@ class _DatasetScan:
 
     def spark_schema(self, fp: str) -> T.StructType:
         if fp not in self.spark_schemas:
+            t0 = time.perf_counter()
             self.spark_schemas[fp] = _to_spark(self.arrow_schema(fp))
+            self.convert_s += time.perf_counter() - t0
         return self.spark_schemas[fp]
 
     def violations(self) -> list[str]:
@@ -603,7 +630,10 @@ class _DatasetScan:
             return T.StructType([])
         first = self.rels[0]
         if first not in self.fp_by_rel:  # read_all has not run
+            t0 = time.perf_counter()
             fp, exemplar = _read_footer(self.file(first))
+            self.footer_s += time.perf_counter() - t0
+            self.footers_read += 1
             self.fp_by_rel[first] = fp
             self.exemplars.setdefault(fp, exemplar)
         return self.spark_schema(self.fp_by_rel[first])
@@ -612,7 +642,12 @@ class _DatasetScan:
         """The dataset's Spark schema: the first fragment's footer — or,
         with ``unify``, the promoted union of every distinct footer (after
         read_all) — plus the hive partition columns no footer carries."""
-        footer = self._unified() if unify else self.first_footer()
+        if unify:
+            t0 = time.perf_counter()
+            footer = self._unified()
+            self.convert_s += time.perf_counter() - t0
+        else:
+            footer = self.first_footer()
         return T.StructType(footer.fields + self.partition_fields(footer.names))
 
     def _unified(self) -> T.StructType:
@@ -657,9 +692,73 @@ class _DatasetScan:
         return fields
 
 
-def _read_footer(file_path: str) -> tuple[str, tuple[bytes, list[str]]]:
-    """(fingerprint, exemplar) for one fragment from ONE
-    ``pq.read_metadata``. The exemplar holds the footer's Arrow schema as
+# the tail read: 64 KiB, the footer read size pyarrow's own reader starts
+# with, holds the whole footer of all but very wide or many-row-group files
+_FOOTER_READ_BYTES = 64 * 1024
+
+
+def _read_footer_metadata(file_path: str):
+    """The ``pq.FileMetaData`` of one local Parquet file, from its tail
+    alone: one ``os.pread`` of the last 64 KiB (a second one only for a
+    longer footer) yields the footer length, the ``PAR1`` magic and the
+    footer bytes, which pyarrow's ``ParquetReader`` then opens as a
+    one-footer buffer. No pyarrow filesystem is resolved, no file handle
+    is wrapped and no ``ParquetFile`` is built — at lake scale those cost
+    more than the parse itself.
+
+    The parse goes through the reader's checked open, not the bare thrift
+    deserializer (``_reconstruct_filemetadata``, what
+    ``FileMetaData.__reduce__`` unpickles with): pyarrow declares the
+    latter without C++ exception translation, so malformed thrift behind
+    an intact tail would abort the process instead of raising.
+
+    Error contract: a file shorter than the 12 bytes of magic, footer
+    length and magic, a tail without ``PAR1`` (``PARE`` marks an encrypted
+    footer, which needs keys this reader does not take), a footer length
+    running past the file, or a file that shrinks mid-read raises
+    ``pa.ArrowInvalid``; malformed thrift raises pyarrow's OSError, and an
+    OSError of the file system keeps its type. Every error names the file
+    and chains the original one."""
+    import pyarrow as pa
+    from pyarrow._parquet import ParquetReader
+
+    try:
+        fd = os.open(file_path, os.O_RDONLY)
+        try:
+            size = os.fstat(fd).st_size
+            if size < 12:
+                raise pa.ArrowInvalid(f"{size} bytes is too short for a Parquet file")
+            want = min(size, _FOOTER_READ_BYTES)
+            tail = os.pread(fd, want, size - want)
+            if len(tail) == want:
+                length = int.from_bytes(tail[-8:-4], "little")
+                if tail[-4:] == b"PARE":
+                    raise pa.ArrowInvalid("the footer is encrypted (magic PARE)")
+                if tail[-4:] != b"PAR1":
+                    raise pa.ArrowInvalid(f"no PAR1 magic at the end (found {tail[-4:]!r})")
+                if length > size - 12:
+                    raise pa.ArrowInvalid(
+                        f"the footer length {length} runs past the file size {size}"
+                    )
+                if length + 8 > want:
+                    want = length + 8
+                    tail = os.pread(fd, want, size - want)
+            if len(tail) != want:
+                raise pa.ArrowInvalid("the file shrank while its footer was read")
+        finally:
+            os.close(fd)
+        reader = ParquetReader()
+        reader.open(pa.py_buffer(b"PAR1" + tail[-8 - length:]))
+    except (OSError, pa.ArrowException) as e:
+        raise type(e)(f"cannot read the Parquet footer of {file_path}: {e}") from e
+    return reader.metadata
+
+
+def _read_footer(
+    file_path: str, seen: dict | None = None
+) -> tuple[str, tuple[bytes, list[str]]]:
+    """(fingerprint, exemplar) for one fragment from ONE footer read
+    (_read_footer_metadata). The exemplar holds the footer's Arrow schema as
     IPC bytes, with the schema-level key-value metadata stripped (writer
     blobs such as pandas' carry per-file row counts, which would split one
     schema into many), plus the columns whose PHYSICAL type the reference
@@ -672,16 +771,26 @@ def _read_footer(file_path: str) -> tuple[str, tuple[bytes, list[str]]]:
     rejected by _scalar's DECIMAL arm with the right message. The
     fingerprint is an md5 over both parts.
 
-    Runs on the driver or inside a Spark task. An unreadable footer raises
-    pyarrow's error type, naming the fragment, with pyarrow's error
-    chained."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    With ``seen`` (a batch's memo), a footer whose parquet schema and
+    ``ARROW:schema`` blob equal an earlier one's reuses its result: those
+    two are all the conversion reads (ParquetSchema equality compares
+    names, repetition, physical, converted and logical types, lengths,
+    decimal parameters and field ids), so fragments sharing one schema pay
+    one conversion, not one per file.
 
+    Runs on the driver or inside a Spark task. An unreadable footer raises
+    pyarrow's error type (see _read_footer_metadata), naming the fragment,
+    with the original error chained."""
+    import pyarrow as pa
+
+    md = _read_footer_metadata(file_path)
+    footer = md.schema
+    key = (footer, (md.metadata or {}).get(b"ARROW:schema"))
+    if seen is not None and key in seen:
+        return seen[key]
     try:
-        footer = pq.read_metadata(file_path).schema
         ipc = footer.to_arrow_schema().remove_metadata().serialize().to_pybytes()
-    except (OSError, pa.ArrowException) as e:
+    except pa.ArrowException as e:
         raise type(e)(f"cannot read the Parquet footer of {file_path}: {e}") from e
     violations: list[str] = []
     for i in range(len(footer)):
@@ -693,6 +802,8 @@ def _read_footer(file_path: str) -> tuple[str, tuple[bytes, list[str]]]:
             if f"{col.name} ({kind})" not in violations:
                 violations.append(f"{col.name} ({kind})")
     fp = hashlib.md5(ipc + "\n".join(violations).encode("utf-8")).hexdigest()
+    if seen is not None:
+        seen[key] = fp, (ipc, violations)
     return fp, (ipc, violations)
 
 
@@ -703,8 +814,9 @@ def _read_footers(files):
     one exemplar per distinct footer, not one schema per file."""
     fp_by_file: dict[str, str] = {}
     exemplars: dict[str, tuple[bytes, list[str]]] = {}
+    seen: dict = {}
     for f in files:
-        fp, exemplar = _read_footer(f)
+        fp, exemplar = _read_footer(f, seen)
         fp_by_file[f] = fp
         exemplars.setdefault(fp, exemplar)
     yield fp_by_file, exemplars
@@ -792,7 +904,27 @@ def schema_to_clickhouse(
     call then happens ONLY for partitions whose listing changed since the
     last run, so repeat DDL generation on an unchanged 10⁵-file table
     costs a directory listing and zero footer reads."""
-    scan = _scan_dataset(parquet_path, drift_cache, spark)
+    return _create_table_ddl(
+        _scan_dataset(parquet_path, drift_cache, spark),
+        table_name,
+        primary_key,
+        out_path=out_path,
+        strict=strict,
+        unify=unify,
+    )
+
+
+def _create_table_ddl(
+    scan: _DatasetScan,
+    table_name: str,
+    primary_key: str | Iterable[str],
+    *,
+    out_path: str | None,
+    strict: bool,
+    unify: bool,
+) -> str:
+    """schema_to_clickhouse over an already-listed dataset (the CLI keeps
+    the scan to report its phase timings)."""
     if strict or unify:
         scan.read_all()
     if strict:
@@ -810,7 +942,7 @@ def schema_to_clickhouse(
             )
             raise SchemaDriftError(
                 f"{len(drift)} fragment-schema disagreement(s) in "
-                f"{parquet_path} (vs first fragment) — DDL would "
+                f"{scan.path} (vs first fragment) — DDL would "
                 f"misdescribe the drifted part-files: {preview}"
                 f"{' …' if len(drift) > 5 else ''} "
                 "(pass unify=True / --unify to emit the promoted "
@@ -821,13 +953,16 @@ def schema_to_clickhouse(
     # footer typing in the column list but are still the table's
     # partition keys; dropping the clause for them would silently
     # un-partition the table)
+    schema = scan.schema(unify)
+    t0 = time.perf_counter()
     ddl = struct_to_clickhouse_ddl(
-        scan.schema(unify),
+        schema,
         table_name,
         primary_key,
         strict=strict,
         partition_by=scan.keys or None,
     )
+    scan.render_s += time.perf_counter() - t0
     if scan.ragged_keys:
         # a key present under some branches but absent from others
         # (ragged layout) means rows with NO value for the partition
@@ -937,7 +1072,7 @@ def _schema_changes(old_schema: T.StructType, new_schema: T.StructType) -> list[
 def fragment_schemas(
     path: str,
     spark: SparkSession | None = None,
-    distributed_threshold: int = 8192,
+    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
 ) -> list[tuple[str, T.StructType]]:
     """(fragment file, footer schema) for every part-file of a dataset.
 
@@ -950,26 +1085,27 @@ def fragment_schemas(
     pyarrow and ships back fingerprints plus one exemplar per distinct
     footer.
 
-    Threshold calibration (measured r12): on a LOCAL filesystem a footer
-    read is ~0.14 ms, so the driver loop beats the fan-out up to tens of
-    thousands of files (512 fragments: 0.07 s driver vs 0.65 s warm
-    Spark — task overhead dominates); the default therefore stays high.
-    The fan-out pays off on object storage, where each footer read is a
-    10-50 ms round-trip and a 10⁵-file table costs the driver 20-80
-    serial minutes vs seconds across executors — lower the threshold when
-    the dataset lives on S3/GCS/HDFS. Order is sorted file order either
-    way, and both paths return identical results (tested).
+    Threshold calibration (tail-read footer reader with its per-batch
+    schema memo, local disk, warm local[4] session, 2,000-16,000-fragment
+    nested hive lakes, medians of 5 interleaved reps): serial vs fan-out
+    0.24 vs 1.00 s at 2,000 fragments, 1.49 vs 1.82 s at 8,200, 1.79 vs
+    1.53 s at 10,200, 1.76 vs 1.71 s at 12,000 and 1.86 vs 1.52 s at
+    16,000. The local crossover sits between 8,200 and 10,200 fragments,
+    so the 8192 default (_FOOTER_FANOUT_THRESHOLD) costs at most ~0.3 s
+    on local disk just above it. The fan-out pays off on object storage,
+    where each footer read is a 10-50 ms round-trip and a 10⁵-file table
+    costs the driver 20-80 serial minutes vs seconds across executors —
+    lower the threshold when the dataset lives on S3/GCS/HDFS. Order is
+    sorted file order either way, and both paths return identical
+    results (tested).
 
     Collect cost model: tasks ship back one (file, md5-fingerprint) pair
     per fragment plus ONE exemplar per DISTINCT footer schema,
     deduplicated inside each task. A 10⁵-file drifted table therefore
     returns 10⁵ 16-byte digests and a handful of KB-sized exemplars — not
-    10⁵ full schema payloads. Measured r13 at exactly the 8192-file
-    threshold (local FS, 2-schema drifted corpus): driver loop 1.13 s vs
-    fingerprint fan-out 1.07 s — the crossover sits right at the
-    calibrated default even locally, and every object-store footer adds
-    10-50 ms per file to the driver side only. Each distinct schema is
-    converted to Spark types once and shared across its files."""
+    10⁵ full schema payloads. Every object-store footer adds 10-50 ms
+    per file to the driver side only. Each distinct schema is converted
+    to Spark types once and shared across its files."""
     scan = _scan_dataset(path, spark=spark)
     scan.read_all(distributed_threshold)
     return [(scan.file(rel), scan.spark_schema(scan.fp_by_rel[rel])) for rel in scan.rels]
@@ -1000,7 +1136,7 @@ def unified_parquet_schema(path: str, *, drift_cache: str | None = None) -> T.St
 def schema_drift_report(
     path: str,
     spark: SparkSession | None = None,
-    distributed_threshold: int = 8192,
+    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
 ) -> list[dict]:
     """Intra-dataset schema drift: every fragment whose footer disagrees
     with the dataset's first (sorted-order) fragment, as schema_diff-style
@@ -1021,7 +1157,7 @@ def incremental_drift_scan(
     path: str,
     cache_path: str,
     spark: SparkSession | None = None,
-    distributed_threshold: int = 8192,
+    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
 ) -> dict:
     """schema_drift_report with a per-partition footer cache (r14, VERDICT
     r13 task #8): re-reading every footer of a 10⁵-file table on every
@@ -1136,16 +1272,38 @@ def schema_diff_to_clickhouse_alter(
     Returns a comment line when the footers already agree (including
     column order).
     """
+    # one scan per side: the schema and the hive keys come from the same
+    # walk and the same first-fragment footer
+    return _alter_table_ddl(
+        _scan_dataset(old_path),
+        _scan_dataset(new_path),
+        table_name,
+        primary_key,
+        strict=strict,
+        out_path=out_path,
+    )
+
+
+def _alter_table_ddl(
+    old_scan: _DatasetScan,
+    new_scan: _DatasetScan,
+    table_name: str,
+    primary_key: str | Iterable[str] | None,
+    *,
+    strict: bool,
+    out_path: str | None,
+) -> str:
+    """schema_diff_to_clickhouse_alter over two already-listed datasets
+    (the CLI keeps the scans to report their phase timings). Rendering the
+    statements is timed on the new side's scan."""
     if primary_key is None:
         pks: set[str] = set()
     elif isinstance(primary_key, str):
         pks = {primary_key}
     else:
         pks = set(primary_key)
-    # one scan per side: the schema and the hive keys come from the same
-    # walk and the same first-fragment footer
-    old_scan, new_scan = _scan_dataset(old_path), _scan_dataset(new_path)
     old_schema, new_schema = old_scan.schema(), new_scan.schema()
+    t0 = time.perf_counter()
     old_top = {f.name: f for f in old_schema.fields}
     new_top = {f.name: f for f in new_schema.fields}
     # hive directory columns are the CREATE path's `partition by` keys —
@@ -1362,6 +1520,7 @@ def schema_diff_to_clickhouse_alter(
         if stmts
         else f"-- {table_name}: footers match; no ALTER needed\n"
     )
+    new_scan.render_s += time.perf_counter() - t0
     if out_path is not None:
         with open(out_path, "w") as fh:
             fh.write(ddl)

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from parquet_to_clickhouse_schema_spark.ddl import (
+    _read_footer_metadata,
+    _scan_dataset,
     infer_parquet_schema,
     struct_to_clickhouse_ddl,
     struct_to_spark_ddl,
@@ -129,7 +131,8 @@ def q_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     0's directory is additionally rewritten through `compact_small_files`
     (size-aware target count + write_sorted clustering). The returned rows
     are per-bucket (n_rows, min_key, max_key) read from FOOTER METADATA
-    ONLY — pyarrow row-group statistics, the ddl.py scan path — for the
+    ONLY — row-group statistics through ddl.py's listing and footer
+    reader (_scan_dataset, _read_footer_metadata) — for the
     partitioned layout plus a 'compacted' row for the rewritten bucket.
     Footer stats for INT64 columns are exact, so the metadata answer must
     equal the oracle's data answer bit-for-bit.
@@ -144,7 +147,6 @@ def q_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from parquet_to_clickhouse_schema_spark.sources.formats import (
@@ -179,20 +181,18 @@ def q_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         def footer_stats(path: str):
             """(n_rows, min, max) of l_orderkey from row-group metadata."""
             n_rows, mnv, mxv = 0, None, None
-            for root, _dirs, names in os.walk(path):
-                for name in sorted(names):
-                    if not name.endswith(".parquet"):
-                        continue
-                    md = pq.ParquetFile(os.path.join(root, name)).metadata
-                    idx = md.schema.names.index("l_orderkey")
-                    for g in range(md.num_row_groups):
-                        rg = md.row_group(g)
-                        n_rows += rg.num_rows
-                        st = rg.column(idx).statistics
-                        if st is None or not st.has_min_max:
-                            raise ValueError(f"missing footer stats in {name}")
-                        mnv = st.min if mnv is None else min(mnv, st.min)
-                        mxv = st.max if mxv is None else max(mxv, st.max)
+            scan = _scan_dataset(path)
+            for rel in scan.rels:
+                md = _read_footer_metadata(scan.file(rel))
+                idx = md.schema.names.index("l_orderkey")
+                for g in range(md.num_row_groups):
+                    rg = md.row_group(g)
+                    n_rows += rg.num_rows
+                    st = rg.column(idx).statistics
+                    if st is None or not st.has_min_max:
+                        raise ValueError(f"missing footer stats in {rel}")
+                    mnv = st.min if mnv is None else min(mnv, st.min)
+                    mxv = st.max if mxv is None else max(mxv, st.max)
             return n_rows, mnv, mxv
 
         rows = []

@@ -351,11 +351,11 @@ def q_parquet_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts hash-match. The oracle string pins the driver's gate SF dir
     (the only SF the oracle side ever runs at); the Spark side stays
     sf_dir-parameterized for bench/tests at other SFs."""
-    import pyarrow.parquet as pq
+    from parquet_to_clickhouse_schema_spark.ddl import _read_footer_metadata
 
     rows = []
     for t in TABLES:
-        md = pq.ParquetFile(f"{sf_dir}/{t}.parquet").metadata
+        md = _read_footer_metadata(f"{sf_dir}/{t}.parquet")
         rows.append((t, md.num_row_groups, md.num_rows, md.num_columns))
     return spark.createDataFrame(rows, _META_SCHEMA)
 
@@ -406,18 +406,23 @@ def q_column_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes read are O(columns), not O(data)); at real fleet scale the same
     per-file loop distributes as a parallelize over
     `spark.read.parquet(...).inputFiles` with this exact body per file.
-    Directory datasets are handled (every fragment's footer contributes),
-    so the probe corpus' multi-file tables audit identically. The
+    Directory datasets are handled (every fragment's footer contributes,
+    listed and read like the DDL core's: _scan_dataset with Spark's
+    hidden-path rule, then _read_footer_metadata per fragment), so the
+    probe corpus' multi-file tables audit identically. The
     aggregation and both derived ratios are integer-sum arithmetic with
     one IEEE divide each, 1e-6-quantized — hash-identical to DuckDB's
     parquet_metadata() over the same footers."""
-    import pyarrow.parquet as pq
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        _read_footer_metadata,
+        _scan_dataset,
+    )
 
     rows = []
     for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        for fpath in pq.ParquetDataset(path).files:
-            md = pq.ParquetFile(fpath).metadata
+        scan = _scan_dataset(f"{sf_dir}/{t}.parquet")
+        for rel in scan.rels:
+            md = _read_footer_metadata(scan.file(rel))
             for i in range(md.num_row_groups):
                 rg = md.row_group(i)
                 for j in range(rg.num_columns):

@@ -1415,8 +1415,8 @@ def test_alter_scans_each_side_once(tmp_path, monkeypatch):
     import os
 
     import pyarrow as pa
-    import pyarrow.parquet as _pq
 
+    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.ddl import (
         schema_diff_to_clickhouse_alter,
     )
@@ -1432,13 +1432,13 @@ def test_alter_scans_each_side_once(tmp_path, monkeypatch):
         sides[side] = str(d)
 
     walks, reads = [], []
-    real_walk, real_read = os.walk, _pq.read_metadata
+    real_walk, real_read = os.walk, ddl_mod._read_footer_metadata
     monkeypatch.setattr(
         os, "walk", lambda p, *a, **kw: (walks.append(p), real_walk(p, *a, **kw))[1]
     )
     monkeypatch.setattr(
-        _pq, "read_metadata",
-        lambda f, **kw: (reads.append(str(f)), real_read(f, **kw))[1],
+        ddl_mod, "_read_footer_metadata",
+        lambda f: (reads.append(str(f)), real_read(f))[1],
     )
     ddl = schema_diff_to_clickhouse_alter(sides["old"], sides["new"], "t",
                                           primary_key="id")
@@ -1457,8 +1457,8 @@ def test_cli_drift_report_scans_once(tmp_path, monkeypatch, cached):
     import os
 
     import pyarrow as pa
-    import pyarrow.parquet as _pq
 
+    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.cli import main
 
     d = tmp_path / "t.parquet"
@@ -1468,13 +1468,13 @@ def test_cli_drift_report_scans_once(tmp_path, monkeypatch, cached):
                         {"id": pa.array([1], typ)})
 
     walks, reads = [], []
-    real_walk, real_read = os.walk, _pq.read_metadata
+    real_walk, real_read = os.walk, ddl_mod._read_footer_metadata
     monkeypatch.setattr(
         os, "walk", lambda p, *a, **kw: (walks.append(p), real_walk(p, *a, **kw))[1]
     )
     monkeypatch.setattr(
-        _pq, "read_metadata",
-        lambda f, **kw: (reads.append(str(f)), real_read(f, **kw))[1],
+        ddl_mod, "_read_footer_metadata",
+        lambda f: (reads.append(str(f)), real_read(f))[1],
     )
     argv = ["--drift-report", str(d)]
     if cached:
@@ -1931,8 +1931,8 @@ def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
     partition added later still raises SchemaDriftError through the cached
     path."""
     import pyarrow as pa
-    import pyarrow.parquet as _pq
 
+    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.ddl import SchemaDriftError
 
     d = tmp_path / "t.parquet"
@@ -1948,9 +1948,9 @@ def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
     # second run: no footer is read at all — the cached exemplars carry
     # the physical-type evidence as well as the schemas
     reads = []
-    real = _pq.read_metadata
+    real = ddl_mod._read_footer_metadata
     monkeypatch.setattr(
-        _pq, "read_metadata", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1]
+        ddl_mod, "_read_footer_metadata", lambda f: (reads.append(str(f)), real(f))[1]
     )
     out2 = schema_to_clickhouse(str(d), "t", "id", drift_cache=cache)
     assert out2 == out1
@@ -2005,8 +2005,8 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     import json as _json
 
     import pyarrow as pa
-    import pyarrow.parquet as _pq
 
+    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
     from parquet_to_clickhouse_schema_spark.ddl import (
         SchemaDriftError,
         incremental_drift_scan,
@@ -2028,9 +2028,9 @@ def test_unified_schema_drift_cache(tmp_path, monkeypatch):
     assert got1.simpleString() == expected.simpleString()
 
     reads = []
-    real = _pq.read_metadata
+    real = ddl_mod._read_footer_metadata
     monkeypatch.setattr(
-        _pq, "read_metadata", lambda f, **kw: (reads.append(str(f)), real(f, **kw))[1]
+        ddl_mod, "_read_footer_metadata", lambda f: (reads.append(str(f)), real(f))[1]
     )
     # drift, strict and unify calls interleaved on the one cache file are
     # each served from it entirely (the strict gate refuses the drifted
