@@ -9,6 +9,9 @@ move, no behavior change.
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,7 +29,6 @@ from parquet_to_clickhouse_schema_spark.operators.llm_ann import (
     _ann_plane_bits,
     _as_double_vec,
     _band_buckets,
-    _md5_unit_grid,
 )
 
 
@@ -593,62 +595,97 @@ def _pca_power_oracle(iters: int = PCA_ITERS) -> str:
     """
 
 
+def _embedding_moments(
+    spark: SparkSession, sf_dir: str, loop: Callable, schema: str
+) -> DataFrame:
+    """One scan of the embedding matrix X (rows × {ANN_V_DIM}) and labels y
+    into their centered second moments, then ``loop(n, G, b, yy)`` in one
+    task. Each partition folds its rows into uncentered sums (n, Σx, ΣxxT,
+    Σy, Σy², Σxy); one grouped-map task adds the partials in partition
+    order and centers them: G = X_cᵀX_c = Sxx − n·μμᵀ, b = X_cᵀy_c =
+    Sxy − n·μ·ȳ, yy = y_cᵀy_c = Syy − n·ȳ². The embedding dimensions have
+    |μ| ≪ σ, so the one-pass form agrees with the two-pass G to ~1e-15
+    relative. The task functions are nested, so they ship by value."""
+    dim = ANN_V_DIM
+
+    def partial_sums(batches):
+        import numpy as np
+        import pandas as pd
+        from pyspark import TaskContext
+
+        n, sy, syy = 0, 0.0, 0.0
+        sx, sxx, sxy = np.zeros(dim), np.zeros((dim, dim)), np.zeros(dim)
+        for pdf in batches:
+            x = np.array(pdf["embedding"].tolist(), "float64").reshape(-1, dim)
+            y = pdf["label"].to_numpy("float64")
+            n, sy, syy = n + len(y), sy + y.sum(), syy + y @ y
+            sx, sxx, sxy = sx + x.sum(axis=0), sxx + x.T @ x, sxy + x.T @ y
+        part = TaskContext.get().partitionId()
+        yield pd.DataFrame(
+            [(part, n, sx, sxx.ravel(), sy, syy, sxy)],
+            columns=["part", "n", "sx", "sxx", "sy", "syy", "sxy"],
+        )
+
+    def centered(pdf):
+        import numpy as np
+
+        pdf = pdf.sort_values("part")
+        sums = (sum(pdf[c].tolist()) for c in ("n", "sx", "sxx", "sy", "syy", "sxy"))
+        n, sx, sxx, sy, syy, sxy = sums
+        n = float(n)
+        mu, my = sx / n, sy / n
+        g = sxx.reshape(dim, dim) - n * np.outer(mu, mu)
+        return loop(n, g, sxy - n * mu * my, syy - n * my * my)
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "embedding", F.col("label").cast("double").alias("label")
+    )
+    parts = emb.mapInPandas(
+        partial_sums,
+        "part int, n long, sx array<double>, sxx array<double>, sy double, "
+        "syy double, sxy array<double>",
+    )
+    return parts.groupBy(F.lit("all")).applyInPandas(centered, schema)
+
+
 @_q("q_pca_power", _pca_power_oracle())
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed PCA top component by {PCA_ITERS} unrolled power
-    iterations over the centered embedding matrix: each step is two
-    matvecs — s = X_c·w (one groupBy(vec_id)) and u = X_cᵀ·s / n (one
-    groupBy(d)) — so the covariance NEVER materializes and the only state
-    between steps is a {ANN_V_DIM}-row broadcast vector. md5-grid init +
-    fixed iteration count make the whole computation (loadings AND the
-    ‖C·w‖ eigenvalue estimate) oracle-gated, the q_pagerank_ranks
-    discipline applied to linear algebra; the convergent production loop
-    is the same plan with a tolerance test.
+    """Distributed PCA top component by {PCA_ITERS} power iterations
+    w ← C·w / ‖C·w‖ over the covariance C = X_cᵀX_c / n of the centered
+    embedding matrix. md5-grid init (the `_md5_unit_grid` values, computed
+    on the driver) + fixed iteration count make the whole computation
+    (loadings AND the ‖C·w‖ eigenvalue estimate) oracle-gated, the
+    q_pagerank_ranks discipline applied to linear algebra; the convergent
+    production loop is the same task with a tolerance test.
 
-    Scale shape: per iteration one fact-sized shuffle keyed by vec_id and
-    one keyed by d ({ANN_V_DIM} groups, map-side combined); w is
-    localCheckpoint'ed per step so the lazy plan doesn't double. At
-    100 TB this is the standard matvec-style PCA — cost is
-    2·iters scans, memory O(dim)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    ext = emb.select("vec_id", F.posexplode("embedding").alias("d", "v")).withColumn(
-        "v", F.col("v").cast("double")
-    )
-    mu = ext.groupBy("d").agg(F.avg("v").alias("m"))
-    xc = (
-        ext.join(F.broadcast(mu), "d")
-        .select("vec_id", "d", (F.col("v") - F.col("m")).alias("x"))
-        .localCheckpoint()
-    )
-    n = float(emb.count())
-    w = (
-        _md5_unit_grid(spark, "pc", 1, ANN_V_DIM)
-        .select("d", F.col("val").alias("w"))
-        .localCheckpoint()
-    )
-    eig = None
-    for _t in range(PCA_ITERS):
-        s = (
-            xc.join(F.broadcast(w), "d")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("x") * F.col("w")).alias("s"))
-        )
-        u = (
-            xc.join(s, "vec_id")
-            .groupBy("d")
-            .agg((F.sum(F.col("x") * F.col("s")) / n).alias("u"))
-        )
-        nrm = u.agg(F.sqrt(F.sum(F.col("u") * F.col("u"))).alias("nrm"))
-        w = (
-            u.crossJoin(F.broadcast(nrm))
-            .select("d", (F.col("u") / F.col("nrm")).alias("w"))
-            .localCheckpoint()
-        )
-        eig = nrm.localCheckpoint()
-    return w.crossJoin(F.broadcast(eig)).select(
-        F.col("d").cast("int").alias("d"),
+    Scale shape: one scan folds the matrix into per-partition
+    {ANN_V_DIM}×{ANN_V_DIM} sums (`_embedding_moments`), then one task
+    adds them and runs every iteration on the Gram matrix — O(dim²)
+    memory and work per step, no shuffle of the fact rows, no job or
+    checkpoint per step."""
+    w0 = [
+        int(hashlib.md5(f"pc:0:{d}".encode()).hexdigest()[:4], 16) / 65535.0 * 2.0
+        - 1.0
+        for d in range(ANN_V_DIM)
+    ]
+    iters = PCA_ITERS
+
+    def power(n, g, b, yy):
+        import numpy as np
+        import pandas as pd
+
+        w = np.array(w0)
+        for _t in range(iters):
+            u = g @ w / n
+            eig = np.sqrt(u @ u)
+            w = u / eig
+        return pd.DataFrame({"d": range(len(w)), "w": w, "eig": eig})
+
+    out = _embedding_moments(spark, sf_dir, power, "d int, w double, eig double")
+    return out.select(
+        "d",
         qround(F.col("w"), 6).alias("loading"),
-        qround(F.col("nrm"), 6).alias("eigenvalue"),
+        qround(F.col("eig"), 6).alias("eigenvalue"),
     )
 
 
@@ -773,70 +810,29 @@ def q_linear_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     centered embedding by {PROBE_STEPS} unrolled gradient-descent steps
     (lr={PROBE_LR}, w₀=0) and emit the training MSE at every step — the
     standard representation-quality probe ("can a linear head learn
-    anything from this space?"), here fully oracle-gated because each
-    step is two matvecs with O(dim) state (the q_pca_power discipline)
-    and the step count is fixed. A flat MSE curve indicts the embedding,
-    not the probe.
+    anything from this space?"), here fully oracle-gated because the step
+    count is fixed. With G = X_cᵀX_c and b = X_cᵀy_c each step is
+    MSE = (wᵀGw − 2wᵀb + y_cᵀy_c)/n, then w ← w − lr·(G·w − b)/n. A flat
+    MSE curve indicts the embedding, not the probe.
 
-    Scale shape: per step one vec_id-keyed reduce (predictions/residuals)
-    and one dim-keyed reduce (gradient, {ANN_V_DIM} groups) — 2·steps
-    scans of the centered matrix, weights broadcast, nothing driver-side
-    beyond the {ANN_V_DIM}-row vector."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    ext = emb.select("vec_id", F.posexplode("embedding").alias("d", "v")).withColumn(
-        "v", F.col("v").cast("double")
-    )
-    mu = ext.groupBy("d").agg(F.avg("v").alias("m"))
-    xc = (
-        ext.join(F.broadcast(mu), "d")
-        .select("vec_id", "d", (F.col("v") - F.col("m")).alias("x"))
-        .localCheckpoint()
-    )
-    my = emb.agg(F.avg(F.col("label").cast("double"))).collect()[0][0]
-    yc = emb.select(
-        "vec_id", (F.col("label").cast("double") - F.lit(my)).alias("y")
-    ).localCheckpoint()
-    n = float(emb.count())
-    w = (
-        spark.range(ANN_V_DIM)
-        .select(F.col("id").alias("d"), F.lit(0.0).alias("w"))
-        .localCheckpoint()
-    )
-    mse_rows = []
-    for t in range(PROBE_STEPS):
-        pred = (
-            xc.join(F.broadcast(w), "d")
-            .groupBy("vec_id")
-            .agg(F.sum(F.col("x") * F.col("w")).alias("pred"))
-        )
-        res = pred.join(yc, "vec_id").select(
-            "vec_id", (F.col("pred") - F.col("y")).alias("res")
-        ).localCheckpoint()
-        mse = res.agg(
-            F.lit(t).cast("int").alias("step"),
-            (
-                F.floor(
-                    F.sum(F.col("res") * F.col("res")) / n * 1000000.0
-                    + F.lit(0.5)
-                )
-                / 1000000.0
-            ).alias("mse"),
-        )
-        mse_rows.append(mse)
-        g = (
-            xc.join(res, "vec_id")
-            .groupBy("d")
-            .agg((F.sum(F.col("x") * F.col("res")) / n).alias("g"))
-        )
-        w = (
-            w.join(g, "d")
-            .select("d", (F.col("w") - PROBE_LR * F.col("g")).alias("w"))
-            .localCheckpoint()
-        )
-    out = mse_rows[0]
-    for m in mse_rows[1:]:
-        out = out.unionAll(m)
-    return out
+    Scale shape: the q_pca_power shape — one scan into per-partition
+    {ANN_V_DIM}×{ANN_V_DIM} sums (`_embedding_moments`), then one task
+    runs every step on the Gram matrix; nothing is fact-sized after the
+    scan."""
+    steps, lr = PROBE_STEPS, PROBE_LR
+
+    def descend(n, g, b, yy):
+        import numpy as np
+        import pandas as pd
+
+        w, mses = np.zeros(len(b)), []
+        for _t in range(steps):
+            mses.append((w @ g @ w - 2.0 * (w @ b) + yy) / n)
+            w = w - lr * (g @ w - b) / n
+        return pd.DataFrame({"step": range(steps), "mse": mses})
+
+    out = _embedding_moments(spark, sf_dir, descend, "step int, mse double")
+    return out.select("step", qround(F.col("mse"), 6).alias("mse"))
 
 
 NDCG_K = 10

@@ -1,3 +1,3 @@
-from parquet_to_clickhouse_schema_spark.sources.io import TABLES, load_table, register_views
+from parquet_to_clickhouse_schema_spark.sources.io import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "register_views"]
+__all__ = ["TABLES", "load_table"]

@@ -74,22 +74,8 @@ def fanout_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     table — so at 100 TB it never adds an exchange; project the needed
     columns BEFORE calling so the one local exchange ships only them.
     The partition count is pinned (explicit N) so AQE cannot coalesce
-    the deliberately-small shuffle back to one partition.
-
-    ``spark.parquet_to_clickhouse_schema.fanout=false`` disables it
-    session-wide — the measurement/deployment escape hatch (interleaved
-    same-process A/Bs toggle it between reps; a deployment whose scans
-    are always multi-split can pin it off to skip the getNumPartitions
-    probe)."""
-    if spark.conf.get("spark.parquet_to_clickhouse_schema.fanout", "true") == "false":
-        return df
+    the deliberately-small shuffle back to one partition."""
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every table as a temp view (for the SQL-expressed operators)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"{prefix}{name}")

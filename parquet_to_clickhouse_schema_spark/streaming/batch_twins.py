@@ -1507,46 +1507,48 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     start, emitted beside the empirical state frequencies — agreement
     certifies the chain is already mixed (the long-run behavioral mix IS
     today's mix); divergence predicts drift. The q_pagerank_ranks /
-    q_pca_power unroll discipline on a |types|² matrix, so every join in
-    the loop is broadcast-tiny no matter the event volume.
+    q_pca_power unroll discipline on a |types|² matrix.
 
-    Scale shape: one fact-sized lead window (per-user partitions) to
-    count transitions; the iteration then runs entirely on |types|-row
-    tables."""
+    Scale shape: one fact-sized lead window (per-user partitions) and one
+    map-side-combined (src, dst) count; then one task builds P from the
+    |types|² counts and runs every step in O(|types|²), with no job or
+    checkpoint per step. The task function is nested, so it ships by
+    value."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         F.col("event_type").alias("src"),
         F.lead("event_type").over(w).alias("dst"),
     ).filter(F.col("dst").isNotNull())
-    pairs = seq.groupBy("src", "dst").agg(F.count("*").alias("n")).localCheckpoint()
-    tot = pairs.groupBy("src").agg(F.sum("n").alias("n_src"))
-    tm = pairs.join(tot, "src").select(
-        "src", "dst", (F.col("n") * 1.0 / F.col("n_src")).alias("p")
-    ).localCheckpoint()
-    n_states = tm.select("src").distinct().count()
-    p = tm.select("src").distinct().select(
-        F.col("src").alias("state"), F.lit(1.0 / n_states).alias("pr")
-    )
-    for _t in range(MSTAT_ITERS):
-        p = (
-            tm.join(p, tm.src == p.state)
-            .groupBy(F.col("dst").alias("state2"))
-            .agg(F.sum(F.col("pr") * F.col("p")).alias("pr"))
-            .withColumnRenamed("state2", "state")
-            .localCheckpoint()
+    pairs = seq.groupBy("src", "dst").agg(F.count("*").alias("n"))
+    iters = MSTAT_ITERS
+
+    def chain(pdf):
+        import pandas as pd
+
+        counts = sorted(zip(pdf["src"], pdf["dst"], pdf["n"].tolist()))
+        n_src = {}
+        for src, _dst, n in counts:
+            n_src[src] = n_src.get(src, 0) + n
+        pi = dict.fromkeys(n_src, 1.0 / len(n_src))
+        for _t in range(iters):
+            nxt = {}
+            for src, dst, n in counts:
+                if src in pi:
+                    nxt[dst] = nxt.get(dst, 0.0) + pi[src] * (n / n_src[src])
+            pi = nxt
+        total = sum(n_src.values())
+        rows = [(s, pr, n_src[s] / total) for s, pr in pi.items() if s in n_src]
+        return pd.DataFrame(rows, columns=["state", "pr", "f"])
+
+    return (
+        pairs.groupBy(F.lit("all"))
+        .applyInPandas(chain, "state string, pr double, f double")
+        .select(
+            "state",
+            qround(F.col("pr"), 6).alias("stationary_p"),
+            qround(F.col("f"), 6).alias("empirical_p"),
         )
-    total = pairs.agg(F.sum("n").alias("nn"))
-    emp = (
-        pairs.groupBy(F.col("src").alias("state"))
-        .agg(F.sum("n").alias("ns"))
-        .crossJoin(F.broadcast(total))
-        .select("state", (F.col("ns") * 1.0 / F.col("nn")).alias("f"))
-    )
-    return p.join(emp, "state").select(
-        "state",
-        qround(F.col("pr"), 6).alias("stationary_p"),
-        qround(F.col("f"), 6).alias("empirical_p"),
     )
 
 

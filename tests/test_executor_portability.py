@@ -4,7 +4,9 @@ Spark's Python workers import what a task pickled by reference. When the
 package is reachable only through the driver's ``sys.path`` (no
 ``PYTHONPATH``, a working directory outside the repo), a by-reference
 function fails every task with ``ModuleNotFoundError``. This runs the
-footer fan-out and the two in-task greedy loops in exactly that setting.
+footer fan-out, the two in-task greedy loops and the three in-task
+fixed-step loops (PCA, linear probe, Markov chain) in exactly that
+setting.
 """
 
 from __future__ import annotations
@@ -24,8 +26,12 @@ sys.path.insert(0, {repo!r})
 import pyarrow as pa, pyarrow.parquet as pq
 from parquet_to_clickhouse_schema_spark.ddl import fragment_schemas
 from parquet_to_clickhouse_schema_spark.functions.text_core import q_bpe_train
+from parquet_to_clickhouse_schema_spark.operators.llm_eval import (
+    q_linear_probe, q_pca_power)
 from parquet_to_clickhouse_schema_spark.operators.retrieval import q_mmr_diversify
 from parquet_to_clickhouse_schema_spark.session import get_spark
+from parquet_to_clickhouse_schema_spark.streaming.batch_twins import (
+    q_markov_stationary)
 
 for i in range(3):
     pq.write_table(pa.table({{"id": pa.array([i], pa.int64())}}),
@@ -38,6 +44,12 @@ print(json.dumps({{
     "fanout_files": len(dist),
     "mmr_rows": q_mmr_diversify(spark, {sf!r}).count(),
     "bpe_rows": q_bpe_train(spark, {sf!r}).count(),
+    "pca_rows": q_pca_power(spark, {sf!r}).count(),
+    "probe_rows": q_linear_probe(spark, {sf!r}).count(),
+    "markov_rows": q_markov_stationary(spark, {sf!r}).count(),
+    "event_types": len(set(pq.read_table({sf!r} + "/events.parquet",
+                                         columns=["event_type"])
+                           .column(0).to_pylist())),
 }}))
 """
 
@@ -56,9 +68,12 @@ def test_executor_code_runs_without_package_on_worker_path(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out.pop("markov_rows") == out.pop("event_types")
     assert out == {
         "fanout_equal": True,
         "fanout_files": 3,
         "mmr_rows": 4,
         "bpe_rows": 6,
+        "pca_rows": 64,
+        "probe_rows": 4,
     }

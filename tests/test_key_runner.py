@@ -8,6 +8,7 @@ from parquet_to_clickhouse_schema_spark.registry import (
     key_scope,
     time_key,
 )
+from parquet_to_clickhouse_schema_spark.sources.io import load_table
 
 from .conftest import SF_SMOKE
 
@@ -88,3 +89,25 @@ def test_nested_key_scope_counts_only_its_own_jobs(spark):
         _one_collect(spark)
     assert inner() == 3 * per_collect
     assert outer() == 2 * per_collect
+
+
+@pytest.mark.parametrize(
+    "key, table",
+    [
+        ("q_pca_power", "embeddings"),
+        ("q_linear_probe", "embeddings"),
+        ("q_markov_stationary", "events"),
+    ],
+)
+def test_fixed_step_loops_build_lazily_and_persist_nothing(spark, key, table):
+    """The PCA, linear-probe and Markov loops run inside one task: building
+    the key launches no job beyond its table scan's own (Spark's Parquet
+    schema inference), and running it persists no RDD."""
+    scan_jobs = _jobs_of(spark, lambda s: load_table(s, SF_SMOKE, table))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    q = all_queries()[key]
+    r = time_key(spark, key, lambda: q(spark, SF_SMOKE))
+    assert r["construct_jobs"] == scan_jobs
+    assert r["rows"] > 0
+    assert set(persisted().keys()) - before == set()
