@@ -69,11 +69,11 @@ def main(argv: list[str] | None = None) -> int:
         "--drift-cache",
         default=None,
         metavar="CACHE_JSON",
-        help="per-partition footer-fingerprint cache file (used by "
+        help="per-fragment footer-fingerprint cache file (used by "
         "--drift-report AND by the CREATE path's strict drift gate) — "
-        "unchanged partitions (same file names/sizes/mtimes) are served "
-        "from the cache and only mutated partitions re-read their "
-        "footers; the file is created on first run and rewritten "
+        "unchanged fragments (same name, size and mtime) are served "
+        "from the cache and only new or rewritten fragments have their "
+        "footers read; the file is created on first run and rewritten "
         "atomically each run",
     )
     ap.add_argument(

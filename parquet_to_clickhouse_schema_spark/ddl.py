@@ -370,18 +370,24 @@ def _scan_dataset(
     No footer is read here: the returned scan reads each footer on demand,
     at most once. ``cache_path`` (an incremental scan cache, see
     incremental_drift_scan) and ``spark`` (the footer fan-out, see
-    fragment_schemas) only matter once every footer is needed."""
+    fragment_schemas) only matter once every footer is needed. With a
+    ``cache_path`` the walk also takes each fragment's stat, the one
+    freshness check the cache makes; fragments are grouped by their walk
+    directory here, so the cache check joins no paths."""
     from urllib.parse import unquote
 
     t0 = time.perf_counter()
     if not os.path.isdir(path):
         base, name = os.path.split(path)
-        return _DatasetScan(path, base, [name], ([], {}, [], []), cache_path, spark)
+        stats = [os.stat(path) if cache_path is not None else None]
+        groups = [(".", os.path.join(base, ""), [name], [name], stats)]
+        return _DatasetScan(path, base, [name], groups, ([], {}, [], []), cache_path, spark)
     keys: list[str] = []
     values: dict[str, set[str]] = {}
     null_keys: set[str] = set()
     leaf_keysets: list[frozenset] = []
     rels: list[str] = []
+    groups: list[tuple] = []
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if not _hidden(d))
         rel = os.path.relpath(root, path)
@@ -397,19 +403,27 @@ def _scan_dataset(
                 # hive %-escapes special chars in values (Spark's
                 # escapePathName); ':' in timestamps arrives as %3A
                 values[k].add(unquote(v))
-        names = [f for f in files if f.endswith(".parquet") and not _hidden(f)]
+        names = sorted(f for f in files if f.endswith(".parquet") and not _hidden(f))
         if names:
             leaf_keysets.append(frozenset(k for k, _ in kv))
-            rels += [f if rel == "." else os.path.join(rel, f) for f in names]
+            here = names if rel == "." else [rel + os.sep + f for f in names]
+            rels += here
+            prefix = os.path.join(root, "")
+            if cache_path is not None:
+                stats = [os.stat(prefix + f) for f in names]
+            else:
+                stats = [None] * len(names)
+            groups.append((rel, prefix, names, here, stats))
     inter = set(keys).intersection(*leaf_keysets)
     ragged = sorted(k for k in set().union(*leaf_keysets) if k not in inter)
     hive = (keys, values, sorted(null_keys), ragged)
-    scan = _DatasetScan(path, path, sorted(rels), hive, cache_path, spark)
+    groups.sort(key=lambda g: g[0])
+    scan = _DatasetScan(path, path, sorted(rels), groups, hive, cache_path, spark)
     scan.listing_s = time.perf_counter() - t0
     return scan
 
 
-_SCAN_CACHE_VERSION = 2
+_SCAN_CACHE_VERSION = 3
 
 # fragments to read at or above which a scan given a SparkSession fans its
 # footer reads out as Spark tasks (calibration: fragment_schemas)
@@ -435,8 +449,11 @@ class _DatasetScan:
     seconds, each phase timed as a whole rather than per file (the CLI's
     ``--timings``)."""
 
-    def __init__(self, path, base, rels, hive, cache_path, spark):
+    def __init__(self, path, base, rels, groups, hive, cache_path, spark):
         self.path, self.base, self.rels = path, base, rels
+        # (partition dir, its file-path prefix, fragment names, their
+        # relative paths, their stats or None) per walk directory, sorted
+        self.groups = groups
         self.keys, self.values, self.null_keys, self.ragged_keys = hive
         self.cache_path, self.spark = cache_path, spark
         self.fp_by_rel: dict[str, str] = {}
@@ -456,48 +473,43 @@ class _DatasetScan:
         return os.path.join(self.base, rel)
 
     def read_all(self, distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD) -> None:
-        """Fingerprint every fragment. Fragments are grouped by partition
-        directory; with a cache file, a partition whose listing fingerprint
-        (md5 over names, sizes and mtime_ns) is unchanged and whose
-        exemplars are cached is served from the cache, and only the other
-        partitions' footers are read. At or above ``distributed_threshold``
-        footers to read (and given a SparkSession) the reads fan out over
-        executors. The cache file is then rewritten atomically."""
+        """Fingerprint every fragment. With a cache file, a fragment is
+        served from the cache when its name is cached in its partition
+        directory with the size and mtime_ns the walk just took and with
+        its exemplar; every other fragment (new, rewritten, renamed) has
+        its footer read, and a deleted one just drops out. A partition is
+        reported rescanned when its file set changed or any of its
+        footers was read, reused otherwise. At or above
+        ``distributed_threshold`` footers to read (and given a
+        SparkSession) the reads fan out over executors. The cache file is
+        then rewritten atomically."""
         root = os.path.abspath(self.path)
         cache = self._load_cache(root) if self.cache_path is not None else {}
         cached_parts = cache.get("partitions", {})
         cached_ex = cache.get("exemplars", {})
-        by_part: dict[str, list[str]] = {}
-        for rel in self.rels:
-            by_part.setdefault(os.path.dirname(rel) or ".", []).append(rel)
         parts: dict[str, dict] = {}
-        to_read: list[str] = []
+        to_read: list[tuple] = []  # (file, name, rel, stat, partition entry)
         t0 = time.perf_counter()
-        for part, rels in sorted(by_part.items()):
-            lfp = None
-            if self.cache_path is not None:
-                stats = [os.stat(self.file(rel)) for rel in rels]
-                lfp = hashlib.md5(
-                    "\n".join(
-                        f"{rel}\x00{st.st_size}\x00{st.st_mtime_ns}"
-                        for rel, st in zip(rels, stats)
-                    ).encode("utf-8")
-                ).hexdigest()
-            entry = cached_parts.get(part)
-            if (
-                entry is not None
-                and entry.get("listing_fp") == lfp
-                and all(fp in cached_ex for fp in entry["files"].values())
-            ):
-                self.reused.append(part)
-            else:
-                self.rescanned.append(part)
-                to_read += rels
-                entry = {"listing_fp": lfp, "files": {}}
-            parts[part] = entry
+        for part, prefix, names, rels, stats in self.groups:
+            old = cached_parts.get(part, {})
+            entry = parts[part] = {}
+            for name, rel, st in zip(names, rels, stats):
+                hit = old.get(name)
+                if (
+                    hit is not None
+                    and hit[0] == st.st_size
+                    and hit[1] == st.st_mtime_ns
+                    and hit[2] in cached_ex
+                ):
+                    entry[name] = hit
+                    self.fp_by_rel[rel] = hit[2]
+                else:
+                    to_read.append((prefix + name, name, rel, st, entry))
+            fresh = len(entry) == len(names) == len(old)
+            (self.reused if fresh else self.rescanned).append(part)
         self.listing_s += time.perf_counter() - t0
 
-        files = [self.file(rel) for rel in to_read]
+        files = [f for f, *_ in to_read]
         t0 = time.perf_counter()
         if self.spark is not None and len(files) >= distributed_threshold:
             sc = self.spark.sparkContext
@@ -522,10 +534,10 @@ class _DatasetScan:
         for fps, exemplars in batches:
             fp_by_file.update(fps)
             self.exemplars.update(exemplars)
-        for rel, f in zip(to_read, files):
-            parts[os.path.dirname(rel) or "."]["files"][rel] = fp_by_file[f]
-        for entry in parts.values():
-            self.fp_by_rel.update(entry["files"])
+        for f, name, rel, st, entry in to_read:
+            fp = self.fp_by_rel[rel] = fp_by_file[f]
+            if st is not None:
+                entry[name] = [st.st_size, st.st_mtime_ns, fp]
         for fp in set(self.fp_by_rel.values()) - self.exemplars.keys():
             self.exemplars[fp] = (
                 base64.b64decode(cached_ex[fp]["ipc"]),
@@ -533,25 +545,25 @@ class _DatasetScan:
             )
         if self.cache_path is not None:
             tmp = f"{self.cache_path}.tmp"
+            blob = {
+                "version": _SCAN_CACHE_VERSION,
+                "root": root,
+                "partitions": parts,
+                "exemplars": {
+                    fp: {"ipc": base64.b64encode(ipc).decode("ascii"), "violations": bad}
+                    for fp, (ipc, bad) in self.exemplars.items()
+                },
+            }
+            # json.dumps runs the C encoder; json.dump to a file object
+            # runs the pure-Python one
             with open(tmp, "w", encoding="utf-8") as fh:
-                json.dump(
-                    {
-                        "version": _SCAN_CACHE_VERSION,
-                        "root": root,
-                        "partitions": parts,
-                        "exemplars": {
-                            fp: {"ipc": base64.b64encode(ipc).decode("ascii"), "violations": bad}
-                            for fp, (ipc, bad) in self.exemplars.items()
-                        },
-                    },
-                    fh,
-                )
+                fh.write(json.dumps(blob))
             os.replace(tmp, self.cache_path)
 
     def _load_cache(self, root: str) -> dict:
         """The cache file's content, or {} when it is missing, corrupt,
         written by another cache version, or written for another dataset
-        root. Partition entries are keyed by root-relative path plus
+        root. File entries are keyed by partition directory and name plus
         (size, mtime_ns), so a cache file pointed at another dataset with
         coinciding paths and stats would silently serve the wrong
         exemplars. A root mismatch is recorded in ``reset_from_root`` and
@@ -776,7 +788,11 @@ def _read_footer(
     two are all the conversion reads (ParquetSchema equality compares
     names, repetition, physical, converted and logical types, lengths,
     decimal parameters and field ids), so fragments sharing one schema pay
-    one conversion, not one per file.
+    one conversion, not one per file. The memo is bucketed on the blob and
+    the column count, and matched inside a bucket with
+    ``ParquetSchema.equals``: hashing a ParquetSchema renders the whole
+    schema to a string on every footer, which costs ten times the
+    comparison.
 
     Runs on the driver or inside a Spark task. An unreadable footer raises
     pyarrow's error type (see _read_footer_metadata), naming the fragment,
@@ -785,9 +801,14 @@ def _read_footer(
 
     md = _read_footer_metadata(file_path)
     footer = md.schema
-    key = (footer, (md.metadata or {}).get(b"ARROW:schema"))
-    if seen is not None and key in seen:
-        return seen[key]
+    bucket: list = []
+    if seen is not None:
+        bucket = seen.setdefault(
+            ((md.metadata or {}).get(b"ARROW:schema"), len(footer)), []
+        )
+        for other, result in bucket:
+            if footer.equals(other):
+                return result
     try:
         ipc = footer.to_arrow_schema().remove_metadata().serialize().to_pybytes()
     except pa.ArrowException as e:
@@ -802,8 +823,7 @@ def _read_footer(
             if f"{col.name} ({kind})" not in violations:
                 violations.append(f"{col.name} ({kind})")
     fp = hashlib.md5(ipc + "\n".join(violations).encode("utf-8")).hexdigest()
-    if seen is not None:
-        seen[key] = fp, (ipc, violations)
+    bucket.append((footer, (fp, (ipc, violations))))
     return fp, (ipc, violations)
 
 
@@ -901,9 +921,9 @@ def schema_to_clickhouse(
     call: the physical-type check, the drift gate, the schema, the
     ``partition by`` clause and the warnings. ``drift_cache`` (r14): path
     to an incremental_drift_scan cache file — every footer read of the
-    call then happens ONLY for partitions whose listing changed since the
-    last run, so repeat DDL generation on an unchanged 10⁵-file table
-    costs a directory listing and zero footer reads."""
+    call then happens ONLY for fragments that are new or changed since
+    the last run, so repeat DDL generation on an unchanged 10⁵-file table
+    costs a directory listing, a stat per file and zero footer reads."""
     return _create_table_ddl(
         _scan_dataset(parquet_path, drift_cache, spark),
         table_name,
@@ -1126,7 +1146,7 @@ def unified_parquet_schema(path: str, *, drift_cache: str | None = None) -> T.St
     schema in first-seen order (a 10⁵-file table usually carries a handful)
     — equal schemas add nothing to the union, so the result is unchanged.
     With ``drift_cache`` the footer reads go incremental: unchanged
-    partitions serve their exemplars from the cache shared with
+    fragments serve their exemplars from the cache shared with
     incremental_drift_scan and the strict DDL gate."""
     scan = _scan_dataset(path, drift_cache)
     scan.read_all()
@@ -1159,29 +1179,35 @@ def incremental_drift_scan(
     spark: SparkSession | None = None,
     distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
 ) -> dict:
-    """schema_drift_report with a per-partition footer cache (r14, VERDICT
+    """schema_drift_report with a per-fragment footer cache (r14, VERDICT
     r13 task #8): re-reading every footer of a 10⁵-file table on every
-    ``--drift-report`` run costs 10⁵ × 10-50 ms object-store round-trips;
-    with a hive layout the natural re-scan unit is the partition directory,
-    and between two runs almost all partitions are untouched.
+    ``--drift-report`` run costs 10⁵ × 10-50 ms object-store round-trips,
+    and between two runs almost every file is untouched.
 
     Cost model per run: one fragment LISTING plus a stat per fragment
     (names + size + mtime — on object stores the stat fields ride along
-    with the LIST response), then footer reads ONLY for partitions whose
-    listing fingerprint changed (new, mutated, or compacted partitions) or
-    whose cached entries are missing their exemplar. A steady-state daily
-    run on a 10⁵-file, 10³-partition table that appended one partition
-    reads ~10² footers instead of 10⁵.
+    with the LIST response), one load and one dump of the cache file
+    (~110 bytes per fragment), then footer reads ONLY for the fragments
+    that are new, rewritten or renamed, or whose cached exemplar is
+    missing; a deleted fragment just drops out. A steady-state daily run
+    on a 10⁵-file table that appended one 100-file partition reads 10²
+    footers instead of 10⁵, and rewriting one file of a partition reads
+    that one footer, not the partition's.
 
     The cache file is JSON with one layout shared by this scan, the
     strict DDL gate and the unify scan (``drift_cache=``)::
 
-        {"version": 2, "root": "/abs/dataset/root",
-         "partitions": {"<dir>": {"listing_fp": md5,
-                                  "files": {"<rel path>": fingerprint}}},
+        {"version": 3, "root": "/abs/dataset/root",
+         "partitions": {"<dir>": {"<file name>": [size, mtime_ns,
+                                                  fingerprint]}},
          "exemplars": {fingerprint: {"ipc": base64 Arrow schema,
                                      "violations": [INT96/FLBA columns]}}}
 
+    A fragment is served from the cache only when its name is cached in
+    its partition directory with the size and mtime_ns it has now and its
+    fingerprint's exemplar is cached. Version 2 (one listing fingerprint
+    per partition directory, so one rewritten file re-read its whole
+    partition) and version 1 files are discarded.
     It is rewritten atomically each run; deleting it (or a version bump)
     degrades to a full scan with identical results. The cache is keyed by
     the dataset's absolute root (a cache file pointed at a different tree
@@ -1196,9 +1222,10 @@ def incremental_drift_scan(
     scan telemetry::
 
         {"report": [...],                  # schema_drift_report parity
-         "partitions_rescanned": [...],    # relative dirs read this run
+         "partitions_rescanned": [...],    # relative dirs whose file set
+                                           # changed or with a footer read
          "partitions_reused": [...],       # relative dirs served by cache
-         "footers_read": N}
+         "footers_read": N}                # footers actually read
     """
     scan = _scan_dataset(path, cache_path, spark)
     scan.read_all(distributed_threshold)

@@ -1742,11 +1742,12 @@ def test_hive_null_partition_dirs_excluded_from_typing(tmp_path):
 
 
 def test_incremental_drift_scan_touches_only_mutated_partition(tmp_path):
-    """r14 (VERDICT r13 task #8): the per-partition footer cache — run 1
+    """r14 (VERDICT r13 task #8): the incremental footer cache — run 1
     reads every footer; run 2 with nothing changed reads ZERO; appending
-    one partition re-reads only that partition; mutating a file inside an
-    existing partition re-reads only that partition. Report parity with
-    schema_drift_report throughout."""
+    one partition reads only its footer; adding a file inside an existing
+    partition reads only the new file's footer (cache version 3 checks
+    freshness per fragment) and reports that partition rescanned. Report
+    parity with schema_drift_report throughout."""
     import pyarrow as pa
 
     from parquet_to_clickhouse_schema_spark.ddl import (
@@ -1790,15 +1791,15 @@ def test_incremental_drift_scan_touches_only_mutated_partition(tmp_path):
         ("score", "added")
     ]
 
-    # run 4: mutate a file INSIDE an existing partition (append a second
-    # fragment) — only that partition re-reads, and BOTH its footers do
+    # run 4: mutate an existing partition (append a second fragment) —
+    # only the new fragment's footer is read; its partition is rescanned
     _write_fragment(
         d / "year=2024",
         "part-001.parquet",
         {"id": pa.array([2], pa.int32())},
     )
     s4 = incremental_drift_scan(str(d), cache)
-    assert s4["footers_read"] == 2
+    assert s4["footers_read"] == 1
     assert s4["partitions_rescanned"] == ["year=2024"]
     assert s4["report"] == schema_drift_report(str(d))
 
@@ -1809,6 +1810,119 @@ def test_incremental_drift_scan_touches_only_mutated_partition(tmp_path):
     s5 = incremental_drift_scan(str(d), cache)
     assert s5["footers_read"] == 4
     assert s5["report"] == schema_drift_report(str(d))
+
+
+def _multi_file_lake(root):
+    """Two hive partitions of three one-row fragments each, one schema."""
+    import pyarrow as pa
+
+    for year in (2024, 2025):
+        sub = root / f"year={year}"
+        sub.mkdir(parents=True)
+        for i in range(3):
+            _write_fragment(sub, f"part-{i:03d}.parquet", {"id": pa.array([i], pa.int64())})
+
+
+def _bump_mtime(path):
+    import os
+
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+
+
+def test_incremental_drift_scan_checks_each_fragment(tmp_path):
+    """Cache version 3 checks freshness per fragment: inside a multi-file
+    partition, a rewrite in place reads that one footer, a deletion reads
+    none, and a same-name replacement with a drifted schema is read and
+    reported. A partition with a changed file set or a read footer is
+    rescanned; the others are reused."""
+    import pyarrow as pa
+
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        incremental_drift_scan,
+        schema_drift_report,
+    )
+
+    d = tmp_path / "t.parquet"
+    _multi_file_lake(d)
+    cache = str(tmp_path / "cache.json")
+    s0 = incremental_drift_scan(str(d), cache)
+    assert s0["footers_read"] == 6
+    assert s0["report"] == schema_drift_report(str(d)) == []
+
+    # one fragment rewritten in place: same bytes, new mtime
+    victim = d / "year=2025" / "part-001.parquet"
+    victim.write_bytes(victim.read_bytes())
+    _bump_mtime(victim)
+    s1 = incremental_drift_scan(str(d), cache)
+    assert s1["footers_read"] == 1
+    assert s1["partitions_rescanned"] == ["year=2025"]
+    assert s1["partitions_reused"] == ["year=2024"]
+    assert s1["report"] == schema_drift_report(str(d))
+
+    # one fragment deleted: nothing to read, its partition still rescanned
+    (d / "year=2024" / "part-002.parquet").unlink()
+    s2 = incremental_drift_scan(str(d), cache)
+    assert s2["footers_read"] == 0
+    assert s2["partitions_rescanned"] == ["year=2024"]
+    assert s2["partitions_reused"] == ["year=2025"]
+    assert s2["report"] == schema_drift_report(str(d))
+    s3 = incremental_drift_scan(str(d), cache)
+    assert s3["footers_read"] == 0
+    assert s3["partitions_rescanned"] == []
+    assert s3["report"] == schema_drift_report(str(d))
+
+    # a fragment replaced under its name by a drifted one: read, reported
+    victim = d / "year=2025" / "part-002.parquet"
+    _write_fragment(victim.parent, victim.name, {"id": pa.array(["x"])})
+    _bump_mtime(victim)
+    s4 = incremental_drift_scan(str(d), cache)
+    assert s4["footers_read"] == 1
+    assert s4["partitions_rescanned"] == ["year=2025"]
+    assert s4["report"] == schema_drift_report(str(d))
+    assert [(r["file"], r["column"], r["change"]) for r in s4["report"]] == [
+        (str(victim), "id", "type_changed")
+    ]
+
+
+def test_version_2_scan_cache_is_discarded(tmp_path):
+    """A cache file of the per-partition layout (version 2) is not read:
+    the scan reads every footer and gives the uncached result."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        incremental_drift_scan,
+        schema_drift_report,
+    )
+
+    d = tmp_path / "t.parquet"
+    _multi_file_lake(d)
+    _write_fragment(d / "year=2025", "part-009.parquet", {"id": pa.array([1], pa.int32())})
+    cache = tmp_path / "cache.json"
+    warm = incremental_drift_scan(str(d), str(cache))
+    v3 = json.loads(cache.read_text())
+    v2 = {
+        "version": 2,
+        "root": v3["root"],
+        "partitions": {
+            part: {
+                "listing_fp": "0" * 32,
+                "files": {os.path.join(part, name): e[2] for name, e in files.items()},
+            }
+            for part, files in v3["partitions"].items()
+        },
+        "exemplars": v3["exemplars"],
+    }
+    cache.write_text(json.dumps(v2))
+    s = incremental_drift_scan(str(d), str(cache))
+    assert s["footers_read"] == 7
+    assert sorted(s["partitions_rescanned"]) == ["year=2024", "year=2025"]
+    assert s["report"] == warm["report"] == schema_drift_report(str(d))
+    assert s["report"]
+    assert json.loads(cache.read_text()) == v3
 
 
 def test_incremental_drift_scan_relative_path_parity(tmp_path, monkeypatch):
@@ -1966,6 +2080,39 @@ def test_schema_to_clickhouse_drift_cache(tmp_path, monkeypatch):
     assert [f for f in reads if "year=2026" in f] and all(
         "year=2026" in f for f in reads
     )
+
+
+def test_schema_to_clickhouse_drift_cache_reads_one_rewritten_fragment(
+    tmp_path, monkeypatch
+):
+    """The strict DDL gate through a warm cache reads only the footer of
+    the one fragment rewritten since, and emits the uncached DDL."""
+    from parquet_to_clickhouse_schema_spark import ddl as ddl_mod
+    from parquet_to_clickhouse_schema_spark.ddl import (
+        incremental_drift_scan,
+        schema_drift_report,
+    )
+
+    d = tmp_path / "t.parquet"
+    _multi_file_lake(d)
+    cache = str(tmp_path / "cache.json")
+    expected = schema_to_clickhouse(str(d), "t", "id")
+    assert schema_to_clickhouse(str(d), "t", "id", drift_cache=cache) == expected
+
+    victim = d / "year=2024" / "part-001.parquet"
+    victim.write_bytes(victim.read_bytes())
+    _bump_mtime(victim)
+    reads = []
+    real = ddl_mod._read_footer_metadata
+    monkeypatch.setattr(
+        ddl_mod, "_read_footer_metadata", lambda f: (reads.append(str(f)), real(f))[1]
+    )
+    assert schema_to_clickhouse(str(d), "t", "id", drift_cache=cache) == expected
+    assert reads == [str(victim)]
+    s = incremental_drift_scan(str(d), cache)
+    assert s["footers_read"] == 0
+    monkeypatch.undo()
+    assert s["report"] == schema_drift_report(str(d)) == []
 
 
 def test_cli_main_mode_accepts_drift_cache(tmp_path, capsys):

@@ -263,6 +263,38 @@ def test_batch_memo_keeps_subtly_different_schemas_apart(tmp_path):
     assert len(set(fp_by_file.values())) == 5
 
 
+def test_batch_memo_keeps_apart_footers_sharing_an_arrow_schema_blob(tmp_path):
+    """The batch memo is bucketed on the ARROW:schema blob, which a writer
+    keeps while the Parquet schema changes under it (a coerced timestamp
+    unit, INT96 storage, a Parquet 1.0 unsigned int): each such footer gets
+    its own fingerprint in one _read_footers batch."""
+    ts = pa.table({"t": pa.array([datetime.datetime(2024, 1, 2)], pa.timestamp("us"))})
+    u32 = pa.table({"u": pa.array([1], pa.uint32())})
+    writes = [
+        ("us", ts, {}),
+        ("ms", ts, {"coerce_timestamps": "ms"}),
+        ("int96", ts, {"use_deprecated_int96_timestamps": True}),
+        ("us-again", ts, {}),
+        ("u32", u32, {}),
+        ("u32-v1", u32, {"version": "1.0"}),
+    ]
+    files = []
+    for name, table, options in writes:
+        files.append(str(tmp_path / f"{name}.parquet"))
+        pq.write_table(table, files[-1], **options)
+    mds = [pq.read_metadata(f) for f in files]
+    for i, j in ((0, 1), (0, 2), (4, 5)):
+        assert mds[i].metadata[b"ARROW:schema"] == mds[j].metadata[b"ARROW:schema"]
+        assert not mds[i].schema.equals(mds[j].schema)
+    fp_by_file, exemplars = next(ddl._read_footers(files))
+    refs = [_reference_footer(f) for f in files]
+    assert [fp_by_file[f] for f in files] == [fp for fp, _ in refs]
+    assert exemplars == dict(refs)
+    fps = [fp_by_file[f] for f in files]
+    assert fps[3] == fps[0]
+    assert len({fps[0], fps[1], fps[2]}) == 3 and fps[4] != fps[5]
+
+
 def _refuse(*args, **kwargs):
     raise AssertionError("the DDL core called pyarrow's own footer API")
 
