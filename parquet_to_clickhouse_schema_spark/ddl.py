@@ -791,7 +791,7 @@ def _read_footer(
     one conversion, not one per file. The memo is bucketed on the blob and
     the column count, and matched inside a bucket with
     ``ParquetSchema.equals``: hashing a ParquetSchema renders the whole
-    schema to a string on every footer, which costs ten times the
+    schema to a string on every footer, which costs over ten times the
     comparison.
 
     Runs on the driver or inside a Spark task. An unreadable footer raises
