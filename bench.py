@@ -167,9 +167,7 @@ def main() -> None:
     ddl_samples = []
     for _ in range(reps):
         t0 = time.perf_counter()
-        schema_to_clickhouse(
-            f"{sf_dir}/lineitem.parquet", "lineitem", "l_orderkey", spark=spark
-        )
+        schema_to_clickhouse(f"{sf_dir}/lineitem.parquet", "lineitem", "l_orderkey")
         ddl_samples.append(time.perf_counter() - t0)
     times["schema_to_clickhouse"] = round(statistics.median(ddl_samples), 3)
 

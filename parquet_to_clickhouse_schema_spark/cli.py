@@ -181,6 +181,13 @@ def main(argv: list[str] | None = None) -> int:
         "instead of refusing (see --drift-report to inspect the drift)",
     )
     args = ap.parse_args(argv)
+    if args.diff_against is not None:
+        # the ALTER path neither unifies nor reads a cache; silently
+        # dropping either flag would print an ALTER the caller did not ask for
+        given = (("--unify", args.unify), ("--drift-cache", args.drift_cache is not None))
+        for flag, on in given:
+            if on:
+                ap.error(f"--diff-against and {flag} are mutually exclusive")
 
     pk = [c.strip() for c in args.primary_key.split(",")] if "," in args.primary_key else args.primary_key
 

@@ -46,12 +46,10 @@ import hashlib
 import json
 import os
 import re
-import sys
 import time
 import warnings
 from typing import Iterable
 
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 
@@ -354,9 +352,7 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _scan_dataset(
-    path: str, cache_path: str | None = None, spark: SparkSession | None = None
-) -> _DatasetScan:
+def _scan_dataset(path: str, cache_path: str | None = None) -> _DatasetScan:
     """The ONE listing behind every DDL entry point: a single ``os.walk``
     (sorted directories, Spark's hidden-path rule) collecting the
     ``.parquet`` fragments and the hive layout — partition keys in nesting
@@ -369,9 +365,8 @@ def _scan_dataset(
 
     No footer is read here: the returned scan reads each footer on demand,
     at most once. ``cache_path`` (an incremental scan cache, see
-    incremental_drift_scan) and ``spark`` (the footer fan-out, see
-    fragment_schemas) only matter once every footer is needed. With a
-    ``cache_path`` the walk also takes each fragment's stat, the one
+    incremental_drift_scan) only matters once every footer is needed. With
+    a ``cache_path`` the walk also takes each fragment's stat, the one
     freshness check the cache makes; fragments are grouped by their walk
     directory here, so the cache check joins no paths."""
     from urllib.parse import unquote
@@ -381,7 +376,7 @@ def _scan_dataset(
         base, name = os.path.split(path)
         stats = [os.stat(path) if cache_path is not None else None]
         groups = [(".", os.path.join(base, ""), [name], [name], stats)]
-        return _DatasetScan(path, base, [name], groups, ([], {}, [], []), cache_path, spark)
+        return _DatasetScan(path, base, [name], groups, ([], {}, [], []), cache_path)
     keys: list[str] = []
     values: dict[str, set[str]] = {}
     null_keys: set[str] = set()
@@ -418,16 +413,12 @@ def _scan_dataset(
     ragged = sorted(k for k in set().union(*leaf_keysets) if k not in inter)
     hive = (keys, values, sorted(null_keys), ragged)
     groups.sort(key=lambda g: g[0])
-    scan = _DatasetScan(path, path, sorted(rels), groups, hive, cache_path, spark)
+    scan = _DatasetScan(path, path, sorted(rels), groups, hive, cache_path)
     scan.listing_s = time.perf_counter() - t0
     return scan
 
 
 _SCAN_CACHE_VERSION = 3
-
-# fragments to read at or above which a scan given a SparkSession fans its
-# footer reads out as Spark tasks (calibration: fragment_schemas)
-_FOOTER_FANOUT_THRESHOLD = 8192
 
 
 class _DatasetScan:
@@ -438,24 +429,23 @@ class _DatasetScan:
     schema and the first-fragment schema — costs one conversion per
     distinct footer schema, not one per file.
 
-    Every footer read, on the driver or in the fan-out, goes through
-    _read_footer_metadata: one tail read per file, parsed by pyarrow's
-    ParquetReader over the footer bytes, with its ArrowInvalid/OSError
-    contract; each batch converts one footer per distinct schema. The
-    scan reports its own cost: ``footers_read`` counts those reads, and
-    ``listing_s`` (walk plus the cache's stat pass), ``footer_s``,
-    ``convert_s`` (Arrow→Spark conversion and unification) and
-    ``render_s`` (DDL rendering, set by the CREATE/ALTER paths) are wall
-    seconds, each phase timed as a whole rather than per file (the CLI's
-    ``--timings``)."""
+    Every footer is read in this process through _read_footer_metadata:
+    one tail read per file, parsed by pyarrow's ParquetReader over the
+    footer bytes, with its ArrowInvalid/OSError contract; each read_all
+    converts one footer per distinct schema. The scan reports its own
+    cost: ``footers_read`` counts those reads, and ``listing_s`` (walk
+    plus the cache's stat pass), ``footer_s``, ``convert_s`` (Arrow→Spark
+    conversion and unification) and ``render_s`` (DDL rendering, set by
+    the CREATE/ALTER paths) are wall seconds, each phase timed as a whole
+    rather than per file (the CLI's ``--timings``)."""
 
-    def __init__(self, path, base, rels, groups, hive, cache_path, spark):
+    def __init__(self, path, base, rels, groups, hive, cache_path):
         self.path, self.base, self.rels = path, base, rels
         # (partition dir, its file-path prefix, fragment names, their
         # relative paths, their stats or None) per walk directory, sorted
         self.groups = groups
         self.keys, self.values, self.null_keys, self.ragged_keys = hive
-        self.cache_path, self.spark = cache_path, spark
+        self.cache_path = cache_path
         self.fp_by_rel: dict[str, str] = {}
         self.exemplars: dict[str, tuple[bytes, list[str]]] = {}
         self.spark_schemas: dict[str, T.StructType] = {}
@@ -472,17 +462,15 @@ class _DatasetScan:
         # and uncached runs report identical paths on relative inputs
         return os.path.join(self.base, rel)
 
-    def read_all(self, distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD) -> None:
+    def read_all(self) -> None:
         """Fingerprint every fragment. With a cache file, a fragment is
         served from the cache when its name is cached in its partition
         directory with the size and mtime_ns the walk just took and with
         its exemplar; every other fragment (new, rewritten, renamed) has
         its footer read, and a deleted one just drops out. A partition is
         reported rescanned when its file set changed or any of its
-        footers was read, reused otherwise. At or above
-        ``distributed_threshold`` footers to read (and given a
-        SparkSession) the reads fan out over executors. The cache file is
-        then rewritten atomically."""
+        footers was read, reused otherwise. The cache file is then
+        rewritten atomically."""
         root = os.path.abspath(self.path)
         cache = self._load_cache(root) if self.cache_path is not None else {}
         cached_parts = cache.get("partitions", {})
@@ -509,35 +497,16 @@ class _DatasetScan:
             (self.reused if fresh else self.rescanned).append(part)
         self.listing_s += time.perf_counter() - t0
 
-        files = [f for f, *_ in to_read]
         t0 = time.perf_counter()
-        if self.spark is not None and len(files) >= distributed_threshold:
-            sc = self.spark.sparkContext
-            n_slices = max(1, min(len(files) // 8, sc.defaultParallelism * 4))
-            # ship the reader by value: pickled by reference, every executor
-            # would have to import this package
-            from pyspark import cloudpickle
-
-            module = sys.modules[__name__]
-            owned = __name__ not in cloudpickle.list_registry_pickle_by_value()
-            cloudpickle.register_pickle_by_value(module)
-            try:
-                batches = sc.parallelize(files, n_slices).mapPartitions(_read_footers).collect()
-            finally:
-                if owned:
-                    cloudpickle.unregister_pickle_by_value(module)
-        else:
-            batches = list(_read_footers(files))
-        self.footer_s += time.perf_counter() - t0
-        self.footers_read += len(files)
-        fp_by_file: dict[str, str] = {}
-        for fps, exemplars in batches:
-            fp_by_file.update(fps)
-            self.exemplars.update(exemplars)
+        seen: dict = {}
         for f, name, rel, st, entry in to_read:
-            fp = self.fp_by_rel[rel] = fp_by_file[f]
+            fp, exemplar = _read_footer(f, seen)
+            self.fp_by_rel[rel] = fp
+            self.exemplars.setdefault(fp, exemplar)
             if st is not None:
                 entry[name] = [st.st_size, st.st_mtime_ns, fp]
+        self.footer_s += time.perf_counter() - t0
+        self.footers_read += len(to_read)
         for fp in set(self.fp_by_rel.values()) - self.exemplars.keys():
             self.exemplars[fp] = (
                 base64.b64decode(cached_ex[fp]["ipc"]),
@@ -783,7 +752,7 @@ def _read_footer(
     rejected by _scalar's DECIMAL arm with the right message. The
     fingerprint is an md5 over both parts.
 
-    With ``seen`` (a batch's memo), a footer whose parquet schema and
+    With ``seen`` (one read_all's memo), a footer whose parquet schema and
     ``ARROW:schema`` blob equal an earlier one's reuses its result: those
     two are all the conversion reads (ParquetSchema equality compares
     names, repetition, physical, converted and logical types, lengths,
@@ -794,9 +763,9 @@ def _read_footer(
     schema to a string on every footer, which costs over ten times the
     comparison.
 
-    Runs on the driver or inside a Spark task. An unreadable footer raises
-    pyarrow's error type (see _read_footer_metadata), naming the fragment,
-    with the original error chained."""
+    An unreadable footer raises pyarrow's error type (see
+    _read_footer_metadata), naming the fragment, with the original error
+    chained."""
     import pyarrow as pa
 
     md = _read_footer_metadata(file_path)
@@ -825,21 +794,6 @@ def _read_footer(
     fp = hashlib.md5(ipc + "\n".join(violations).encode("utf-8")).hexdigest()
     bucket.append((footer, (fp, (ipc, violations))))
     return fp, (ipc, violations)
-
-
-def _read_footers(files):
-    """(file → fingerprint, fingerprint → exemplar) over a batch of
-    fragments: the driver loop and, shipped by value, one task of the Spark
-    fan-out — which therefore collects a 16-byte digest per fragment plus
-    one exemplar per distinct footer, not one schema per file."""
-    fp_by_file: dict[str, str] = {}
-    exemplars: dict[str, tuple[bytes, list[str]]] = {}
-    seen: dict = {}
-    for f in files:
-        fp, exemplar = _read_footer(f, seen)
-        fp_by_file[f] = fp
-        exemplars.setdefault(fp, exemplar)
-    yield fp_by_file, exemplars
 
 
 def _to_spark(arrow_schema) -> T.StructType:
@@ -896,7 +850,7 @@ def schema_to_clickhouse(
     parquet_path: str,
     table_name: str,
     primary_key: str | Iterable[str],
-    spark: SparkSession | None = None,
+    *,
     out_path: str | None = None,
     strict: bool = True,
     unify: bool = False,
@@ -925,7 +879,7 @@ def schema_to_clickhouse(
     the last run, so repeat DDL generation on an unchanged 10⁵-file table
     costs a directory listing, a stat per file and zero footer reads."""
     return _create_table_ddl(
-        _scan_dataset(parquet_path, drift_cache, spark),
+        _scan_dataset(parquet_path, drift_cache),
         table_name,
         primary_key,
         out_path=out_path,
@@ -1089,45 +1043,21 @@ def _schema_changes(old_schema: T.StructType, new_schema: T.StructType) -> list[
     return changes
 
 
-def fragment_schemas(
-    path: str,
-    spark: SparkSession | None = None,
-    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
-) -> list[tuple[str, T.StructType]]:
-    """(fragment file, footer schema) for every part-file of a dataset.
+def fragment_schemas(path: str) -> list[tuple[str, T.StructType]]:
+    """(fragment file, footer schema) for every part-file of a dataset, in
+    sorted fragment order.
 
     infer_parquet_schema on a directory (like pyarrow's dataset
     discovery) reports the FIRST fragment's schema — drift in any later
     part-file is silently masked. This reads every footer individually so
-    drift is observable. Footers are metadata-only reads (~KB each); at or
-    above `distributed_threshold` files (and given a SparkSession) the
-    scan fans out over executors — each task opens its files' footers with
-    pyarrow and ships back fingerprints plus one exemplar per distinct
-    footer.
-
-    Threshold calibration (tail-read footer reader with its per-batch
-    schema memo, local disk, warm local[4] session, 2,000-16,000-fragment
-    nested hive lakes, medians of 5 interleaved reps): serial vs fan-out
-    0.24 vs 1.00 s at 2,000 fragments, 1.49 vs 1.82 s at 8,200, 1.79 vs
-    1.53 s at 10,200, 1.76 vs 1.71 s at 12,000 and 1.86 vs 1.52 s at
-    16,000. The local crossover sits between 8,200 and 10,200 fragments,
-    so the 8192 default (_FOOTER_FANOUT_THRESHOLD) costs at most ~0.3 s
-    on local disk just above it. The fan-out pays off on object storage,
-    where each footer read is a 10-50 ms round-trip and a 10⁵-file table
-    costs the driver 20-80 serial minutes vs seconds across executors —
-    lower the threshold when the dataset lives on S3/GCS/HDFS. Order is
-    sorted file order either way, and both paths return identical
-    results (tested).
-
-    Collect cost model: tasks ship back one (file, md5-fingerprint) pair
-    per fragment plus ONE exemplar per DISTINCT footer schema,
-    deduplicated inside each task. A 10⁵-file drifted table therefore
-    returns 10⁵ 16-byte digests and a handful of KB-sized exemplars — not
-    10⁵ full schema payloads. Every object-store footer adds 10-50 ms
-    per file to the driver side only. Each distinct schema is converted
-    to Spark types once and shared across its files."""
-    scan = _scan_dataset(path, spark=spark)
-    scan.read_all(distributed_threshold)
+    drift is observable. The dataset is a local or mounted path (one
+    ``os.walk``), and each footer is one tail read of a few KB on the
+    driver: about 0.12 ms per fragment, 0.24 s for a 2,000-fragment hive
+    lake on local disk (docs/SCALE.md). Fragments sharing a footer schema
+    share one fingerprint, and each distinct schema is converted to Spark
+    types once and shared across its files."""
+    scan = _scan_dataset(path)
+    scan.read_all()
     return [(scan.file(rel), scan.spark_schema(scan.fp_by_rel[rel])) for rel in scan.rels]
 
 
@@ -1153,11 +1083,7 @@ def unified_parquet_schema(path: str, *, drift_cache: str | None = None) -> T.St
     return scan.schema(unify=True)
 
 
-def schema_drift_report(
-    path: str,
-    spark: SparkSession | None = None,
-    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
-) -> list[dict]:
+def schema_drift_report(path: str) -> list[dict]:
     """Intra-dataset schema drift: every fragment whose footer disagrees
     with the dataset's first (sorted-order) fragment, as schema_diff-style
     change entries plus ``file`` / ``reference_file`` keys.
@@ -1166,33 +1092,28 @@ def schema_drift_report(
     the part-files WITHIN one dataset — the drift mode a long-lived 100 TB
     table actually develops when a writer deploy changes a type mid-table.
     An empty list means every footer agrees and the dataset-level DDL is
-    trustworthy. Footer-only; distributed over executors past
-    `distributed_threshold` files (see fragment_schemas)."""
-    scan = _scan_dataset(path, spark=spark)
-    scan.read_all(distributed_threshold)
+    trustworthy. Footer-only: every footer is read once on the driver
+    (see fragment_schemas); incremental_drift_scan keeps them between
+    runs."""
+    scan = _scan_dataset(path)
+    scan.read_all()
     return scan.drift_report()
 
 
-def incremental_drift_scan(
-    path: str,
-    cache_path: str,
-    spark: SparkSession | None = None,
-    distributed_threshold: int = _FOOTER_FANOUT_THRESHOLD,
-) -> dict:
+def incremental_drift_scan(path: str, cache_path: str) -> dict:
     """schema_drift_report with a per-fragment footer cache (r14, VERDICT
     r13 task #8): re-reading every footer of a 10⁵-file table on every
-    ``--drift-report`` run costs 10⁵ × 10-50 ms object-store round-trips,
-    and between two runs almost every file is untouched.
+    ``--drift-report`` run costs 10⁵ footer reads, and between two runs
+    almost every file is untouched.
 
-    Cost model per run: one fragment LISTING plus a stat per fragment
-    (names + size + mtime — on object stores the stat fields ride along
-    with the LIST response), one load and one dump of the cache file
-    (~110 bytes per fragment), then footer reads ONLY for the fragments
-    that are new, rewritten or renamed, or whose cached exemplar is
-    missing; a deleted fragment just drops out. A steady-state daily run
-    on a 10⁵-file table that appended one 100-file partition reads 10²
-    footers instead of 10⁵, and rewriting one file of a partition reads
-    that one footer, not the partition's.
+    Cost model per run: one ``os.walk`` of the local or mounted dataset
+    plus an ``os.stat`` per fragment (size and mtime), one load and one
+    dump of the cache file (~90 bytes per fragment), then footer reads
+    ONLY for the fragments that are new, rewritten or renamed, or whose
+    cached exemplar is missing; a deleted fragment just drops out. A
+    steady-state daily run on a 10⁵-file table that appended one 100-file
+    partition reads 10² footers instead of 10⁵, and rewriting one file of
+    a partition reads that one footer, not the partition's.
 
     The cache file is JSON with one layout shared by this scan, the
     strict DDL gate and the unify scan (``drift_cache=``)::
@@ -1227,8 +1148,8 @@ def incremental_drift_scan(
          "partitions_reused": [...],       # relative dirs served by cache
          "footers_read": N}                # footers actually read
     """
-    scan = _scan_dataset(path, cache_path, spark)
-    scan.read_all(distributed_threshold)
+    scan = _scan_dataset(path, cache_path)
+    scan.read_all()
     return {
         "report": scan.drift_report(),
         "partitions_rescanned": scan.rescanned,

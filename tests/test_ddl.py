@@ -66,8 +66,12 @@ def test_golden_ref_nested_roundtrip_parquet(spark, tmp_path):
     p = str(tmp_path / "p.parquet")
     df.write.parquet(p)
     out = str(tmp_path / "clickhouse_schema.sql")
-    ddl = schema_to_clickhouse(p, "T", "foo", spark=spark, out_path=out)
+    ddl = schema_to_clickhouse(p, "T", "foo", out_path=out)
     assert ddl == GOLDEN_REF_NESTED
+    # everything after primary_key is keyword-only, so a stray positional
+    # argument is refused rather than taken as out_path
+    with pytest.raises(TypeError):
+        schema_to_clickhouse(p, "T", "foo", spark)
     with open(out) as fh:
         assert fh.read() == GOLDEN_REF_NESTED
 
@@ -288,8 +292,8 @@ def test_legacy_two_level_list_encoding(spark, tmp_path):
         spark.conf.set("spark.sql.parquet.writeLegacyFormat", "false")
     df.coalesce(1).write.parquet(std_dir)
 
-    ddl_legacy = schema_to_clickhouse(legacy_dir, "t", "id", spark=spark)
-    ddl_std = schema_to_clickhouse(std_dir, "t", "id", spark=spark)
+    ddl_legacy = schema_to_clickhouse(legacy_dir, "t", "id")
+    ddl_std = schema_to_clickhouse(std_dir, "t", "id")
     assert ddl_legacy == ddl_std
     assert (
         "    , tags Nested (\n"
@@ -658,6 +662,36 @@ def test_cli_diff_against_writes_alter_file(tmp_path):
     assert out.read_text() == "alter table t add column x Nullable(Float64) after id;\n"
 
 
+def test_cli_diff_against_refuses_unify_and_drift_cache(tmp_path, capsys):
+    """The ALTER path neither unifies nor reads a scan cache, so
+    --diff-against with --unify or --drift-cache is a usage error (exit 2)
+    instead of an ALTER that silently ignores the flag."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_to_clickhouse_schema_spark.cli import main
+
+    old, new = str(tmp_path / "o.parquet"), str(tmp_path / "n.parquet")
+    pq.write_table(pa.table({"id": [1]}), old)
+    pq.write_table(pa.table({"id": [1], "x": [1.5]}), new)
+    out, cache = tmp_path / "alter.sql", tmp_path / "cache.json"
+    argv = ["--parquet-path", new, "--clickhouse-schema-path", str(out),
+            "--table-name", "t", "--primary-key", "id", "--diff-against", old]
+    for extra, flag in (
+        (["--unify"], "--unify"),
+        (["--drift-cache", str(cache)], "--drift-cache"),
+        (["--unify", "--drift-cache", str(cache)], "--unify"),
+    ):
+        with pytest.raises(SystemExit) as exc:
+            main(argv + extra)
+        assert exc.value.code == 2
+        assert f"--diff-against and {flag} are mutually exclusive" in capsys.readouterr().err
+    assert not out.exists() and not cache.exists()
+    assert main(argv) == 0
+    assert out.read_text() == "alter table t add column x Nullable(Float64) after id;\n"
+    assert not cache.exists()
+
+
 def _write_fragment(dirpath, name, cols):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -665,12 +699,12 @@ def _write_fragment(dirpath, name, cols):
     pq.write_table(pa.table(cols), str(dirpath / name))
 
 
-def test_fragment_drift_report_and_distributed_scan(tmp_path, spark):
+def test_fragment_drift_report_and_fragment_schemas(tmp_path):
     """pyarrow dataset discovery reports the FIRST fragment's schema, so a
     retyped/extended later part-file is invisible to dataset-level
-    inference; schema_drift_report reads every footer and surfaces it. The
-    Spark-distributed footer scan (threshold forced to 1) must agree with
-    the driver loop exactly."""
+    inference; schema_drift_report reads every footer and surfaces it, and
+    fragment_schemas lists each fragment's own footer schema in sorted
+    order."""
     import pyarrow as pa
 
     from parquet_to_clickhouse_schema_spark.ddl import (
@@ -697,10 +731,10 @@ def test_fragment_drift_report_and_distributed_scan(tmp_path, spark):
     assert report[0]["old_type"] == "bigint" and report[0]["new_type"] == "int"
     assert all(r["reference_file"].endswith("part-000.parquet") for r in report)
 
-    # executor-fanned footer scan == driver loop (order and schemas)
-    local = fragment_schemas(str(d))
-    dist = fragment_schemas(str(d), spark, distributed_threshold=1)
-    assert [(f, s.json()) for f, s in local] == [(f, s.json()) for f, s in dist]
+    frags = fragment_schemas(str(d))
+    assert [f for f, _ in frags] == [str(d / f"part-00{i}.parquet") for i in range(3)]
+    assert frags[0][1] == frags[1][1]
+    assert frags[2][1].simpleString() == "struct<id:int,x:double,y:string>"
 
     # a uniform dataset reports no drift
     u = tmp_path / "u.parquet"
@@ -1108,11 +1142,10 @@ def test_unified_schema_nested_promotion(tmp_path):
     assert "meta" in str(exc.value) and "a" in str(exc.value)
 
 
-def test_fragment_scan_fingerprint_collect_parity(tmp_path, spark):
-    """The fan-out footer scan dedups schema JSON inside each task and
-    ships (file, fingerprint) + one exemplar per distinct schema — results
-    must stay identical to the driver loop, including on drifted and on
-    hive-partitioned layouts."""
+def test_fragment_schemas_on_drifted_hive_layout(tmp_path):
+    """fragment_schemas over a drifted hive layout: every fragment in
+    sorted path order, each with its own footer's schema (no partition
+    column), the fragments of one footer schema sharing it."""
     import pyarrow as pa
 
     from parquet_to_clickhouse_schema_spark.ddl import fragment_schemas
@@ -1128,11 +1161,16 @@ def test_fragment_scan_fingerprint_collect_parity(tmp_path, spark):
         for i in range(n):
             _write_fragment(sub, f"part-{i:03d}.parquet", cols(i))
 
-    local = fragment_schemas(str(d))
-    dist = fragment_schemas(str(d), spark, distributed_threshold=1)
-    assert [(f, s.json()) for f, s in local] == [(f, s.json()) for f, s in dist]
+    frags = fragment_schemas(str(d))
+    assert [f for f, _ in frags] == [
+        str(d / part / f"part-{i:03d}.parquet")
+        for part in ("year=2024", "year=2025")
+        for i in range(3)
+    ]
     # exactly two distinct schemas across six files
-    assert len({s.json() for _, s in dist}) == 2
+    assert [s.simpleString() for _, s in frags] == (
+        ["struct<id:bigint>"] * 3 + ["struct<id:int,y:string>"] * 3
+    )
 
 
 def test_cli_drift_report_added_removed_lines_and_flag_conflict(tmp_path):
@@ -2316,3 +2354,66 @@ def test_pandas_metadata_does_not_split_cached_exemplars(tmp_path):
     assert len(_json.loads(cache.read_text())["exemplars"]) == 1
     assert incremental_drift_scan(str(d), str(cache))["report"] == []
     assert len(_json.loads(cache.read_text())["exemplars"]) == 1
+
+
+_NO_JVM_PROBE = """
+import contextlib, io, json, sys
+sys.path.insert(0, {repo!r})
+import pyarrow as pa, pyarrow.parquet as pq
+import pyspark
+import parquet_to_clickhouse_schema_spark as pcs
+from parquet_to_clickhouse_schema_spark.cli import main
+
+for year in (2024, 2025):
+    pq.write_table(pa.table({{"id": [1], "v": [1.0]}}), f"lake/year={{year}}/part-0.parquet")
+pq.write_table(pa.table({{"id": [1]}}), "old.parquet")
+pq.write_table(pa.table({{"id": [1], "v": [1.0]}}), "new.parquet")
+out = {{
+    "strict": pcs.schema_to_clickhouse("lake", "t", "id"),
+    "unify": pcs.schema_to_clickhouse("lake", "t", "id", unify=True),
+    "drift": pcs.schema_drift_report("lake"),
+    "incremental": pcs.incremental_drift_scan("lake", "cache.json")["footers_read"],
+    "fragments": len(pcs.fragment_schemas("lake")),
+    "alter": pcs.schema_diff_to_clickhouse_alter("old.parquet", "new.parquet", "t", "id"),
+    "infer": pcs.infer_parquet_schema("lake").simpleString(),
+}}
+common = ["--clickhouse-schema-path", "t.sql", "--table-name", "t", "--primary-key", "id"]
+with contextlib.redirect_stdout(io.StringIO()):
+    out["cli"] = [
+        main(["--parquet-path", "lake"] + common),
+        main(["--drift-report", "lake"]),
+        main(["--parquet-path", "new.parquet", "--diff-against", "old.parquet"] + common),
+    ]
+out["active_context"] = pyspark.SparkContext._active_spark_context is None
+out["gateway"] = pyspark.SparkContext._gateway is None
+print(json.dumps(out))
+"""
+
+
+def test_ddl_core_starts_no_jvm(tmp_path):
+    """Every DDL entry point and the three CLI modes read footers in this
+    process with no Spark job: run in a fresh interpreter, they leave
+    pyspark with neither an active SparkContext nor a JVM gateway."""
+    import json as _json
+    import os
+    import subprocess
+    import sys
+
+    for year in (2024, 2025):
+        (tmp_path / "lake" / f"year={year}").mkdir(parents=True)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NO_JVM_PROBE.format(repo=repo)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = _json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out.pop("active_context") is True and out.pop("gateway") is True
+    assert "partition by (year)" in out["strict"] and out["unify"] == out["strict"]
+    assert out["drift"] == [] and out["incremental"] == 2 and out["fragments"] == 2
+    assert out["alter"] == "alter table t add column v Nullable(Float64) after id;\n"
+    assert out["infer"] == "struct<id:bigint,v:double,year:int>"
+    assert out["cli"] == [0, 0, 0]

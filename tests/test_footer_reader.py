@@ -22,7 +22,6 @@ from parquet_to_clickhouse_schema_spark.cli import main
 from parquet_to_clickhouse_schema_spark.ddl import (
     _read_footer,
     _read_footer_metadata,
-    fragment_schemas,
     incremental_drift_scan,
     infer_parquet_schema,
     schema_diff_to_clickhouse_alter,
@@ -232,8 +231,16 @@ def test_malformed_thrift_raises_naming_the_file(tmp_path):
     assert {"OSError", "parsed"} <= outcomes <= {"ArrowInvalid", "OSError", "parsed"}
 
 
+def _read_all(root):
+    """(file → fingerprint, fingerprint → exemplar) from one read_all over
+    the directory ``root``."""
+    scan = ddl._scan_dataset(str(root))
+    scan.read_all()
+    return {scan.file(rel): fp for rel, fp in scan.fp_by_rel.items()}, scan.exemplars
+
+
 def test_batch_memo_keeps_subtly_different_schemas_apart(tmp_path):
-    """One _read_footers batch converts each distinct (parquet schema,
+    """One read_all converts each distinct (parquet schema,
     ARROW:schema) once; footers that differ only in the ARROW:schema blob
     (string vs large_string, one timestamp's zone) or in a field id keep
     their own fingerprints, and repeats share theirs."""
@@ -255,7 +262,7 @@ def test_batch_memo_keeps_subtly_different_schemas_apart(tmp_path):
         pq.write_table(table, files[-1])
     files.append(str(tmp_path / "no-arrow-schema.parquet"))
     pq.write_table(tables[0], files[-1], store_schema=False)
-    fp_by_file, exemplars = next(ddl._read_footers(files))
+    fp_by_file, exemplars = _read_all(tmp_path)
     refs = [_reference_footer(f) for f in files]
     assert [fp_by_file[f] for f in files] == [fp for fp, _ in refs]
     assert exemplars == dict(refs)
@@ -267,7 +274,7 @@ def test_batch_memo_keeps_apart_footers_sharing_an_arrow_schema_blob(tmp_path):
     """The batch memo is bucketed on the ARROW:schema blob, which a writer
     keeps while the Parquet schema changes under it (a coerced timestamp
     unit, INT96 storage, a Parquet 1.0 unsigned int): each such footer gets
-    its own fingerprint in one _read_footers batch."""
+    its own fingerprint in one read_all."""
     ts = pa.table({"t": pa.array([datetime.datetime(2024, 1, 2)], pa.timestamp("us"))})
     u32 = pa.table({"u": pa.array([1], pa.uint32())})
     writes = [
@@ -286,7 +293,7 @@ def test_batch_memo_keeps_apart_footers_sharing_an_arrow_schema_blob(tmp_path):
     for i, j in ((0, 1), (0, 2), (4, 5)):
         assert mds[i].metadata[b"ARROW:schema"] == mds[j].metadata[b"ARROW:schema"]
         assert not mds[i].schema.equals(mds[j].schema)
-    fp_by_file, exemplars = next(ddl._read_footers(files))
+    fp_by_file, exemplars = _read_all(tmp_path)
     refs = [_reference_footer(f) for f in files]
     assert [fp_by_file[f] for f in files] == [fp for fp, _ in refs]
     assert exemplars == dict(refs)
@@ -334,37 +341,6 @@ def test_no_entry_point_reaches_pyarrows_footer_api(tmp_path, monkeypatch):
         guarded = _guarded_outputs(tmp_path, "guarded")
     assert guarded == _guarded_outputs(tmp_path, "free")
     assert guarded["cli_rc"] == 3 and guarded["drift"]["footers_read"] == 2
-
-
-def test_fan_out_reaches_no_pyarrow_footer_api(tmp_path, spark, monkeypatch):
-    """The distributed_threshold=1 fan-out, with pyarrow's footer API
-    refused inside the task (restored after it, since Python workers are
-    reused) and on the driver."""
-    d = tmp_path / "t.parquet"
-    for year, typ in ((2024, pa.int64()), (2025, pa.int32())):
-        (d / f"year={year}").mkdir(parents=True)
-        pq.write_table(pa.table({"id": pa.array([1], typ)}),
-                       str(d / f"year={year}" / "part-000.parquet"))
-    serial = fragment_schemas(str(d))
-    real = ddl._read_footers
-
-    def guarded(files):
-        import pyarrow.parquet as wpq
-
-        def refuse(*args, **kwargs):
-            raise AssertionError("a footer task called pyarrow's own footer API")
-
-        saved = wpq.read_metadata, wpq.ParquetFile
-        wpq.read_metadata = wpq.ParquetFile = refuse
-        try:
-            yield from real(files)
-        finally:
-            wpq.read_metadata, wpq.ParquetFile = saved
-
-    monkeypatch.setattr(ddl, "_read_footers", guarded)
-    monkeypatch.setattr(pq, "read_metadata", _refuse)
-    monkeypatch.setattr(pq, "ParquetFile", _refuse)
-    assert fragment_schemas(str(d), spark, distributed_threshold=1) == serial
 
 
 def test_cli_timings_go_to_stderr_only(tmp_path):
